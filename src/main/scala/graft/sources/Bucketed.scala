@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.{QuerySpec, Tables}
 import graft.functions.Exact
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bucketed-table layout: pre-shuffle a fact table ONCE at write time so
@@ -66,23 +66,52 @@ object Bucketed {
     * entry, stores call it on open.
     */
   def recover(s: SparkSession, table: String): Unit = synchronized {
-    val tmp = s"${table}_compact"
-    if (!s.catalog.tableExists(table) && s.catalog.tableExists(tmp)) {
-      s.sql(s"ALTER TABLE $tmp RENAME TO $table")
-      syncPartitions(s, table)
-      s.catalog.refreshTable(table)
-    }
+    if (!s.catalog.tableExists(table) && s.catalog.tableExists(twin(table)))
+      adopt(s, table)
   }
 
-  /** RENAME moves a managed table's files but leaves PARTITION entries
-    * pointing at the pre-rename paths (probed: a renamed cid-partitioned
-    * table reads ZERO rows while SHOW PARTITIONS still lists entries
-    * under the old `_compact` location) — re-sync them after any swap of
-    * a partition-tracked table. No-op for unpartitioned/bucketed tables.
+  private def twin(table: String): String = s"${table}_compact"
+
+  /** Rename the `_compact` twin to `table`. RENAME moves a managed
+    * table's files but leaves PARTITION entries pointing at the
+    * pre-rename paths (probed: a renamed cid-partitioned table reads
+    * ZERO rows while SHOW PARTITIONS still lists entries under the old
+    * `_compact` location) — so a partition-tracked table is re-synced
+    * (no-op for unpartitioned/bucketed tables).
     */
-  private def syncPartitions(s: SparkSession, table: String): Unit =
+  private def adopt(s: SparkSession, table: String): Unit = {
+    s.sql(s"ALTER TABLE ${twin(table)} RENAME TO $table")
     if (s.catalog.listColumns(table).collect().exists(_.isPartition))
       s.sql(s"MSCK REPAIR TABLE $table")
+    s.catalog.refreshTable(table)
+  }
+
+  /** The ONE crash-safe rewrite of a catalog table, shared by every
+    * compaction and purge here and by
+    * [[graft.streaming.FoldStore.compact]]: heal a previous crash
+    * ([[recover]]), drop a stale twin, write the complete replacement
+    * (`write`) under `${table}_compact`, drop `table`, rename the twin
+    * into place. The CTAS fully materializes (and only then registers)
+    * the twin BEFORE the canonical name is touched, so every crash point
+    * leaves either the old table intact (pre-swap: the stale twin is
+    * dropped on the next attempt) or the complete twin adoptable by
+    * [[recover]] (mid-swap).
+    *
+    * `write` is evaluated after the recover, and reads `table` through
+    * `s` — an isolated session over the shared catalog, so a rewrite
+    * conf never re-plans the caller's concurrently planned queries. The
+    * swap runs on `s`, and the CALLER's relation cache (`s0`) still
+    * lists the dropped table's files — it is refreshed there too.
+    */
+  private[graft] def swap(s0: SparkSession, s: SparkSession, table: String)(
+      write: => DataFrameWriter[Row]): Unit = {
+    recover(s, table)
+    dropStale(s, twin(table))
+    write.mode("overwrite").saveAsTable(twin(table))
+    dropStale(s, table)
+    adopt(s, table)
+    s0.catalog.refreshTable(table)
+  }
 
   /** Compact a bucketed table's small files: per-batch appends leave one
     * file set per bucket per batch, eroding the exchange-free read the
@@ -94,15 +123,10 @@ object Bucketed {
     * and merge nothing. The 100 TB cadence is log-structured: appends
     * per trigger, compaction per hour/day.
     *
-    * Crash discipline: the CTAS fully materializes (and only then
-    * registers) the `_compact` twin BEFORE the canonical name is
-    * touched, so every crash point leaves either the old table intact
-    * (pre-swap: the stale twin is dropped on the next attempt) or the
-    * complete twin adoptable by [[recover]] (mid-swap). The rewrite runs
-    * on its own session (shared catalog, isolated conf): disabling the
-    * auto-bucketed scan on the caller's session would silently re-plan
-    * every concurrently planned query (other streams, bench warmup)
-    * without bucketed reads.
+    * Crash-safe through [[swap]]. The rewrite runs on its own session
+    * (shared catalog, isolated conf): disabling the auto-bucketed scan
+    * on the caller's session would silently re-plan every concurrently
+    * planned query (other streams, bench warmup) without bucketed reads.
     */
   def compact(s0: SparkSession, table: String, buckets: Int, key: String,
       moreKeys: String*): Unit =
@@ -123,16 +147,7 @@ object Bucketed {
   def compactPartitioned(s0: SparkSession, table: String,
       partitionCols: String*): Unit = {
     val s = s0.newSession()
-    recover(s, table) // a previous compact may have died mid-swap
-    val tmp = s"${table}_compact"
-    dropStale(s, tmp)
-    s.table(table).write.partitionBy(partitionCols: _*)
-      .mode("overwrite").saveAsTable(tmp)
-    dropStale(s, table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    syncPartitions(s, table)
-    s.catalog.refreshTable(table)
-    s0.catalog.refreshTable(table)
+    swap(s0, s, table)(s.table(table).write.partitionBy(partitionCols: _*))
   }
 
   /** [[compact]] that also DROPS DUPLICATE ROWS in the rewrite — for
@@ -184,20 +199,14 @@ object Bucketed {
   def purgePartitioned(s0: SparkSession, table: String,
       partitionCol: String, idCol: String, ids: Seq[Long]): Unit = {
     val s = s0.newSession()
-    recover(s, table)
-    val tmp = s"${table}_compact"
-    dropStale(s, tmp)
     import s.implicits._
-    val cols = s.table(table).columns.toSeq
-    s.table(table)
-      .join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_anti")
-      .select(cols.map(col): _*)
-      .write.partitionBy(partitionCol).mode("overwrite").saveAsTable(tmp)
-    dropStale(s, table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    syncPartitions(s, table)
-    s.catalog.refreshTable(table)
-    s0.catalog.refreshTable(table)
+    swap(s0, s, table) {
+      val cols = s.table(table).columns.toSeq
+      s.table(table)
+        .join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_anti")
+        .select(cols.map(col): _*)
+        .write.partitionBy(partitionCol)
+    }
   }
 
   private def compactImpl(s0: SparkSession, table: String, buckets: Int,
@@ -206,27 +215,20 @@ object Bucketed {
       purge: Option[(String, Seq[Long])] = None): Unit = {
     val s = s0.newSession()
     s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    recover(s, table) // a previous compact may have died mid-swap
-    val tmp = s"${table}_compact"
-    dropStale(s, tmp)
-    val base0 = exclude.fold(s.table(table))(ex =>
-      s.table(table).join(
-        s.table(ex).select(col(key)).distinct(), Seq(key), "left_anti"))
-    val base = purge.fold(base0) { case (c, ids) =>
-      import s.implicits._
-      // restore the original column order: the USING anti-join fronts
-      // the id column, and the rewrite must not reorder the schema
-      base0.join(broadcast(ids.toDF(c)), Seq(c), "left_anti")
-        .select(base0.columns.toSeq.map(col): _*)
+    swap(s0, s, table) {
+      val base0 = exclude.fold(s.table(table))(ex =>
+        s.table(table).join(
+          s.table(ex).select(col(key)).distinct(), Seq(key), "left_anti"))
+      val base = purge.fold(base0) { case (c, ids) =>
+        import s.implicits._
+        // restore the original column order: the USING anti-join fronts
+        // the id column, and the rewrite must not reorder the schema
+        base0.join(broadcast(ids.toDF(c)), Seq(c), "left_anti")
+          .select(base0.columns.toSeq.map(col): _*)
+      }
+      val src = if (dedupe) base.distinct() else base
+      src.write.bucketBy(buckets, key, moreKeys: _*).sortBy(key, moreKeys: _*)
     }
-    val src = if (dedupe) base.distinct() else base
-    src.write.bucketBy(buckets, key, moreKeys: _*)
-      .sortBy(key, moreKeys: _*).mode("overwrite").saveAsTable(tmp)
-    dropStale(s, table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // the swap ran on the isolated session: the CALLER's relation cache
-    // still lists the dropped table's files — refresh it there
-    s0.catalog.refreshTable(table)
   }
 
   /** Materialize the bucketed layout ahead of time (idempotent). Bench

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Temporal
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,54 +24,32 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * count store (a days×types frame, corpus-size-independent) is both
   * exact under late data and O(grid) per trigger, forever.
   *
-  * Failure/replay contract: the DriftStream/EvalStream guard for
-  * additive state — rows carry (ckpt, batch_id), the append anti-joins
-  * the store's distinct pairs, so a replayed batch folds NOTHING twice.
-  * [[compactRows]] collapses committed history to the merged counts,
-  * keeping the store bounded by day-grid size, not batch count.
+  * Failure/replay contract: the [[FoldStore]] guard, with SUM as the
+  * merge — for additive counts the guard IS exactness (a double-fold
+  * would double-count events and shift every EWMA state after the first
+  * duplicate). Compaction collapses committed history to the merged
+  * counts, keeping the store bounded by day-grid size, not batch count.
   */
 object AnomalyStream {
 
-  val Buckets = 8
-
-  final case class Store(table: String)
+  type Store = FoldStore
 
   /** Create (or overwrite) an empty count store. */
-  def build(s: SparkSession, tag: String): Store = {
-    import s.implicits._
-    val t = Store(s"graft_anom_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(String, Long, String, Long, Long)]
-      .toDF("ckpt", "batch_id", "event_type", "day", "x"),
-      t.table, Buckets, "event_type")
-    t
-  }
+  def build(s: SparkSession, tag: String): Store =
+    FoldStore(s"graft_anom_$tag", bucket = "event_type",
+      schema = "event_type string, day bigint, x bigint",
+      keys = Seq("event_type", "day"),
+      merge = Seq(sum(col("x")).as("x"))).build(s)
 
   /** The bounded day-count summary of one (event_type, ts) batch — the
     * q214 construction on the batch slice, one shared definition.
     */
   def batchGrid(batch: DataFrame): DataFrame = Temporal.eventDayCounts(batch)
 
-  /** Guarded fold — the EvalStream.append contract: the (ckpt,
-    * batch_id) anti-join drops replays; for additive counts the guard
-    * IS exactness (a double-fold would double-count events).
-    */
-  def append(s: SparkSession, t: Store, grid: DataFrame): Unit = {
-    grid.join(
-        s.table(t.table).select(col("ckpt"), col("batch_id")).distinct(),
-        Seq("ckpt", "batch_id"), "left_anti")
-      .write.bucketBy(Buckets, "event_type").sortBy("event_type")
-      .mode("append").saveAsTable(t.table)
-    s.catalog.refreshTable(t.table)
-  }
-
   /** The merged (event_type, day, x) counts over everything ingested —
     * identical to q214's flushed counts over the union of the batches.
     */
-  def mergedCounts(s: SparkSession, t: Store): DataFrame =
-    s.table(t.table)
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("x")).as("x"))
+  def mergedCounts(s: SparkSession, t: Store): DataFrame = t.merged(s)
 
   /** The per-type anomaly board — q214's exact fold over the store's
     * merged counts.
@@ -80,66 +57,15 @@ object AnomalyStream {
   def serve(s: SparkSession, t: Store): DataFrame =
     Temporal.ewmaFromCounts(mergedCounts(s, t))
 
-  /** Row-collapsing compaction — the EvalStream.compactRows contract:
-    * everything except the active checkpoint's latest fold is
-    * unreplayable and collapses to the sum-merged counts, tagged
-    * (ckpt = "", batch_id = −1).
-    */
-  def compactRows(s0: SparkSession, t: Store, activeCkpt: String): Unit = {
-    val s = s0.newSession()
-    Bucketed.recover(s, t.table)
-    val tmp = s"${t.table}_compact"
-    Bucketed.dropStale(s, tmp)
-    val cur = s.table(t.table)
-    val maxBid = cur.filter(col("ckpt") === activeCkpt)
-      .agg(coalesce(max(col("batch_id")), lit(-1L)))
-      .collect().head.getLong(0)
-    val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
-    val baseline = cur.filter(!keep)
-      .groupBy(col("event_type"), col("day"))
-      .agg(sum(col("x")).as("x"))
-      .select(lit("").as("ckpt"), lit(-1L).as("batch_id"),
-        col("event_type"), col("day"), col("x"))
-    baseline.unionByName(cur.filter(keep))
-      .write.bucketBy(Buckets, "event_type").sortBy("event_type")
-      .mode("overwrite").saveAsTable(tmp)
-    Bucketed.dropStale(s, t.table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO ${t.table}")
-    s0.catalog.refreshTable(t.table)
-  }
-
-  /** The incremental front door: per micro-batch, bounded day-count
-    * summary + guarded fold + served board. `onBatch` receives the full
-    * q214 report frame with a leading `batch_id` column, computed over
-    * the post-fold store and COLLECTED before return (the ChunkStream
-    * lazy-frame rule).
+  /** The incremental front door ([[FoldStore.start]]): per micro-batch,
+    * bounded day-count summary + guarded fold + the full q214 board.
     *
-    * @param compactEvery run [[compactRows]] after every Nth batch
+    * @param compactEvery compact the store before every Nth batch
     *   (0 = never)
     */
   def startIncremental(spark: SparkSession, events: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactRows(spark, store, checkpointDir)
-        if (batch.limit(1).count() > 0) {
-          val grid = batchGrid(batch)
-            .select(lit(checkpointDir).as("ckpt"),
-              lit(batchId).as("batch_id"), col("event_type"), col("day"),
-              col("x"))
-          append(spark, store, grid)
-          val rep = serve(spark, store)
-            .select(lit(batchId).as("batch_id"), col("event_type"),
-              col("day"), col("x"), col("ewma_e4"), col("dev_e4"),
-              col("anomaly"))
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    store.start(spark, events, checkpointDir, onBatch, compactEvery)(
+      batchGrid, _ => serve(spark, store))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Profiling
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -16,44 +15,33 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * metrics tick: continuous observability re-expressed over the data
   * plane; batch twins are q194/q197).
   *
-  * Register max-merge is IDEMPOTENT (max is), which buys this store a
-  * property the additive monitors (DriftStream/FreqStream) cannot have:
-  * serving is invariant under duplicate ingest — re-playing the whole
-  * corpus under a fresh checkpoint leaves every report bit-identical.
-  * The (ckpt, batch_id) replay guard is therefore purely a STORE-SIZE
-  * bound (replays append nothing), not a correctness dependency, and
-  * the spec pins both halves separately.
-  *
   * Scale shape: the per-batch aggregate is one map-side-combinable max
   * over the admission-bounded batch; the store grows with
-  * (batches × registers-touched), never data volume, and [[compactRows]]
+  * (batches × registers-touched), never data volume, and compaction
   * collapses committed history to the ≤ types × days × 64 cube. Serving
   * ([[rollingReport]]) is the SAME `Profiling.hllRolling` plan q197
   * gates — register-grid-sized, one definition, so the streamed and
   * batch serves can never fork.
   *
-  * Failure/replay contract: the DriftStream/FreqStream guard — rows
-  * carry (ckpt, batch_id), the append anti-joins the store's distinct
-  * pairs, a replayed batch appends nothing and its re-emitted report is
-  * bit-identical; a fresh-checkpoint restart's colliding batch ids fold
-  * under their new ckpt, harmless by max-idempotence.
+  * Failure/replay contract: the [[FoldStore]] guard, with MAX as the
+  * merge. Register max-merge is IDEMPOTENT (max is), which buys this
+  * store a property the additive monitors cannot have: serving is
+  * invariant under duplicate ingest — re-playing the whole corpus under
+  * a fresh checkpoint leaves every report bit-identical. The
+  * (ckpt, batch_id) guard is therefore purely a STORE-SIZE bound
+  * (replays append nothing), not a correctness dependency, and a
+  * fresh-checkpoint restart's colliding batch ids fold harmlessly.
   */
 object DistinctStream {
 
-  val Buckets = 8
-
-  final case class Store(table: String)
+  type Store = FoldStore
 
   /** Create (or overwrite) an empty register store. */
-  def build(s: SparkSession, tag: String): Store = {
-    import s.implicits._
-    val t = Store(s"graft_hll_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(String, Long, String, Long, Long, Long)]
-      .toDF("ckpt", "batch_id", "event_type", "day", "bucket", "r"),
-      t.table, Buckets, "day")
-    t
-  }
+  def build(s: SparkSession, tag: String): Store =
+    FoldStore(s"graft_hll_$tag", bucket = "day",
+      schema = "event_type string, day bigint, bucket bigint, r bigint",
+      keys = Seq("event_type", "day", "bucket"),
+      merge = Seq(max(col("r")).as("r"))).build(s)
 
   /** The bounded register summary of one batch: per (event_type, day,
     * bucket) the max-ρ over the batch's rows — the q194 register
@@ -67,26 +55,10 @@ object DistinctStream {
       .groupBy(col("event_type"), col("day"), col("bucket"))
       .agg(max(col("rho")).as("r"))
 
-  /** Guarded fold — the FreqStream.append contract: the
-    * (ckpt, batch_id) anti-join drops replays; the guard frame is
-    * bounded by batch count.
-    */
-  def append(s: SparkSession, t: Store, regs: DataFrame): Unit = {
-    regs.join(
-        s.table(t.table).select(col("ckpt"), col("batch_id")).distinct(),
-        Seq("ckpt", "batch_id"), "left_anti")
-      .write.bucketBy(Buckets, "day").sortBy("day")
-      .mode("append").saveAsTable(t.table)
-    s.catalog.refreshTable(t.table)
-  }
-
   /** The current daily cube: max-merge of every stored register row —
     * identical to q194's daily cube over everything ingested so far.
     */
-  def dailyCube(s: SparkSession, t: Store): DataFrame =
-    s.table(t.table)
-      .groupBy(col("event_type"), col("day"), col("bucket"))
-      .agg(max(col("r")).as("r"))
+  def dailyCube(s: SparkSession, t: Store): DataFrame = t.merged(s)
 
   /** The rolling 7-day distinct-user report — q197's exact plan
     * (`Profiling.hllRolling`) over the store's cube.
@@ -94,66 +66,15 @@ object DistinctStream {
   def rollingReport(s: SparkSession, t: Store): DataFrame =
     Profiling.hllRolling(dailyCube(s, t))
 
-  /** Row-collapsing compaction — the FreqStream.compactRows contract
-    * with MAX in place of SUM: everything except the active
-    * checkpoint's latest fold is unreplayable and collapses to the
-    * ≤ types × days × 64 max-merged cube, tagged (ckpt = "",
-    * batch_id = −1).
-    */
-  def compactRows(s0: SparkSession, t: Store, activeCkpt: String): Unit = {
-    val s = s0.newSession()
-    Bucketed.recover(s, t.table)
-    val tmp = s"${t.table}_compact"
-    Bucketed.dropStale(s, tmp)
-    val cur = s.table(t.table)
-    val maxBid = cur.filter(col("ckpt") === activeCkpt)
-      .agg(coalesce(max(col("batch_id")), lit(-1L)))
-      .collect().head.getLong(0)
-    val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
-    val baseline = cur.filter(!keep)
-      .groupBy(col("event_type"), col("day"), col("bucket"))
-      .agg(max(col("r")).as("r"))
-      .select(lit("").as("ckpt"), lit(-1L).as("batch_id"),
-        col("event_type"), col("day"), col("bucket"), col("r"))
-    baseline.unionByName(cur.filter(keep))
-      .write.bucketBy(Buckets, "day").sortBy("day")
-      .mode("overwrite").saveAsTable(tmp)
-    Bucketed.dropStale(s, t.table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO ${t.table}")
-    s0.catalog.refreshTable(t.table)
-  }
-
-  /** The incremental front door: per micro-batch, bounded register
-    * summary + guarded fold + rolling report. `onBatch` receives the
-    * report frame with a leading `batch_id` column, computed over the
-    * post-fold store and COLLECTED before return (the ChunkStream
-    * lazy-frame rule).
+  /** The incremental front door ([[FoldStore.start]]): per micro-batch,
+    * bounded register summary + guarded fold + rolling report.
     *
-    * @param compactEvery run [[compactRows]] after every Nth batch
+    * @param compactEvery compact the store before every Nth batch
     *   (0 = never)
     */
   def startIncremental(spark: SparkSession, events: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactRows(spark, store, checkpointDir)
-        if (batch.limit(1).count() > 0) {
-          val regs = batchRegisters(batch)
-            .select(lit(checkpointDir).as("ckpt"),
-              lit(batchId).as("batch_id"), col("event_type"), col("day"),
-              col("bucket"), col("r"))
-          append(spark, store, regs)
-          val rep = rollingReport(spark, store)
-            .select(lit(batchId).as("batch_id"), col("event_type"),
-              col("day"), col("est_users_7d"))
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    store.start(spark, events, checkpointDir, onBatch, compactEvery)(
+      batchRegisters, _ => rollingReport(spark, store))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -25,44 +24,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * as the batch query). Nothing in the trigger path scales with
   * ingested volume: this monitor is O(histogram) per batch, forever.
   *
-  * Failure/replay contract: foreachBatch is at-least-once and the
-  * histogram fold is ADDITIVE, so idempotence must come from batch
-  * accounting, not content anti-joins: rows carry the CHECKPOINT
-  * LINEAGE + `batch_id`, and the append anti-joins the store's
-  * distinct (ckpt, batch_id) pairs (a bounded frame). A replayed batch
-  * re-delivers under the same checkpoint with the same batch_id, so it
-  * appends nothing, and its re-emitted report — computed AFTER the
-  * guard against the unchanged store — is bit-identical to the
-  * original delivery. The guard is ckpt-SCOPED because bare batch_ids
-  * are not unique across stream lifetimes: a stream restarted against
-  * an existing store with a FRESH checkpoint directory re-issues ids
-  * 0..N that collide with stored ones, and a bare-id guard would
-  * silently drop every new batch (the GraphStream fresh-checkpoint
-  * lesson, additive-state form — pinned by DriftStreamSpec's restart
-  * test).
+  * Failure/replay contract: the [[FoldStore]] guard, with per-cell SUM
+  * as the merge — the histogram fold is ADDITIVE, so the guard is
+  * exactness. A non-empty batch whose histogram is empty (every doc
+  * has a null `source` or `text`) folds nothing and re-emits the
+  * unchanged report.
   */
 object DriftStream {
 
-  val Buckets = 8
-
-  final case class Store(table: String)
+  type Store = FoldStore
 
   /** Create (or overwrite) an empty histogram store. */
-  def build(s: SparkSession, tag: String): Store = {
-    import s.implicits._
-    val t = Store(s"graft_drift_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(String, Long, String, Long, Long)]
-      .toDF("ckpt", "batch_id", "source", "w", "o"), t.table, Buckets, "source")
-    t
-  }
+  def build(s: SparkSession, tag: String): Store =
+    FoldStore(s"graft_drift_$tag", bucket = "source",
+      schema = "source string, w bigint, o bigint",
+      keys = Seq("source", "w"),
+      merge = Seq(sum(col("o")).as("o"))).build(s)
 
   /** The store collapsed to the (source, w, o) histogram of everything
     * ingested — the exact frame the gated q149 computes from raw docs.
     */
-  def histogram(s: SparkSession, t: Store): DataFrame =
-    s.table(t.table).groupBy(col("source"), col("w"))
-      .agg(sum(col("o")).as("o"))
+  def histogram(s: SparkSession, t: Store): DataFrame = t.merged(s)
 
   /** The per-source W₁ report over the ingested corpus so far —
     * bit-identical to running q149's math on the union of all batches.
@@ -70,96 +52,16 @@ object DriftStream {
   def report(s: SparkSession, t: Store): DataFrame =
     TextAnalysis.wassersteinBySource(histogram(s, t))
 
-  /** Guarded additive fold: append a batch's histogram rows unless the
-    * store has already seen this (ckpt, batch_id) pair (replay delivers
-    * the same id under the same checkpoint; a fresh-checkpoint restart
-    * re-issues ids under a DIFFERENT ckpt, so its batches fold). The
-    * guard frame — the store's distinct (ckpt, batch_id) pairs — is
-    * bounded by batch count, never data volume.
-    */
-  def append(s: SparkSession, t: Store, hist: DataFrame): Unit = {
-    hist.join(s.table(t.table).select(col("ckpt"), col("batch_id")).distinct(),
-        Seq("ckpt", "batch_id"), "left_anti")
-      .write.bucketBy(Buckets, "source").sortBy("source")
-      .mode("append").saveAsTable(t.table)
-    // the write may execute through a micro-batch session clone —
-    // refresh the coordinating session's relation cache before reading
-    // the store back (the ChunkStream/ProductQuant rule)
-    s.catalog.refreshTable(t.table)
-  }
-
-  /** Row-collapsing compaction: the store accrues one row-set per batch
-    * forever (~|sources|·|support| rows per trigger — tiny, but a
-    * long-lived monitor's store and its per-trigger guard scan would
-    * grow linearly with batch count without bound). Everything except
-    * the ACTIVE checkpoint's LATEST fold can never replay — Structured
-    * Streaming's serial-batch model replays only the last uncommitted
-    * batch, and other checkpoint lineages are ckpt-scope-guarded — so
-    * all of it collapses into one baseline histogram tagged
-    * (ckpt = "", batch_id = -1), bounding the store at
-    * |histogram| + |latest batch histogram| rows regardless of stream
-    * lifetime. Crash-safe via the [[Bucketed]] twin + rename swap
-    * (every crash point heals through the open-path recover).
-    */
-  def compactRows(s0: SparkSession, t: Store, activeCkpt: String): Unit = {
-    val s = s0.newSession()
-    Bucketed.recover(s, t.table)
-    val tmp = s"${t.table}_compact"
-    Bucketed.dropStale(s, tmp)
-    val cur = s.table(t.table)
-    val maxBid = cur.filter(col("ckpt") === activeCkpt)
-      .agg(coalesce(max(col("batch_id")), lit(-1L)))
-      .collect().head.getLong(0)
-    val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
-    val baseline = cur.filter(!keep)
-      .groupBy(col("source"), col("w")).agg(sum(col("o")).as("o"))
-      .select(lit("").as("ckpt"), lit(-1L).as("batch_id"),
-        col("source"), col("w"), col("o"))
-    baseline.unionByName(cur.filter(keep))
-      .write.bucketBy(Buckets, "source").sortBy("source")
-      .mode("overwrite").saveAsTable(tmp)
-    Bucketed.dropStale(s, t.table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO ${t.table}")
-    s0.catalog.refreshTable(t.table)
-  }
-
-  /** The incremental front door: per micro-batch, histogram + guarded
-    * fold + report. `onBatch` receives the per-source W₁ frame with a
-    * leading `batch_id` column, computed over the post-fold store (the
-    * monitor reads "as of now", including this batch).
+  /** The incremental front door ([[FoldStore.start]]): per micro-batch,
+    * the [[TextAnalysis.lengthHist]] histogram + guarded fold + the
+    * per-source W₁ report.
     *
-    * @param compactEvery run [[compactRows]] on the store after every
-    *   Nth batch (0 = never) — bounds both the store's ROW count (one
-    *   row-set accrues per trigger forever otherwise) and its file
-    *   count over a long ingest
+    * @param compactEvery compact the store before every Nth batch
+    *   (0 = never)
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactRows(spark, store, checkpointDir)
-        val hist = TextAnalysis.lengthHist(batch)
-          .select(lit(checkpointDir).as("ckpt"), lit(batchId).as("batch_id"),
-            col("source"), col("w"), col("o"))
-        if (hist.limit(1).count() > 0) {
-          // additive state ⇒ replay guard on batch accounting, not a
-          // content anti-join (see append)
-          append(spark, store, hist)
-          // report AFTER the guarded fold: first delivery and replay
-          // both read the same post-batch store, so re-emission is
-          // bit-identical; materialize before returning (a lazy frame
-          // consumed after the next batch would see a mutated store)
-          val rep = report(spark, store)
-            .select(lit(batchId).as("batch_id"), col("source"),
-              col("n_docs"), col("w1_words_e4"))
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    store.start(spark, docs, checkpointDir, onBatch, compactEvery)(
+      TextAnalysis.lengthHist, _ => report(spark, store))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -20,55 +19,32 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * streamed and batch reports can never fork (EvalStreamSpec pins the
   * bit-equality after a multi-batch ingest).
   *
-  * Failure/replay contract: the DriftStream/FreqStream guard for
-  * additive state — rows carry (ckpt, batch_id), the append anti-joins
-  * the store's distinct pairs, so a replayed batch folds NOTHING twice
-  * (for a summed summary the guard is correctness, not just a size
-  * bound). [[compactRows]] collapses committed history to the merged
-  * grid, keeping the store bounded by score-space, not batch count.
+  * Failure/replay contract: the [[FoldStore]] guard, with per-cell SUM
+  * as the merge — for a summed grid the guard is correctness (a
+  * double-fold would double-count documents), not just a size bound.
+  * Compaction collapses committed history to the merged grid, keeping
+  * the store bounded by score-space, not batch count.
   */
 object EvalStream {
 
-  val Buckets = 8
-
-  final case class Store(table: String)
+  type Store = FoldStore
 
   /** Create (or overwrite) an empty grid store. */
-  def build(s: SparkSession, tag: String): Store = {
-    import s.implicits._
-    val t = Store(s"graft_eval_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(String, Long, String, Long, Long, Long)]
-      .toDF("ckpt", "batch_id", "source", "score", "p", "n"),
-      t.table, Buckets, "score")
-    t
-  }
+  def build(s: SparkSession, tag: String): Store =
+    FoldStore(s"graft_eval_$tag", bucket = "score",
+      schema = "source string, score bigint, p bigint, n bigint",
+      keys = Seq("source", "score"),
+      merge = Seq(sum(col("p")).as("p"), sum(col("n")).as("n"))).build(s)
 
   /** The bounded grid summary of one (source, text) batch — the q208
     * construction on the batch slice, one shared definition.
     */
   def batchGrid(batch: DataFrame): DataFrame = TextAnalysis.scoreGrid(batch)
 
-  /** Guarded fold — the FreqStream.append contract: the
-    * (ckpt, batch_id) anti-join drops replays; for an additive grid the
-    * guard IS exactness (a double-fold would double-count documents).
-    */
-  def append(s: SparkSession, t: Store, grid: DataFrame): Unit = {
-    grid.join(
-        s.table(t.table).select(col("ckpt"), col("batch_id")).distinct(),
-        Seq("ckpt", "batch_id"), "left_anti")
-      .write.bucketBy(Buckets, "score").sortBy("score")
-      .mode("append").saveAsTable(t.table)
-    s.catalog.refreshTable(t.table)
-  }
-
   /** The merged (source, score, p, n) grid over everything ingested —
     * identical to q208's flushed grid over the union of the batches.
     */
-  def mergedGrid(s: SparkSession, t: Store): DataFrame =
-    s.table(t.table)
-      .groupBy(col("source"), col("score"))
-      .agg(sum(col("p")).as("p"), sum(col("n")).as("n"))
+  def mergedGrid(s: SparkSession, t: Store): DataFrame = t.merged(s)
 
   /** The sliced AUC / best-F1 report — q208's exact plan over the
     * store's merged grid (read twice, per the evalFromGrid contract:
@@ -99,66 +75,15 @@ object EvalStream {
           sum(when(col("score") >= 0, col("p") + col("n")).otherwise(0L))
             .as("k")))
 
-  /** Row-collapsing compaction — the FreqStream.compactRows contract:
-    * everything except the active checkpoint's latest fold is
-    * unreplayable and collapses to the sum-merged grid, tagged
-    * (ckpt = "", batch_id = −1).
-    */
-  def compactRows(s0: SparkSession, t: Store, activeCkpt: String): Unit = {
-    val s = s0.newSession()
-    Bucketed.recover(s, t.table)
-    val tmp = s"${t.table}_compact"
-    Bucketed.dropStale(s, tmp)
-    val cur = s.table(t.table)
-    val maxBid = cur.filter(col("ckpt") === activeCkpt)
-      .agg(coalesce(max(col("batch_id")), lit(-1L)))
-      .collect().head.getLong(0)
-    val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
-    val baseline = cur.filter(!keep)
-      .groupBy(col("source"), col("score"))
-      .agg(sum(col("p")).as("p"), sum(col("n")).as("n"))
-      .select(lit("").as("ckpt"), lit(-1L).as("batch_id"),
-        col("source"), col("score"), col("p"), col("n"))
-    baseline.unionByName(cur.filter(keep))
-      .write.bucketBy(Buckets, "score").sortBy("score")
-      .mode("overwrite").saveAsTable(tmp)
-    Bucketed.dropStale(s, t.table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO ${t.table}")
-    s0.catalog.refreshTable(t.table)
-  }
-
-  /** The incremental front door: per micro-batch, bounded grid summary
-    * + guarded fold + served report. `onBatch` receives the full q208
-    * report frame with a leading `batch_id` column, computed over the
-    * post-fold store and COLLECTED before return (the ChunkStream
-    * lazy-frame rule).
+  /** The incremental front door ([[FoldStore.start]]): per micro-batch,
+    * bounded grid summary + guarded fold + the full q208 report.
     *
-    * @param compactEvery run [[compactRows]] after every Nth batch
+    * @param compactEvery compact the store before every Nth batch
     *   (0 = never)
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactRows(spark, store, checkpointDir)
-        if (batch.limit(1).count() > 0) {
-          val grid = batchGrid(batch)
-            .select(lit(checkpointDir).as("ckpt"),
-              lit(batchId).as("batch_id"), col("source"), col("score"),
-              col("p"), col("n"))
-          append(spark, store, grid)
-          val rep = serve(spark, store)
-            .select(lit(batchId).as("batch_id"), col("source"), col("pos"),
-              col("neg"), col("n_thresholds"), col("auc_e6"),
-              col("best_f1_e6"), col("best_f1_score"))
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    store.start(spark, docs, checkpointDir, onBatch, compactEvery)(
+      batchGrid, _ => serve(spark, store))
 }

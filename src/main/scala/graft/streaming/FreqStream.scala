@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -36,36 +35,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale shape: the per-batch aggregate is one map-side-combinable
   * count over the admission-bounded batch; at most k summary rows plus
   * the sentinel fold per trigger, so the STORE grows with batch count,
-  * never data volume, and [[compactRows]] collapses committed history
-  * to one row per candidate term. The report runs over the
-  * candidate-sized store frame — O(candidates) per trigger, forever.
+  * never data volume, and compaction collapses committed history to
+  * one row per candidate term (the sentinel rows sum into one
+  * `("", Σ n_b)` baseline row — the sentinel is itself additive). The
+  * report runs over the candidate-sized store frame — O(candidates) per
+  * trigger, forever.
   *
-  * Failure/replay contract: identical to [[DriftStream]] — additive
-  * state guarded by checkpoint-scoped batch accounting: rows carry
-  * (ckpt, batch_id), the append anti-joins the store's distinct pairs,
-  * a replayed batch appends nothing and its re-emitted report (computed
-  * after the guard, against the unchanged store) is bit-identical,
-  * while a fresh-checkpoint restart's colliding batch ids fold under
-  * their new ckpt (the GraphStream fresh-checkpoint lesson).
+  * Failure/replay contract: the [[FoldStore]] guard, with per-term SUM
+  * as the merge — additive state, so the guard is exactness.
   */
 object FreqStream {
-
-  val Buckets = 8
 
   /** The frequency threshold denominator — q158's summary size. */
   val K: Long = graft.operators.Corpus.MgK.toLong
 
-  final case class Store(table: String)
+  type Store = FoldStore
 
   /** Create (or overwrite) an empty summary store. */
-  def build(s: SparkSession, tag: String): Store = {
-    import s.implicits._
-    val t = Store(s"graft_freq_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(String, Long, String, Long)]
-      .toDF("ckpt", "batch_id", "term", "cnt"), t.table, Buckets, "term")
-    t
-  }
+  def build(s: SparkSession, tag: String): Store =
+    FoldStore(s"graft_freq_$tag", bucket = "term",
+      schema = "term string, cnt bigint", keys = Seq("term"),
+      merge = Seq(sum(col("cnt")).as("cnt"))).build(s)
 
   /** The deterministic bounded summary of one batch: exact counts of
     * the batch-frequent terms (`cnt · K > n_b`) plus the `("", n_b)`
@@ -87,8 +77,8 @@ object FreqStream {
 
   /** Per-candidate summed estimates (lower bounds within n/K of truth). */
   def estimates(s: SparkSession, t: Store): DataFrame =
-    s.table(t.table).filter(col("term") =!= "")
-      .groupBy(col("term")).agg(sum(col("cnt")).as("est_cnt"))
+    t.merged(s).filter(col("term") =!= "")
+      .select(col("term"), col("cnt").as("est_cnt"))
 
   /** Total tokens ingested (the summed sentinel rows), as a 1-row frame. */
   def totalTokens(s: SparkSession, t: Store): DataFrame =
@@ -106,77 +96,15 @@ object FreqStream {
       .select(col("term"), col("est_cnt"), col("n_tok"),
         expr("(10000 * est_cnt) div n_tok").as("share_lb_e4"))
 
-  /** Guarded additive fold — the [[DriftStream.append]] contract: the
-    * (ckpt, batch_id) anti-join drops replays; the guard frame is
-    * bounded by batch count.
-    */
-  def append(s: SparkSession, t: Store, summary: DataFrame): Unit = {
-    summary.join(
-        s.table(t.table).select(col("ckpt"), col("batch_id")).distinct(),
-        Seq("ckpt", "batch_id"), "left_anti")
-      .write.bucketBy(Buckets, "term").sortBy("term")
-      .mode("append").saveAsTable(t.table)
-    s.catalog.refreshTable(t.table)
-  }
-
-  /** Row-collapsing compaction — the [[DriftStream.compactRows]]
-    * contract: everything except the active checkpoint's latest fold is
-    * unreplayable and collapses to one summed row per candidate term
-    * (the sentinel rows sum into one `("", Σ n_b)` baseline row — the
-    * sentinel is itself additive), tagged (ckpt = "", batch_id = −1).
-    * Bounds the store at |candidates| + |latest summary| rows.
-    */
-  def compactRows(s0: SparkSession, t: Store, activeCkpt: String): Unit = {
-    val s = s0.newSession()
-    Bucketed.recover(s, t.table)
-    val tmp = s"${t.table}_compact"
-    Bucketed.dropStale(s, tmp)
-    val cur = s.table(t.table)
-    val maxBid = cur.filter(col("ckpt") === activeCkpt)
-      .agg(coalesce(max(col("batch_id")), lit(-1L)))
-      .collect().head.getLong(0)
-    val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
-    val baseline = cur.filter(!keep)
-      .groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
-      .select(lit("").as("ckpt"), lit(-1L).as("batch_id"),
-        col("term"), col("cnt"))
-    baseline.unionByName(cur.filter(keep))
-      .write.bucketBy(Buckets, "term").sortBy("term")
-      .mode("overwrite").saveAsTable(tmp)
-    Bucketed.dropStale(s, t.table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO ${t.table}")
-    s0.catalog.refreshTable(t.table)
-  }
-
-  /** The incremental front door: per micro-batch, bounded summary +
-    * guarded fold + report. `onBatch` receives the report frame with a
-    * leading `batch_id` column, computed over the post-fold store and
-    * COLLECTED before return (the ChunkStream lazy-frame rule).
+  /** The incremental front door ([[FoldStore.start]]): per micro-batch,
+    * bounded summary + guarded fold + heavy-hitter report.
     *
-    * @param compactEvery run [[compactRows]] after every Nth batch
+    * @param compactEvery compact the store before every Nth batch
     *   (0 = never)
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactRows(spark, store, checkpointDir)
-        if (batch.limit(1).count() > 0) {
-          val summary = batchSummary(batch)
-            .select(lit(checkpointDir).as("ckpt"),
-              lit(batchId).as("batch_id"), col("term"), col("cnt"))
-          append(spark, store, summary)
-          val rep = report(spark, store)
-            .select(lit(batchId).as("batch_id"), col("term"),
-              col("est_cnt"), col("n_tok"), col("share_lb_e4"))
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    store.start(spark, docs, checkpointDir, onBatch, compactEvery)(
+      batchSummary, _ => report(spark, store))
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.functions.PolyHash
 import graft.operators.Corpus
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,114 +27,42 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * compaction bounds it over the stream's lifetime. Nothing in the
   * trigger path scales with ingested volume.
   *
-  * Failure/replay contract: identical to [[DriftStream]] — additive
-  * state, so idempotence comes from (checkpoint-lineage, batch_id)
-  * accounting, not content anti-joins; the guard is ckpt-scoped so a
-  * fresh-checkpoint restart folds its batches instead of dropping them.
+  * Failure/replay contract: the [[FoldStore]] guard, with the merge
+  * re-summing the checksum mod P — exact by the same homomorphism the
+  * fold relies on, so compaction's baseline row-set keeps the manifest
+  * bit-identical.
   */
 object ManifestStream {
 
-  val Buckets = 8
-
-  final case class Store(table: String)
+  type Store = FoldStore
 
   /** Create (or overwrite) an empty manifest store. */
-  def build(s: SparkSession, tag: String): Store = {
-    import s.implicits._
-    val t = Store(s"graft_manifest_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(String, Long, Long, Long, Long, Long)]
-      .toDF("ckpt", "batch_id", "shard", "n_docs", "n_tok", "csum"),
-      t.table, Buckets, "shard")
-    t
-  }
+  def build(s: SparkSession, tag: String): Store =
+    FoldStore(s"graft_manifest_$tag", bucket = "shard",
+      schema = "shard bigint, n_docs bigint, n_tok bigint, checksum bigint",
+      keys = Seq("shard"),
+      merge = Seq(sum(col("n_docs")).as("n_docs"),
+        sum(col("n_tok")).as("n_tok"),
+        (sum(col("checksum")) % PolyHash.P).as("checksum"))).build(s)
 
   /** The store collapsed to the corpus manifest — the exact frame the
     * gated q164 computes from raw documents.
     */
-  def manifest(s: SparkSession, t: Store): DataFrame =
-    s.table(t.table).groupBy(col("shard"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tok")).as("n_tok"),
-        (sum(col("csum")) % PolyHash.P).as("checksum"))
+  def manifest(s: SparkSession, t: Store): DataFrame = t.merged(s)
 
-  /** Guarded additive fold (the [[DriftStream.append]] contract): append
-    * a batch's manifest rows unless the store has already seen this
-    * (ckpt, batch_id) pair.
-    */
-  def append(s: SparkSession, t: Store, rows: DataFrame): Unit = {
-    rows.join(s.table(t.table).select(col("ckpt"), col("batch_id")).distinct(),
-        Seq("ckpt", "batch_id"), "left_anti")
-      .write.bucketBy(Buckets, "shard").sortBy("shard")
-      .mode("append").saveAsTable(t.table)
-    s.catalog.refreshTable(t.table)
-  }
-
-  /** Row-collapsing compaction: everything except the active
-    * checkpoint's LATEST fold can never replay (the serial-batch model),
-    * so it collapses into one baseline row-set tagged (ckpt = "",
-    * batch_id = -1) — the baseline checksum re-summed mod P, which is
-    * exact by the same homomorphism the fold relies on. Bounds the
-    * store at ≤ 2 manifest row-sets regardless of stream lifetime;
-    * crash-safe via the [[Bucketed]] rename-swap recover.
-    */
-  def compactRows(s0: SparkSession, t: Store, activeCkpt: String): Unit = {
-    val s = s0.newSession()
-    Bucketed.recover(s, t.table)
-    val tmp = s"${t.table}_compact"
-    Bucketed.dropStale(s, tmp)
-    val cur = s.table(t.table)
-    val maxBid = cur.filter(col("ckpt") === activeCkpt)
-      .agg(coalesce(max(col("batch_id")), lit(-1L)))
-      .collect().head.getLong(0)
-    val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
-    val baseline = cur.filter(!keep)
-      .groupBy(col("shard"))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tok")).as("n_tok"),
-        (sum(col("csum")) % PolyHash.P).as("csum"))
-      .select(lit("").as("ckpt"), lit(-1L).as("batch_id"), col("shard"),
-        col("n_docs"), col("n_tok"), col("csum"))
-    baseline.unionByName(cur.filter(keep))
-      .write.bucketBy(Buckets, "shard").sortBy("shard")
-      .mode("overwrite").saveAsTable(tmp)
-    Bucketed.dropStale(s, t.table)
-    s.sql(s"ALTER TABLE $tmp RENAME TO ${t.table}")
-    s0.catalog.refreshTable(t.table)
-  }
-
-  /** The incremental front door: per micro-batch, manifest + guarded
-    * fold. `onBatch` receives a ONE-ROW summary (batch_id, shards
-    * touched, docs, tokens) collected before return (the ChunkStream
-    * lazy-frame rule).
+  /** The incremental front door ([[FoldStore.start]]): per micro-batch,
+    * manifest + guarded fold. `onBatch` receives a ONE-ROW summary
+    * (batch_id, shards touched, docs, tokens) of this batch's fold.
     *
-    * @param compactEvery run [[compactRows]] after every Nth batch
+    * @param compactEvery compact the store before every Nth batch
     *   (0 = never)
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit = _ => (),
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactRows(spark, store, checkpointDir)
-        val rows = Corpus.shardManifest(batch)
-          .select(lit(checkpointDir).as("ckpt"), lit(batchId).as("batch_id"),
-            col("shard"), col("n_docs"), col("n_tok"),
-            col("checksum").as("csum"))
-        if (rows.limit(1).count() > 0) {
-          append(spark, store, rows)
-          val rep = spark.table(store.table)
-            .filter(col("ckpt") === checkpointDir &&
-              col("batch_id") === batchId)
-            .agg(count(lit(1)).as("shards_touched"),
-              sum(col("n_docs")).as("n_docs"), sum(col("n_tok")).as("n_tok"))
-            .select(lit(batchId).as("batch_id"), col("shards_touched"),
-              col("n_docs"), col("n_tok"))
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    store.start(spark, docs, checkpointDir, onBatch, compactEvery)(
+      Corpus.shardManifest, batchId => spark.table(store.table)
+        .filter(col("ckpt") === checkpointDir && col("batch_id") === batchId)
+        .agg(count(lit(1)).as("shards_touched"),
+          sum(col("n_docs")).as("n_docs"), sum(col("n_tok")).as("n_tok")))
 }

@@ -1,0 +1,35 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-scan lint for the single owners of two crash- and
+  * replay-critical fragments, so a new store cannot fork them again:
+  *
+  *  - the rename swap (`RENAME TO`) lives only in `sources/Bucketed.scala`
+  *    — every rewrite goes through `Bucketed.swap`, every heal through
+  *    `Bucketed.recover`;
+  *  - the (ckpt, batch_id) replay guard lives only in
+  *    `streaming/FoldStore.scala` — every guarded-fold monitor goes
+  *    through `FoldStore.append`.
+  */
+class OwnerLintSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala/graft")
+
+  private def holders(fragment: String): Set[String] =
+    Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(fragment))
+      .map((p: Path) => root.relativize(p).toString)
+      .toSet
+
+  test("the rename swap and the replay guard each have one owner in src/main") {
+    assert(holders("RENAME TO") == Set("sources/Bucketed.scala"))
+    assert(holders("""Seq("ckpt", "batch_id"), "left_anti"""") ==
+      Set("streaming/FoldStore.scala"))
+  }
+}

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the post-`Tables.load` dtype of every testdata table.
@@ -62,4 +64,35 @@ class TablesSpec extends AnyFunSuite with SparkTestSession {
     test(s"$table loads with the pinned schema") {
       assert(loaded(table) == expected(table))
     }
+
+  /** The columns among `cols` that hold a null in `df` (one pass). */
+  private def nullColumns(df: DataFrame, cols: Seq[String]): Seq[String] = {
+    val r = df.select(cols.map(c => count(when(col(c).isNull, 1)).as(c)): _*)
+      .head()
+    cols.filter(c => r.getAs[Long](c) > 0)
+  }
+
+  // The columns behind the fold summaries' "no-op" null filters:
+  // Temporal.eventDayCounts (AnomalyStream) and TextAnalysis.lengthHist
+  // (DriftStream) drop rows the gated queries' oracle SQL would keep, so
+  // those filters are no-ops only while the corpus carries no nulls here.
+  private val foldFilterColumns = Seq(
+    "events" -> Seq("event_type", "ts"), "documents" -> Seq("source", "text"))
+
+  for (sf <- Seq("sf0.001", "sf0.01", "sf0.1"))
+    test(s"the fold-summary filter columns hold no nulls at $sf") {
+      for ((table, cols) <- foldFilterColumns) {
+        val nulls = nullColumns(Tables.load(spark, s"/root/testdata/$sf", table), cols)
+        assert(nulls.isEmpty, s"$sf $table has nulls in ${nulls.mkString(", ")}")
+      }
+    }
+
+  test("the null check rejects a null-bearing fixture") {
+    import spark.implicits._
+    val docs = Seq((1L, Option("web"), Option.empty[String]),
+      (2L, Option.empty[String], Option("some text")))
+      .toDF("doc_id", "source", "text")
+    assert(nullColumns(docs, Seq("doc_id", "source", "text")) ==
+      Seq("source", "text"))
+  }
 }

@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the stream≡batch equivalence of the anomaly front door: after
   * streaming a corpus of events through [[AnomalyStream]] in several
   * micro-batches (with in-stream compaction), the served EWMA anomaly
-  * board is bit-identical to the gated q214 over the same events, and a
-  * replayed batch folds nothing twice (additive counts — the guard is
-  * correctness, not bookkeeping).
+  * board is bit-identical to the gated q214 over the same events.
+  * Replay, restart, compaction and crash recovery are
+  * [[FoldStoreContract]] clauses.
   */
 class AnomalyStreamSpec extends AnyFunSuite with SparkTestSession {
   import org.apache.spark.sql.functions._
@@ -52,50 +52,5 @@ class AnomalyStreamSpec extends AnyFunSuite with SparkTestSession {
       (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6))).sorted.toSeq
     assert(repKeys == batch)
-
-    // replay idempotency: re-folding the LAST batch's grid (same
-    // ckpt/batch_id tags) changes nothing — additive counts would
-    // otherwise double and shift every EWMA state after the first dup
-    val groups = events.grouped((events.length + 3) / 4).toSeq
-    val rowsBefore = spark.table(store.table).count()
-    val replay = AnomalyStream.batchGrid(
-        groups.last.toSeq.toDF("event_type", "ts"))
-      .select(lit(ckpt).as("ckpt"),
-        lit((groups.size - 1).toLong).as("batch_id"),
-        col("event_type"), col("day"), col("x"))
-    AnomalyStream.append(spark, store, replay)
-    assert(spark.table(store.table).count() == rowsBefore)
-    assert(AnomalyStream.serve(spark, store)
-      .collect().map(key).sorted.toSeq == batch)
-
-    // full compaction leaves the served board unchanged
-    AnomalyStream.compactRows(spark, store, ckpt)
-    assert(AnomalyStream.serve(spark, store)
-      .collect().map(key).sorted.toSeq == batch)
-
-    // fresh-checkpoint restart: a NEW stream on the SAME store re-issues
-    // batch_id 0 — the ckpt-scoped guard must fold it, not drop it (the
-    // GraphStream fresh-checkpoint lesson, additive-state form)
-    val ckpt2 =
-      java.nio.file.Files.createTempDirectory("graft-as-ckpt2-").toString
-    val src2 = Sources.queue[(String, java.sql.Timestamp)](spark)
-    val extra = Seq(
-      ("click", java.sql.Timestamp.valueOf("2025-06-01 12:00:00")),
-      ("view", java.sql.Timestamp.valueOf("2025-06-02 12:00:00")))
-    val q2 = AnomalyStream.startIncremental(
-      spark, src2.toDS().toDF("event_type", "ts"), store, ckpt2,
-      onBatch = _ => ())
-    try {
-      src2.addData(extra)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val after = AnomalyStream.serve(spark, store)
-      .collect().map(key).sorted.toSeq
-    val batchAfter = graft.operators.Temporal.ewmaFromCounts(
-        graft.operators.Temporal.eventDayCounts(
-          (events.toSeq ++ extra).toDF("event_type", "ts")))
-      .collect().map(key).sorted.toSeq
-    assert(after == batchAfter,
-      "a fresh-checkpoint restart must fold its batches, not drop them")
   }
 }

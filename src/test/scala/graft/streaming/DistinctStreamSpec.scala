@@ -70,16 +70,13 @@ class DistinctStreamSpec extends AnyFunSuite with SparkTestSession {
     val lastBid = spark.table(store.table)
       .agg(max(col("batch_id"))).collect().head.getLong(0)
     val lastSlice = events.grouped(137).toSeq.last
-    val replay = DistinctStream.batchRegisters(
-        lastSlice.toDF("event_type", "user_id", "tus"))
-      .select(lit(ckpt).as("ckpt"), lit(lastBid).as("batch_id"),
-        col("event_type"), col("day"), col("bucket"), col("r"))
-    DistinctStream.append(spark, store, replay)
+    store.append(spark, DistinctStream.batchRegisters(
+      lastSlice.toDF("event_type", "user_id", "tus")), ckpt, lastBid)
     assert(spark.table(store.table).count() == before,
       "replayed batch appended rows past the guard")
 
     // 4. compaction bounds the store and changes no report
-    DistinctStream.compactRows(spark, store, ckpt)
+    store.compact(spark, ckpt)
     assert(collectSorted(DistinctStream.rollingReport(spark, store))
       == streamed, "compaction changed the rolling report")
     assert(spark.table(store.table).count() <= before,

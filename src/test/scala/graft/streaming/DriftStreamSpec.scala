@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the stream≡batch equivalence of the drift-monitor front door:
   * every per-batch W₁ report equals the gated q149 math over exactly the
   * documents ingested so far, the persisted histogram equals the batch
-  * histogram of the full corpus, and a replayed batch folds nothing
-  * twice.
+  * histogram of the full corpus, and a non-empty batch with an empty
+  * histogram folds nothing. Replay, restart, compaction and crash
+  * recovery are [[FoldStoreContract]] clauses.
   */
 class DriftStreamSpec extends AnyFunSuite with SparkTestSession {
   import org.apache.spark.sql.functions._
@@ -70,62 +71,28 @@ class DriftStreamSpec extends AnyFunSuite with SparkTestSession {
     val fin = DriftStream.report(spark, store).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
     assert(fin == w1Of(docs.toSeq))
+  }
 
-    // in-stream compactRows (compactEvery = 2) collapsed all but the
-    // latest fold: store rows are bounded by |hist| + |latest batch|
-    // bound: baseline (≤ |hist|) + the two row-sets folded since the
-    // batch-2 compaction hook (each ≤ its batch's cell count ≤ |hist|)
-    val storeRows = spark.table(store.table).count()
-    assert(storeRows <= 3L * batchHist.size,
-      s"row-collapsing compaction must bound the store ($storeRows rows)")
-
-    // replay idempotency: re-folding the LATEST (ckpt, batch_id) — the
-    // only batch Structured Streaming can ever re-deliver — changes
-    // nothing (additive state guarded by batch accounting; earlier
-    // batch ids are committed and unreplayable, which is what licenses
-    // compactRows collapsing them)
-    val lastBid = (batches.size - 1).toLong
-    DriftStream.append(spark, store,
-      TextAnalysis.lengthHist(batches.last.toSeq.toDF("doc_id", "source", "text"))
-        .select(lit(ckpt).as("ckpt"), lit(lastBid).as("batch_id"),
-          col("source"), col("w"), col("o")))
-    val stored2 = DriftStream.histogram(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(stored2 == batchHist, "replayed batch must fold nothing")
-
-    // explicit compactRows: histogram identical before/after, and a
-    // replay of the latest batch STILL folds nothing afterwards
-    DriftStream.compactRows(spark, store, ckpt)
-    assert(DriftStream.histogram(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      == batchHist, "compaction must preserve the histogram")
-    DriftStream.append(spark, store,
-      TextAnalysis.lengthHist(batches.last.toSeq.toDF("doc_id", "source", "text"))
-        .select(lit(ckpt).as("ckpt"), lit(lastBid).as("batch_id"),
-          col("source"), col("w"), col("o")))
-    assert(DriftStream.histogram(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-      == batchHist, "replay after compaction must fold nothing")
-
-    // fresh-checkpoint restart: a NEW stream on the SAME store re-issues
-    // batch_id 0 — the ckpt-scoped guard must fold it, not drop it (the
-    // GraphStream fresh-checkpoint lesson, additive-state form)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft-ds-ckpt2-").toString
-    val src2 = Sources.queue[(Long, String, String)](spark)
-    val extra = Seq((100000L, "srcX", "brand new words arriving after restart"))
-    val q2 = DriftStream.startIncremental(
-      spark, src2.toDS().toDF("doc_id", "source", "text"), store, ckpt2,
-      onBatch = _ => ())
+  test("a non-empty batch with an empty histogram folds nothing and re-emits the report") {
+    import spark.implicits._
+    val store = DriftStream.build(spark, "spec_nulls")
+    store.append(spark, TextAnalysis.lengthHist(
+      Seq((0L, "web", "two words")).toDF("doc_id", "source", "text")), "seed", 0L)
+    val before = DriftStream.report(spark, store).collect().toSeq
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ds-ckpt-").toString
+    val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Seq[org.apache.spark.sql.Row]]()
+    val src = Sources.queue[(Long, Option[String], Option[String])](spark)
+    val query = DriftStream.startIncremental(
+      spark, src.toDS().toDF("doc_id", "source", "text"), store, ckpt,
+      onBatch = r => emitted.add(r.drop("batch_id").collect().toSeq))
     try {
-      src2.addData(extra)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val stored3 = DriftStream.histogram(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    assert(stored3 == TextAnalysis.lengthHist(
-        (docs.toSeq ++ extra).toDF("doc_id", "source", "text"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sorted.toSeq,
-      "a fresh-checkpoint restart must fold its batches, not drop them")
+      src.addData(Seq((1L, None, Some("a null source")), (2L, Some("web"), None)))
+      query.processAllAvailable()
+    } finally query.stop()
+    // the batch probe sees rows, the fold appends none (every doc fails
+    // a lengthHist filter), and the report is re-emitted unchanged
+    assert(emitted.size == 1 && emitted.peek() == before && before.nonEmpty)
+    assert(spark.table(store.table).filter(col("ckpt") === ckpt).count() == 0L)
+    graft.sources.Bucketed.dropStale(spark, store.table)
   }
 }

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the frequent-tokens monitor: the streamed store is bit-identical
   * to a driver-side fold of the same batch slices, every per-batch
   * report honors the two-sided guarantee against exact prefix counts
-  * (reported ⇒ truly >n/k-frequent; >2n/k ⇒ reported), and the
-  * replay / compaction / fresh-checkpoint-restart contracts hold.
+  * (reported ⇒ truly >n/k-frequent; >2n/k ⇒ reported). Replay,
+  * restart, compaction and crash recovery are [[FoldStoreContract]]
+  * clauses.
   */
 class FreqStreamSpec extends AnyFunSuite with SparkTestSession {
   import org.apache.spark.sql.functions._
@@ -92,54 +93,5 @@ class FreqStreamSpec extends AnyFunSuite with SparkTestSession {
       // at least the sf0.001 head terms must clear the 2n/K bar
       if (k == batches.indices.last) assert(rep.nonEmpty)
     }
-
-    // replay idempotency: re-folding the latest (ckpt, batch_id) — the
-    // only batch Structured Streaming can re-deliver — changes nothing
-    val lastBid = (batches.size - 1).toLong
-    def replayLast(): Unit = FreqStream.append(spark, store,
-      FreqStream.batchSummary(batches.last.toDF("doc_id", "source", "text"))
-        .select(lit(ckpt).as("ckpt"), lit(lastBid).as("batch_id"),
-          col("term"), col("cnt")))
-    replayLast()
-    assert(FreqStream.estimates(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
-      == expectedFold.filter(_._1.nonEmpty), "replay must fold nothing")
-
-    // compaction preserves estimates and totals; replay still a no-op
-    FreqStream.compactRows(spark, store, ckpt)
-    assert(FreqStream.estimates(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
-      == expectedFold.filter(_._1.nonEmpty),
-      "compaction must preserve estimates")
-    assert(FreqStream.totalTokens(spark, store).collect().head.getLong(0)
-      == storedTot, "compaction must preserve the token total")
-    replayLast()
-    assert(FreqStream.totalTokens(spark, store).collect().head.getLong(0)
-      == storedTot, "replay after compaction must fold nothing")
-    // and the store is bounded: baseline (≤ candidates + sentinel) +
-    // the latest batch's summary (≤ K + sentinel)
-    assert(spark.table(store.table).count() <=
-      expectedFold.size + K + 2,
-      "row-collapsing compaction must bound the store")
-
-    // fresh-checkpoint restart: batch_id 0 under a NEW ckpt must FOLD
-    // (the ckpt-scoped guard), not be dropped as a replay
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft-fs-ckpt2-").toString
-    val src2 = Sources.queue[(Long, String, String)](spark)
-    val extra = Seq((100000L, "srcX", "zz zz zz zz zz zz zz zz zz zz"))
-    val q2 = FreqStream.startIncremental(
-      spark, src2.toDS().toDF("doc_id", "source", "text"), store, ckpt2,
-      onBatch = _ => ())
-    try {
-      src2.addData(extra)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(FreqStream.totalTokens(spark, store).collect().head.getLong(0)
-      == storedTot + 10L,
-      "a fresh-checkpoint restart must fold its batches, not drop them")
-    assert(FreqStream.estimates(spark, store).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toMap
-      .get("zz").contains(10L),
-      "the restart batch's dominant term must enter the candidate set")
   }
 }

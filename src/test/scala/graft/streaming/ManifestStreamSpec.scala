@@ -6,9 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the stream≡batch equivalence of the manifest front door: the
   * streamed store collapses to the gated q164 manifest bit-exactly
-  * (modular checksum folding is exact), a replayed batch folds nothing,
-  * compaction preserves the manifest, and a fresh-checkpoint restart
-  * folds instead of dropping.
+  * (modular checksum folding is exact) and the per-batch summaries tile
+  * the corpus. Replay, restart, compaction and crash recovery are
+  * [[FoldStoreContract]] clauses.
   */
 class ManifestStreamSpec extends AnyFunSuite with SparkTestSession {
   import org.apache.spark.sql.functions._
@@ -64,47 +64,5 @@ class ManifestStreamSpec extends AnyFunSuite with SparkTestSession {
     val reps = reports.toArray(Array.empty[(Long, Long, Long, Long)])
     assert(reps.map(_._1).toSet == batches.indices.map(_.toLong).toSet)
     assert(reps.map(_._3).sum == docs.length.toLong)
-
-    // in-stream compaction (compactEvery = 2) bounded the store
-    val storeRows = spark.table(store.table).count()
-    assert(storeRows <= 3L * batchManifest.size,
-      s"row-collapsing compaction must bound the store ($storeRows rows)")
-
-    // replay of the LATEST (ckpt, batch_id) folds nothing
-    val lastBid = (batches.size - 1).toLong
-    ManifestStream.append(spark, store,
-      Corpus.shardManifest(batches.last.toSeq.toDF("doc_id", "text"))
-        .select(lit(ckpt).as("ckpt"), lit(lastBid).as("batch_id"),
-          col("shard"), col("n_docs"), col("n_tok"),
-          col("checksum").as("csum")))
-    assert(collectManifest(ManifestStream.manifest(spark, store))
-      == batchManifest, "replayed batch must fold nothing")
-
-    // explicit compaction preserves the manifest; replay still guarded
-    ManifestStream.compactRows(spark, store, ckpt)
-    assert(collectManifest(ManifestStream.manifest(spark, store))
-      == batchManifest, "compaction must preserve the manifest")
-    ManifestStream.append(spark, store,
-      Corpus.shardManifest(batches.last.toSeq.toDF("doc_id", "text"))
-        .select(lit(ckpt).as("ckpt"), lit(lastBid).as("batch_id"),
-          col("shard"), col("n_docs"), col("n_tok"),
-          col("checksum").as("csum")))
-    assert(collectManifest(ManifestStream.manifest(spark, store))
-      == batchManifest, "replay after compaction must fold nothing")
-
-    // fresh-checkpoint restart folds (ckpt-scoped guard)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft-ms-ckpt2-").toString
-    val src2 = Sources.queue[(Long, String)](spark)
-    val extra = Seq((900000L, "words arriving after the restart"))
-    val q2 = ManifestStream.startIncremental(
-      spark, src2.toDS().toDF("doc_id", "text"), store, ckpt2)
-    try {
-      src2.addData(extra)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(collectManifest(ManifestStream.manifest(spark, store))
-      == collectManifest(Corpus.shardManifest(
-        (docs.toSeq ++ extra).toDF("doc_id", "text"))),
-      "a fresh-checkpoint restart must fold its batches, not drop them")
   }
 }
