@@ -1143,30 +1143,6 @@ object Dedup {
             |   AS DOUBLE[])) AS threshold) t
             | GROUP BY t.threshold""".stripMargin.replaceAll("\n", "")))
 
-  /** q101 — EXACT set-similarity self-join via prefix filtering
-    * (AllPairs / PPJoin candidate generation — Bayardo et al. 2007,
-    * Chaudhuri et al. 2006, public literature): every document pair
-    * with word-3-shingle Jaccard ≥ 0.5, with a COMPLETENESS guarantee
-    * the LSH path (q23) only approximates. Sort each doc's shingle set
-    * by global rarity (df asc, hash asc); if two sets of sizes s₁,s₂
-    * satisfy J ≥ t, they must share a shingle within each other's first
-    * `s − ⌈t·s⌉ + 1` rarest entries — so equi-joining ONLY those prefix
-    * shingles loses no qualifying pair. Verification is exact integer
-    * set arithmetic (`2·|∩| ≥ |∪|` — no FP), and the driver gate ITSELF
-    * proves completeness: the oracle generates candidates by the
-    * brute-complete any-shared-shingle scheme, so a prefix bug that
-    * drops a qualifying pair hash-mismatches.
-    *
-    * Scale shape: candidates come ONLY from the prefix equi-join (the
-    * house rule), and the prefix is what keeps Zipfian corpora safe —
-    * an any-shared-token join explodes on stopword shingles (Σ C(df,2)
-    * over the head of the distribution) while each doc exposes only
-    * its ⌊s/2⌋+1 RAREST shingles, the tail where df is small. Per-doc
-    * windows are bounded by shingle count; the df join and candidate
-    * join shuffle on the shingle hash; the verify join fetches two
-    * bounded arrays per surviving candidate (977 of 124 750 possible
-    * pairs at sf0.01 — a 128× cut measured, larger under Zipf).
-    */
   /** q101's prefix-selection pass over the per-doc distinct shingle-hash
     * array frame `base` (doc_id, G): every (doc, shingle) row whose
     * global rarity rank (df asc, h asc over the doc's grams) is within
@@ -1212,6 +1188,30 @@ object Dedup {
         (col("sz") + 1L - col("rkd")).as("grk"))
   }
 
+  /** q101 — EXACT set-similarity self-join via prefix filtering
+    * (AllPairs / PPJoin candidate generation — Bayardo et al. 2007,
+    * Chaudhuri et al. 2006, public literature): every document pair
+    * with word-3-shingle Jaccard ≥ 0.5, with a COMPLETENESS guarantee
+    * the LSH path (q23) only approximates. Sort each doc's shingle set
+    * by global rarity (df asc, hash asc); if two sets of sizes s₁,s₂
+    * satisfy J ≥ t, they must share a shingle within each other's first
+    * `s − ⌈t·s⌉ + 1` rarest entries — so equi-joining ONLY those prefix
+    * shingles loses no qualifying pair. Verification is exact integer
+    * set arithmetic (`2·|∩| ≥ |∪|` — no FP), and the driver gate ITSELF
+    * proves completeness: the oracle generates candidates by the
+    * brute-complete any-shared-shingle scheme, so a prefix bug that
+    * drops a qualifying pair hash-mismatches.
+    *
+    * Scale shape: candidates come ONLY from the prefix equi-join (the
+    * house rule), and the prefix is what keeps Zipfian corpora safe —
+    * an any-shared-token join explodes on stopword shingles (Σ C(df,2)
+    * over the head of the distribution) while each doc exposes only
+    * its ⌊s/2⌋+1 RAREST shingles, the tail where df is small. Per-doc
+    * windows are bounded by shingle count; the df join and candidate
+    * join shuffle on the shingle hash; the verify join fetches two
+    * bounded arrays per surviving candidate (977 of 124 750 possible
+    * pairs at sf0.01 — a 128× cut measured, larger under Zipf).
+    */
   val qPrefixJoin: QuerySpec = QuerySpec(
     "q101_prefix_join",
     (s, dir) => {

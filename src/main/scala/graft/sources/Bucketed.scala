@@ -87,8 +87,9 @@ object Bucketed {
   }
 
   /** The ONE crash-safe rewrite of a catalog table, shared by every
-    * compaction and purge here and by
-    * [[graft.streaming.FoldStore.compact]]: heal a previous crash
+    * compaction and purge here and by [[graft.streaming.FoldStore]],
+    * [[graft.streaming.GraphStream]] and [[graft.streaming.CdcStream]]
+    * compaction: heal a previous crash
     * ([[recover]]), drop a stale twin, write the complete replacement
     * (`write`) under `${table}_compact`, drop `table`, rename the twin
     * into place. The CTAS fully materializes (and only then registers)
@@ -102,16 +103,27 @@ object Bucketed {
     * conf never re-plans the caller's concurrently planned queries. The
     * swap runs on `s`, and the CALLER's relation cache (`s0`) still
     * lists the dropped table's files — it is refreshed there too.
+    *
+    * Concurrent rewrites of one table serialize on a per-table lock
+    * (keyed on the lowercased name, the catalog's identifier): a second
+    * swap would otherwise drop the first one's twin mid-write or rename
+    * over it.
     */
   private[graft] def swap(s0: SparkSession, s: SparkSession, table: String)(
-      write: => DataFrameWriter[Row]): Unit = {
-    recover(s, table)
-    dropStale(s, twin(table))
-    write.mode("overwrite").saveAsTable(twin(table))
-    dropStale(s, table)
-    adopt(s, table)
-    s0.catalog.refreshTable(table)
-  }
+      write: => DataFrameWriter[Row]): Unit =
+    swapLocks.getOrElseUpdate(table.toLowerCase(java.util.Locale.ROOT),
+        new Object).synchronized {
+      recover(s, table)
+      dropStale(s, twin(table))
+      write.mode("overwrite").saveAsTable(twin(table))
+      dropStale(s, table)
+      adopt(s, table)
+      s0.catalog.refreshTable(table)
+    }
+
+  // TrieMap.getOrElseUpdate installs one winning lock per table
+  private val swapLocks =
+    scala.collection.concurrent.TrieMap.empty[String, Object]
 
   /** Compact a bucketed table's small files: per-batch appends leave one
     * file set per bucket per batch, eroding the exchange-free read the

@@ -175,7 +175,7 @@ object Forget {
         .union(merged.toDF("doc_id", "cluster_id"))
         .withColumn("gen", lit(0L))
       // rewrite through scratch (Spark refuses to overwrite a table it
-      // reads in the same plan — the GraphStream.compact pattern)
+      // reads in the same plan)
       val tmp = graft.operators.Scratch.flushPath(s,
         s"graph-forget-${t.labelTable}", newLbl)
       s.read.parquet(tmp)

@@ -33,31 +33,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * @param table clustered-layout table ([[Similarity.buildClusteredEmpty]]
   *              or an existing batch build)
   * @param cents the frozen trained codebook
-  * @param compactEvery run [[graft.sources.Bucketed.compactPartitioned]]
-  *              after every Nth batch (0 = never): per-trigger appends
-  *              add one file set per cid partition per batch, and
-  *              periodic compaction keeps the serving scan's file count
-  *              from degrading over a long ingest
+  * @param compactEvery see [[Sinks.ingest]]; the compaction is
+  *              [[graft.sources.Bucketed.compactPartitioned]] on `cid`
   */
 object AnnStream {
 
   def startIncremental(spark: SparkSession, emb: DataFrame, table: String,
       checkpointDir: String, cents: Seq[Seq[Long]],
-      compactEvery: Int = 0): StreamingQuery = {
-    // heal a compaction swap a PREVIOUS run crashed mid-rename before
-    // the first batch's anti-join reads the table (the EmbeddingStream
-    // lesson: the replayed-compact self-heal only fires on compaction
-    // batches, but batch 0 reads immediately)
-    graft.sources.Bucketed.recover(spark, table)
-    emb
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.sources.Bucketed.compactPartitioned(spark, table, "cid")
-        if (batch.limit(1).count() > 0)
-          Similarity.appendClustered(spark, table, batch, cents)
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, emb, checkpointDir, Seq(table), compactEvery,
+        () => graft.sources.Bucketed.compactPartitioned(spark, table, "cid")) {
+      (batch, _) => Similarity.appendClustered(spark, table, batch, cents)
+    }
 }

@@ -60,8 +60,7 @@ object AnomalyStream {
   /** The incremental front door ([[FoldStore.start]]): per micro-batch,
     * bounded day-count summary + guarded fold + the full q214 board.
     *
-    * @param compactEvery compact the store before every Nth batch
-    *   (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]
     */
   def startIncremental(spark: SparkSession, events: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,

@@ -28,9 +28,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * existing state on the hot path (an overwrite-based upsert would
   * rewrite every touched partition per trigger AND self-read the
   * table). Read amplification is bounded by [[compact]], which
-  * collapses the log to one row per key through a temp hop (the
-  * self-overwrite rule) — run it on the maintenance cadence, like
-  * `SignatureStore.compact`.
+  * collapses the log to one row per key — run it on the maintenance
+  * cadence, like `SignatureStore.compact`.
   */
 object CdcStream {
 
@@ -80,17 +79,16 @@ object CdcStream {
   }
 
   /** Continuous apply: every micro-batch of the changelog stream is
-    * reduced and appended. At-least-once foreachBatch redelivery is
-    * absorbed by the merge-on-read reduction.
+    * reduced and appended, through [[Sinks.ingest]] (which heals a
+    * crashed [[compact]] swap before batch 0). At-least-once
+    * foreachBatch redelivery is absorbed by the merge-on-read
+    * reduction.
     */
   def startApply(s: SparkSession, log: DataFrame, table: String,
       checkpointDir: String): StreamingQuery =
-    log.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        if (b.limit(1).count() > 0) applyBatch(s, table, b)
-      }
-      .start()
+    Sinks.ingest(s, log, checkpointDir, Seq(table)) { (b, _) =>
+      applyBatch(s, table, b)
+    }
 
   /** Current per-key state (tombstones included) — the merge-on-read
     * reduction over the whole log.
@@ -98,30 +96,18 @@ object CdcStream {
   def state(s: SparkSession, table: String): DataFrame =
     latestPerKey(s.table(table).select(cols.map(col): _*))
 
-  // per-table compaction locks: the Scratch tag lock releases when
-  // flushPath returns, so without this a second concurrent compact on
-  // the same table could drop the first call's tmp flush while the
-  // first is still reading it into the table overwrite — mid-overwrite
-  // failure, corrupted state table. Held end-to-end across flush + read
-  // + overwrite (TrieMap.getOrElseUpdate installs one winning lock).
-  private val compactLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
-  /** Collapse the log to one row per key (tombstones RETAINED). The
-    * reduced state takes a scratch-parquet hop because Spark refuses to
-    * overwrite a table it is reading in the same plan; the hop rides the
-    * Scratch lifecycle (one live flush per tag, swept on JVM exit) so
-    * repeated compactions hold ONE state-table copy, not one per call.
+  /** Collapse the log to one row per key (tombstones RETAINED) through
+    * [[graft.sources.Bucketed.swap]]'s crash-safe twin + rename: every
+    * crash point leaves the old log intact or the complete twin that
+    * [[graft.sources.Bucketed.recover]] adopts (on the next compact or
+    * [[startApply]]).
     */
-  def compact(s: SparkSession, table: String): Unit =
-    compactLocks.getOrElseUpdate(table, new Object).synchronized {
-      val tmp = graft.operators.Scratch.flushPath(s, s"cdc-compact-$table",
-        state(s, table)
-          .withColumn("kb", pmod(col("cust_id"), lit(Buckets))))
-      s.read.parquet(tmp)
-        .write.partitionBy("kb").mode("overwrite").saveAsTable(table)
-      s.catalog.refreshTable(table)
-    }
+  def compact(s: SparkSession, table: String): Unit = {
+    val rw = s.newSession()
+    graft.sources.Bucketed.swap(s, rw, table)(
+      state(rw, table).withColumn("kb", pmod(col("cust_id"), lit(Buckets)))
+        .write.partitionBy("kb"))
+  }
 
   /** The MERGE materialization of `base` (cust_id, base_bal) under the
     * store's current state — q98's join semantics: kept / updated /

@@ -72,61 +72,42 @@ object ChunkStream {
     * this batch (probe-then-append, the CurationStream order: a batch's
     * chunks are visible to the NEXT batch's probe, never its own).
     *
-    * @param compactEvery run [[Bucketed.compact]] on the store after
-    *   every Nth batch (0 = never) — per-trigger appends add one file
-    *   set per bucket per batch, and periodic compaction keeps probe
-    *   reads from degrading over a long ingest (the CurationStream
-    *   convention; the rename swap self-heals via the recover-on-start).
+    * @param compactEvery see [[Sinks.ingest]]; the compaction is
+    *   [[Bucketed.compact]] on the store
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Bucketed.compact(spark, store.table, Buckets, "h")
-        val ch = chunksOf(batch).persist()
-        try if (ch.limit(1).count() > 0) {
-          val flagged = ch.join(
-              spark.table(store.table).select(col("h"), lit(1).as("stored")),
-              Seq("h"), "left").persist()
-          try {
-            // MATERIALIZE the report before mutating the store: a lazy
-            // frame handed to the callback would silently recompute the
-            // probe against the post-append store (chunks_new = 0) if
-            // consumed after this batch returns
-            val reportRow = flagged.agg(
-              lit(batchId).as("batch_id"),
-              sum(col("occ")).as("chunks_total"),
-              count(when(col("stored").isNull, 1)).as("chunks_new"),
-              sum(col("occ") * col("tok")).as("tokens_total"),
-              coalesce(sum(when(col("stored").isNull, col("tok"))), lit(0L))
-                .as("tokens_new"))
-            val materialized = spark.createDataFrame(
-              java.util.Arrays.asList(reportRow.collect(): _*),
-              reportRow.schema)
-            onBatch(materialized)
-            // `flagged.filter(stored IS NULL)` IS the anti-join result
-            // against the pre-append store — write it directly instead
-            // of routing through append()'s anti-join (which would scan
-            // the growing store a second time per trigger). Replay-safe:
-            // a re-delivered batch recomputes the filter against the
-            // post-append store and writes nothing.
-            flagged.filter(col("stored").isNull).select(col("h"), col("tok"))
-              .write.bucketBy(Buckets, "h").sortBy("h")
-              .mode("append").saveAsTable(store.table)
-            // the append executes through the micro-batch session clone
-            // (flagged derives from `batch`), and relation caches are
-            // per-session: refresh the coordinating session's view so
-            // its probe on the NEXT trigger — and any concurrent
-            // stats() reader — sees this batch's files (the
-            // ProductQuant.appendFresh / CdcStream.applyBatch rule)
-            spark.catalog.refreshTable(store.table)
-          } finally flagged.unpersist()
-        } finally ch.unpersist()
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, docs, checkpointDir, Seq(store.table), compactEvery,
+        () => Bucketed.compact(spark, store.table, Buckets, "h"),
+        Some(chunksOf)) { (ch, batchId) =>
+      val flagged = ch.join(
+          spark.table(store.table).select(col("h"), lit(1).as("stored")),
+          Seq("h"), "left").persist()
+      try {
+        // the report is collected before the append mutates the store
+        // (the lazy-frame rule, Sinks.collected)
+        onBatch(Sinks.collected(spark, flagged.agg(
+          lit(batchId).as("batch_id"),
+          sum(col("occ")).as("chunks_total"),
+          count(when(col("stored").isNull, 1)).as("chunks_new"),
+          sum(col("occ") * col("tok")).as("tokens_total"),
+          coalesce(sum(when(col("stored").isNull, col("tok"))), lit(0L))
+            .as("tokens_new"))))
+        // `flagged.filter(stored IS NULL)` IS the anti-join result
+        // against the pre-append store — write it directly instead of
+        // routing through append()'s anti-join (which would scan the
+        // growing store a second time per trigger). Replay-safe: a
+        // re-delivered batch recomputes the filter against the
+        // post-append store and writes nothing.
+        flagged.filter(col("stored").isNull).select(col("h"), col("tok"))
+          .write.bucketBy(Buckets, "h").sortBy("h")
+          .mode("append").saveAsTable(store.table)
+        // the append runs through the micro-batch session clone and
+        // relation caches are per-session: refresh the coordinating
+        // session's view so the next probe and any stats() reader see
+        // this batch's files (the ProductQuant.appendFresh rule)
+        spark.catalog.refreshTable(store.table)
+      } finally flagged.unpersist()
+    }
 }

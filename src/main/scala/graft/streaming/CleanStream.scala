@@ -213,27 +213,17 @@ object CleanStream {
 
   /** The incremental front door: per micro-batch, clean + ingest;
     * `onBatch` receives the materialized cleaned frame of each
-    * non-empty batch. Periodic compaction first, the ChunkStream
-    * cadence.
+    * non-empty batch. Through [[Sinks.ingest]] with [[compact]] as its
+    * compaction.
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       minWords: Int, checkpointDir: String, onBatch: DataFrame => Unit,
       compactEvery: Int = 0,
-      maxStoredDf: Long = Long.MaxValue): StreamingQuery = {
-    Bucketed.recover(spark, store.posTable)
-    Bucketed.recover(spark, store.docTable)
-    Bucketed.recover(spark, store.tombTable)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compact(spark, store)
-        if (batch.limit(1).count() > 0) {
-          val cleaned =
-            cleanAndIngest(spark, store, batch, minWords, maxStoredDf)
-          if (!cleaned.isEmpty) onBatch(cleaned)
-        }
-      }
-      .start()
-  }
+      maxStoredDf: Long = Long.MaxValue): StreamingQuery =
+    Sinks.ingest(spark, docs, checkpointDir,
+        Seq(store.posTable, store.docTable, store.tombTable), compactEvery,
+        () => compact(spark, store)) { (batch, _) =>
+      val cleaned = cleanAndIngest(spark, store, batch, minWords, maxStoredDf)
+      if (!cleaned.isEmpty) onBatch(cleaned)
+    }
 }

@@ -73,51 +73,31 @@ object CurationStream {
     * @param onBatch   receives each batch's surviving curated rows
     * @param onFlagged receives each batch's near-dup verdicts
     *                  (doc_id, dup_of, jaccard)
-    * @param compactEvery run [[SignatureStore.compact]] after every Nth
-    *                  batch (0 = never): per-trigger appends add one
-    *                  file set per bucket per batch, and periodic
-    *                  compaction is what keeps the store's probe reads
-    *                  from degrading over a long-running ingest. Probes
-    *                  re-resolve the table per batch, so the rename swap
-    *                  is safe between batches.
+    * @param compactEvery see [[Sinks.ingest]]; the compaction is
+    *                  [[SignatureStore.compact]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame,
       store: SignatureStore.Store, checkpointDir: String,
       onBatch: DataFrame => Unit,
       onFlagged: DataFrame => Unit = _ => (),
-      compactEvery: Int = 0): StreamingQuery = {
-    // heal a compaction swap a PREVIOUS run crashed mid-rename before the
-    // first batch probes the store — the replayed-compact self-heal only
-    // fires on compaction batches, but batch 0 probes immediately
-    SignatureStore.recover(spark, store)
-    curate(docs, keepText = true)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, curate(docs, keepText = true), checkpointDir,
+        Seq(store.sig, store.bands), compactEvery,
+        () => SignatureStore.compact(spark, store), Some(identity)) { (b, _) =>
+      val verdicts = SignatureStore
+        .probe(spark, store, b.select(col("doc_id"), col("text"))).persist()
+      try {
+        onFlagged(verdicts)
+        val fresh = b.join(verdicts.select(col("doc_id")).distinct(),
+          Seq("doc_id"), "left_anti").persist()
         try {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            SignatureStore.compact(spark, store)
-          if (b.limit(1).count() > 0) {
-            val verdicts = SignatureStore
-              .probe(spark, store, b.select(col("doc_id"), col("text")))
-              .persist()
-            try {
-              onFlagged(verdicts)
-              val fresh = b.join(verdicts.select(col("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti").persist()
-              try {
-                // probe-then-append order guarantees a batch's survivors
-                // are visible to the NEXT batch but never to their own
-                // probe (no self-pairs)
-                SignatureStore.append(spark, store,
-                  fresh.select(col("doc_id"), col("text")))
-                onBatch(fresh.drop("text"))
-              } finally fresh.unpersist()
-            } finally verdicts.unpersist()
-          }
-        } finally b.unpersist()
-      }
-      .start()
-  }
+          // probe-then-append order guarantees a batch's survivors are
+          // visible to the NEXT batch but never to their own probe (no
+          // self-pairs)
+          SignatureStore.append(spark, store,
+            fresh.select(col("doc_id"), col("text")))
+          onBatch(fresh.drop("text"))
+        } finally fresh.unpersist()
+      } finally verdicts.unpersist()
+    }
 }

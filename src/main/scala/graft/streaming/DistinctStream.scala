@@ -69,8 +69,7 @@ object DistinctStream {
   /** The incremental front door ([[FoldStore.start]]): per micro-batch,
     * bounded register summary + guarded fold + rolling report.
     *
-    * @param compactEvery compact the store before every Nth batch
-    *   (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]
     */
   def startIncremental(spark: SparkSession, events: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,

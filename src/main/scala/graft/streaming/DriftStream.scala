@@ -56,8 +56,7 @@ object DriftStream {
     * the [[TextAnalysis.lengthHist]] histogram + guarded fold + the
     * per-source W₁ report.
     *
-    * @param compactEvery compact the store before every Nth batch
-    *   (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,

@@ -32,60 +32,25 @@ object EmbedDedupStream {
     * @param onFlagged per batch, the withheld vectors' verdicts
     *   (vec_id, dup_of, n_dups)
     * @param onBatch per batch, the surviving (appended) vec_ids
-    * @param withhold false = index-build mode (probe skipped entirely —
-    *   no verdict can drop anything, so it would be pure per-trigger
-    *   overhead; the WinnowStream dropShared = MaxValue rule)
-    * @param compactEvery run [[EmbedStore.compact]] before every Nth
-    *   batch (0 = never)
+    * @param withhold false = index-build mode (probe skipped entirely,
+    *   the WinnowStream dropShared = MaxValue rule — [[Sinks.withhold]])
+    * @param compactEvery see [[Sinks.ingest]]; the compaction is
+    *   [[EmbedStore.compact]]
     */
   def startIncremental(spark: SparkSession, vecs: DataFrame,
       cents: Seq[Seq[Long]], store: EmbedStore.Store, checkpointDir: String,
       onBatch: DataFrame => Unit,
       onFlagged: DataFrame => Unit = _ => (),
       withhold: Boolean = true,
-      compactEvery: Int = 0): StreamingQuery = {
-    EmbedStore.recover(spark, store)
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch
-          .select(col("vec_id"), Exact.quantize(col("embedding")).as("qe"))
-          .persist()
-        try {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            EmbedStore.compact(spark, store)
-          if (b.limit(1).count() > 0) {
-            if (!withhold) {
-              EmbedStore.append(spark, store, cents, b)
-              val kept = b.select(col("vec_id"))
-              onBatch(spark.createDataFrame(
-                java.util.Arrays.asList(kept.collect(): _*), kept.schema))
-            } else {
-              val verdicts = EmbedStore.probe(spark, store, cents, b)
-                .persist()
-              try {
-                // Collect and re-wrap BEFORE the append mutates the
-                // store (the ChunkStream lazy-frame rule): a stashed
-                // lazy frame consumed later would recompute the probe
-                // against a grown store.
-                val vRows = spark.createDataFrame(
-                  java.util.Arrays.asList(verdicts.collect(): _*),
-                  verdicts.schema)
-                onFlagged(vRows)
-                val fresh = b.join(verdicts.select(col("vec_id")),
-                  Seq("vec_id"), "left_anti").persist()
-                try {
-                  val kept = fresh.select(col("vec_id"))
-                  val kRows = spark.createDataFrame(
-                    java.util.Arrays.asList(kept.collect(): _*), kept.schema)
-                  EmbedStore.append(spark, store, cents, fresh)
-                  onBatch(kRows)
-                } finally fresh.unpersist()
-              } finally verdicts.unpersist()
-            }
-          }
-        } finally b.unpersist()
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, vecs, checkpointDir, Seq(store.a2, store.vecs),
+        compactEvery, () => EmbedStore.compact(spark, store),
+        Some(_.select(col("vec_id"),
+          Exact.quantize(col("embedding")).as("qe")))) { (b, _) =>
+      Sinks.withhold(spark, b, "vec_id",
+        Option.when(withhold)(EmbedStore.probe(spark, store, cents, b)),
+        _.select(col("vec_id")),
+        EmbedStore.append(spark, store, cents, _),
+        onFlagged, onBatch)
+    }
 }

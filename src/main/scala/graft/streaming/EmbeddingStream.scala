@@ -33,41 +33,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * @param emb streaming DataFrame with (vec_id, embedding)
   * @param onFlagged receives each batch's near-dup verdicts
   *                  (vec_id, dup_of, cos_sim)
-  * @param compactEvery run [[EmbeddingIndex.compact]] after every Nth
-  *                  batch (0 = never): per-trigger appends add one file
-  *                  set per bucket per batch, and periodic compaction
-  *                  keeps probe reads from degrading over a
-  *                  long-running ingest
+  * @param compactEvery see [[Sinks.ingest]]; the compaction is
+  *                  [[EmbeddingIndex.compact]]
   */
 object EmbeddingStream {
 
   def startIncremental(spark: SparkSession, emb: DataFrame, table: String,
       checkpointDir: String,
       onFlagged: DataFrame => Unit = _ => (),
-      compactEvery: Int = 0): StreamingQuery = {
-    // heal a compaction swap a PREVIOUS run crashed mid-rename before the
-    // first batch probes the index — the replayed-compact self-heal only
-    // fires on compaction batches, but batch 0 probes immediately
-    EmbeddingIndex.recover(spark, table)
-    emb
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.select(col("vec_id"), col("embedding")).persist()
-        try {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            EmbeddingIndex.compact(spark, table)
-          if (b.limit(1).count() > 0) {
-            val verdicts = EmbeddingIndex.probe(spark, table, b).persist()
-            // probe-then-append order guarantees a batch's vectors are
-            // visible to the NEXT batch but never to their own probe
-            try {
-              onFlagged(verdicts)
-              EmbeddingIndex.appendFresh(spark, table, b)
-            } finally verdicts.unpersist()
-          }
-        } finally b.unpersist()
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, emb, checkpointDir, Seq(table), compactEvery,
+        () => EmbeddingIndex.compact(spark, table),
+        Some(_.select(col("vec_id"), col("embedding")))) { (b, _) =>
+      val verdicts = EmbeddingIndex.probe(spark, table, b).persist()
+      // probe-then-append order guarantees a batch's vectors are
+      // visible to the NEXT batch but never to their own probe
+      try {
+        onFlagged(verdicts)
+        EmbeddingIndex.appendFresh(spark, table, b)
+      } finally verdicts.unpersist()
+    }
 }

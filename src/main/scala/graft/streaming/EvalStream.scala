@@ -78,8 +78,7 @@ object EvalStream {
   /** The incremental front door ([[FoldStore.start]]): per micro-batch,
     * bounded grid summary + guarded fold + the full q208 report.
     *
-    * @param compactEvery compact the store before every Nth batch
-    *   (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,

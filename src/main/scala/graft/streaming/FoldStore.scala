@@ -103,39 +103,25 @@ final case class FoldStore(table: String, bucket: String, schema: String,
     }
   }
 
-  /** The incremental front door: per non-empty micro-batch, the
-    * monitor's bounded `summary` of the batch, the guarded fold, then
-    * `report` over the post-fold store (the monitor reads "as of now",
-    * including this batch). `onBatch` receives the report with a
-    * leading `batch_id` column, COLLECTED before return — a lazy frame
-    * consumed after the next batch would see a mutated store (the
-    * ChunkStream lazy-frame rule).
-    *
-    * @param compactEvery run [[compact]] before every Nth batch
-    *   (0 = never) — bounds both the store's ROW count (one row-set
-    *   accrues per trigger forever otherwise) and its file count
+  /** The incremental front door, through [[Sinks.ingest]] (heal before
+    * batch 0, [[compact]] every `compactEvery` batches): per non-empty
+    * micro-batch, the monitor's bounded `summary` of the batch, the
+    * guarded fold, then `report` over the post-fold store (the monitor
+    * reads "as of now", including this batch). `onBatch` receives the
+    * report with a leading `batch_id` column, collected before return
+    * ([[Sinks.collected]]).
     */
   def start(spark: SparkSession, input: DataFrame, checkpointDir: String,
       onBatch: DataFrame => Unit, compactEvery: Int)(
       summary: DataFrame => DataFrame, report: Long => DataFrame)
-      : StreamingQuery = {
-    Bucketed.recover(spark, table)
-    input.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compact(spark, checkpointDir)
-        if (batch.limit(1).count() > 0) {
-          append(spark, summary(batch), checkpointDir, batchId)
-          val body = report(batchId)
-          val rep = body.select(
-            lit(batchId).as("batch_id") +: body.columns.toSeq.map(col): _*)
-          onBatch(spark.createDataFrame(
-            java.util.Arrays.asList(rep.collect(): _*), rep.schema))
-        }
-      }
-      .start()
-  }
+      : StreamingQuery =
+    Sinks.ingest(spark, input, checkpointDir, Seq(table), compactEvery,
+        () => compact(spark, checkpointDir)) { (batch, batchId) =>
+      append(spark, summary(batch), checkpointDir, batchId)
+      val body = report(batchId)
+      onBatch(Sinks.collected(spark, body.select(
+        lit(batchId).as("batch_id") +: body.columns.toSeq.map(col): _*)))
+    }
 }
 
 object FoldStore {

@@ -99,8 +99,7 @@ object FreqStream {
   /** The incremental front door ([[FoldStore.start]]): per micro-batch,
     * bounded summary + guarded fold + heavy-hitter report.
     *
-    * @param compactEvery compact the store before every Nth batch
-    *   (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,

@@ -163,46 +163,29 @@ object GraphStream {
     } finally newEdges.unpersist()
   }
 
-  // compaction locks per label table — the CdcStream.compact rule:
-  // the Scratch tag lock alone would let a concurrent compact drop the
-  // tmp flush mid-overwrite
-  private val compactLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
   /** Collapse the label log to one row per doc (latest gen, renumbered
     * to gen 0) and the edge ledger's append files to one set per
-    * bucket. The label rewrite hops through scratch parquet (Spark
-    * refuses to overwrite a table it reads in the same plan).
+    * bucket. Both rewrites are [[Bucketed.swap]]'s crash-safe twin +
+    * rename: every crash point leaves the old log intact or the
+    * complete twin that [[Bucketed.recover]] adopts.
     */
   def compact(s: SparkSession, t: Store): Unit = {
-    compactLocks.getOrElseUpdate(t.labelTable, new Object).synchronized {
-      val tmp = graft.operators.Scratch.flushPath(s,
-        s"graph-compact-${t.labelTable}",
-        labels(s, t).withColumn("gen", lit(0L)))
-      s.read.parquet(tmp)
-        .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-        .mode("overwrite").saveAsTable(t.labelTable)
-      s.catalog.refreshTable(t.labelTable)
-    }
+    val rw = s.newSession()
+    Bucketed.swap(s, rw, t.labelTable)(
+      labels(rw, t).withColumn("gen", lit(0L))
+        .write.bucketBy(Buckets, "doc_id").sortBy("doc_id"))
     Bucketed.compactDistinct(s, t.edgeTable, Buckets, "u")
   }
 
   /** The incremental front door: a stream of verified pair rows
-    * (doc_id_1, doc_id_2) relabels per micro-batch; periodic compaction
-    * first, the ChunkStream cadence.
+    * (doc_id_1, doc_id_2) relabels per micro-batch, through
+    * [[Sinks.ingest]] with [[compact]] as its compaction.
     */
   def startIncremental(spark: SparkSession, pairs: DataFrame, store: Store,
-      checkpointDir: String, compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.edgeTable)
-    Bucketed.recover(spark, store.labelTable)
-    pairs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compact(spark, store)
-        if (batch.limit(1).count() > 0)
-          ingest(spark, store, batch)
-      }
-      .start()
-  }
+      checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, pairs, checkpointDir,
+        Seq(store.edgeTable, store.labelTable), compactEvery,
+        () => compact(spark, store)) { (batch, _) =>
+      ingest(spark, store, batch)
+    }
 }

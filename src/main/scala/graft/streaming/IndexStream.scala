@@ -26,28 +26,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object IndexStream {
 
-  /** @param compactEvery run [[Bucketed.compactDistinct]] on the
-    *   postings (and [[Bucketed.compact]] on the manifest) after every
-    *   Nth batch (0 = never): bounds per-trigger file growth AND heals
-    *   any crash-window duplicate postings rows
+  /** @param compactEvery see [[Sinks.ingest]]; the compaction is
+    *   [[Bucketed.compactDistinct]] on the postings (which also heals
+    *   crash-window duplicate postings rows) and [[Bucketed.compact]]
+    *   on the manifest
     */
   def startIncremental(spark: SparkSession, docs: DataFrame,
       store: IndexStore.Store, checkpointDir: String,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.postings)
-    Bucketed.recover(spark, store.manifest)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, docs, checkpointDir,
+        Seq(store.postings, store.manifest), compactEvery, () => {
           Bucketed.compactDistinct(spark, store.postings,
             IndexStore.Buckets, "tok")
           Bucketed.compact(spark, store.manifest,
             IndexStore.Buckets, "doc_id")
-        }
-        if (batch.limit(1).count() > 0)
-          IndexStore.append(spark, store, batch)
-      }
-      .start()
-  }
+        }) { (batch, _) => IndexStore.append(spark, store, batch) }
 }

@@ -54,8 +54,7 @@ object ManifestStream {
     * manifest + guarded fold. `onBatch` receives a ONE-ROW summary
     * (batch_id, shards touched, docs, tokens) of this batch's fold.
     *
-    * @param compactEvery compact the store before every Nth batch
-    *   (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit = _ => (),

@@ -26,27 +26,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * twice.
   *
   * @param emb streaming DataFrame with (vec_id, embedding)
-  * @param compactEvery run [[graft.sources.Bucketed.compactPartitioned]]
-  *            after every Nth batch (0 = never) — per-trigger appends
-  *            add one file set per cid partition per batch
+  * @param compactEvery see [[Sinks.ingest]]; the compaction is
+  *            [[graft.sources.Bucketed.compactPartitioned]] on `cid`
   */
 object PqStream {
 
   def startIncremental(spark: SparkSession, emb: DataFrame, table: String,
       checkpointDir: String, cents: Seq[Seq[Long]],
-      cb: Seq[Seq[Seq[Long]]], compactEvery: Int = 0): StreamingQuery = {
-    // heal a compaction swap a previous run crashed mid-rename before
-    // the first batch's anti-join reads the table
-    graft.sources.Bucketed.recover(spark, table)
-    emb
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          graft.sources.Bucketed.compactPartitioned(spark, table, "cid")
-        if (batch.limit(1).count() > 0)
-          ProductQuant.appendFresh(spark, table, batch, cents, cb)
-      }
-      .start()
-  }
+      cb: Seq[Seq[Seq[Long]]], compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, emb, checkpointDir, Seq(table), compactEvery,
+        () => graft.sources.Bucketed.compactPartitioned(spark, table, "cid")) {
+      (batch, _) => ProductQuant.appendFresh(spark, table, batch, cents, cb)
+    }
 }

@@ -52,19 +52,10 @@ object RetrievalStream {
     // corpus pass
     graft.operators.Similarity.ensureTrained(spark, dir)
     if (table.isEmpty) graft.operators.Similarity.ensureClustered(spark, dir)
-    queries
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.select("query_id", "embedding").persist()
-        try {
-          if (b.limit(1).count() > 0) {
-            val res = Retrieval.serveTopK(spark, dir, b, nprobe, k, table)
-              .persist()
-            try onResults(res) finally res.unpersist()
-          }
-        } finally b.unpersist()
-      }
-      .start()
+    Sinks.ingest(spark, queries, checkpointDir, Nil,
+        prepare = Some(_.select("query_id", "embedding"))) { (b, _) =>
+      val res = Retrieval.serveTopK(spark, dir, b, nprobe, k, table).persist()
+      try onResults(res) finally res.unpersist()
+    }
   }
 }

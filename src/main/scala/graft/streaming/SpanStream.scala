@@ -109,21 +109,14 @@ object SpanStream {
     Bucketed.compactDistinct(s, t.docTable, Buckets, "doc_id")
   }
 
-  /** The incremental front door: per micro-batch, idempotent ingest;
-    * every `compactEvery` batches (0 = never), store compaction first —
-    * the ChunkStream cadence.
+  /** The incremental front door: per micro-batch, idempotent ingest,
+    * through [[Sinks.ingest]] with [[compact]] as its compaction.
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
-      checkpointDir: String, compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.spanTable)
-    Bucketed.recover(spark, store.docTable)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compact(spark, store)
-        if (batch.limit(1).count() > 0) append(spark, store, batch)
-      }
-      .start()
-  }
+      checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, docs, checkpointDir,
+        Seq(store.spanTable, store.docTable), compactEvery,
+        () => compact(spark, store)) { (batch, _) =>
+      append(spark, store, batch)
+    }
 }

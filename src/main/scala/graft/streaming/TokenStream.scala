@@ -85,60 +85,43 @@ object TokenStream {
     * (probe-then-append, the CurationStream order: a batch's documents
     * are visible to the NEXT batch's probe, never its own).
     *
-    * @param compactEvery run [[Bucketed.compact]] on the store after
-    *   every Nth batch (0 = never) — per-trigger appends add one file
-    *   set per bucket per batch, and periodic compaction keeps the probe
-    *   and [[shards]] reads from degrading over a long ingest.
+    * @param compactEvery see [[Sinks.ingest]]; the compaction is
+    *   [[Bucketed.compact]] on the store
     */
   def startIncremental(spark: SparkSession, docs: DataFrame,
       merges: Seq[(Long, String, String, Long)], store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
-      compactEvery: Int = 0): StreamingQuery = {
-    Bucketed.recover(spark, store.table)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          Bucketed.compact(spark, store.table, Buckets, "doc_id")
-        val toks = Corpus.tokenize(batch, merges).persist()
-        try if (toks.limit(1).count() > 0) {
-          val flagged = toks.join(
-              spark.table(store.table).select(col("doc_id")).distinct()
-                .withColumn("stored", lit(1)),
-              Seq("doc_id"), "left").persist()
-          try {
-            // MATERIALIZE the report before mutating the store: a lazy
-            // frame handed to the callback would recompute the probe
-            // against the post-append store (docs_new = 0) if consumed
-            // after this batch returns (the ChunkStream rule)
-            val reportRow = flagged.agg(
-              lit(batchId).as("batch_id"),
-              countDistinct(col("doc_id")).as("docs_total"),
-              countDistinct(when(col("stored").isNull, col("doc_id")))
-                .as("docs_new"),
-              count(when(col("stored").isNull, 1)).as("tokens_new"))
-            val materialized = spark.createDataFrame(
-              java.util.Arrays.asList(reportRow.collect(): _*),
-              reportRow.schema)
-            onBatch(materialized)
-            // `flagged.filter(stored IS NULL)` IS the anti-join result
-            // against the pre-append store — write it directly instead
-            // of probing the growing store a second time per trigger.
-            // Replay-safe: a re-delivered batch recomputes the filter
-            // against the post-append store and writes nothing.
-            flagged.filter(col("stored").isNull)
-              .select(col("source"), col("doc_id"), col("tok"),
-                col("tok_idx"))
-              .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-              .mode("append").saveAsTable(store.table)
-            // the append runs through the micro-batch session clone and
-            // relation caches are per-session: refresh the coordinating
-            // session's view so the next probe and any shards() reader
-            // see this batch's files (the ProductQuant.appendFresh rule)
-            spark.catalog.refreshTable(store.table)
-          } finally flagged.unpersist()
-        } finally toks.unpersist()
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, docs, checkpointDir, Seq(store.table), compactEvery,
+        () => Bucketed.compact(spark, store.table, Buckets, "doc_id"),
+        Some(Corpus.tokenize(_, merges))) { (toks, batchId) =>
+      val flagged = toks.join(
+          spark.table(store.table).select(col("doc_id")).distinct()
+            .withColumn("stored", lit(1)),
+          Seq("doc_id"), "left").persist()
+      try {
+        // the report is collected before the append mutates the store
+        // (the lazy-frame rule, Sinks.collected)
+        onBatch(Sinks.collected(spark, flagged.agg(
+          lit(batchId).as("batch_id"),
+          countDistinct(col("doc_id")).as("docs_total"),
+          countDistinct(when(col("stored").isNull, col("doc_id")))
+            .as("docs_new"),
+          count(when(col("stored").isNull, 1)).as("tokens_new"))))
+        // `flagged.filter(stored IS NULL)` IS the anti-join result
+        // against the pre-append store — write it directly instead of
+        // probing the growing store a second time per trigger.
+        // Replay-safe: a re-delivered batch recomputes the filter
+        // against the post-append store and writes nothing.
+        flagged.filter(col("stored").isNull)
+          .select(col("source"), col("doc_id"), col("tok"), col("tok_idx"))
+          .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
+          .mode("append").saveAsTable(store.table)
+        // the append runs through the micro-batch session clone and
+        // relation caches are per-session: refresh the coordinating
+        // session's view so the next probe and any shards() reader see
+        // this batch's files (the ProductQuant.appendFresh rule)
+        spark.catalog.refreshTable(store.table)
+      } finally flagged.unpersist()
+    }
 }

@@ -32,65 +32,26 @@ object WinnowStream {
     * @param dropShared withhold a doc when some stored doc shares ≥ this
     *   many fingerprints with it (default: the q213 pair rule);
     *   `Long.MaxValue` = never withhold
-    * @param compactEvery run [[WinnowStore.compact]] before every Nth
-    *   batch (0 = never)
+    * @param compactEvery see [[Sinks.ingest]]; the compaction is
+    *   [[WinnowStore.compact]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame,
       store: WinnowStore.Store, checkpointDir: String,
       onBatch: DataFrame => Unit,
       onFlagged: DataFrame => Unit = _ => (),
       dropShared: Long = Dedup.WinnowMinShared,
-      compactEvery: Int = 0): StreamingQuery = {
-    WinnowStore.recover(spark, store)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-            WinnowStore.compact(spark, store)
-          if (b.limit(1).count() > 0) {
-            if (dropShared == Long.MaxValue) {
-              // pure incremental index build: no verdict can ever reach
-              // the withhold threshold, so the probe (two scratch
-              // flushes + a collect per trigger) is pure overhead —
-              // append everything; the store's manifest anti-join keeps
-              // replays idempotent
-              WinnowStore.append(spark, store,
-                b.select(col("doc_id"), col("text")))
-              val kept = b.select(col("doc_id"))
-              onBatch(spark.createDataFrame(
-                java.util.Arrays.asList(kept.collect(): _*), kept.schema))
-            } else {
-            val verdicts = WinnowStore
-              .probe(spark, store, b.select(col("doc_id"), col("text")))
-              .filter(col("shared") >= dropShared)
-              .persist()
-            try {
-              // Collect and re-wrap BEFORE the append mutates the store:
-              // a callback that stashes the lazy frame and consumes it
-              // after a later batch would recompute the probe against a
-              // grown store (the ChunkStream lazy-frame rule; AnomalyStream
-              // does the same).
-              val vRows = spark.createDataFrame(
-                java.util.Arrays.asList(verdicts.collect(): _*),
-                verdicts.schema)
-              onFlagged(vRows)
-              val fresh = b.join(verdicts.select(col("doc_id")).distinct(),
-                Seq("doc_id"), "left_anti").persist()
-              try {
-                val kept = fresh.select(col("doc_id"))
-                val kRows = spark.createDataFrame(
-                  java.util.Arrays.asList(kept.collect(): _*), kept.schema)
-                WinnowStore.append(spark, store,
-                  fresh.select(col("doc_id"), col("text")))
-                onBatch(kRows)
-              } finally fresh.unpersist()
-            } finally verdicts.unpersist()
-            }
-          }
-        } finally b.unpersist()
-      }
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    Sinks.ingest(spark, docs, checkpointDir, Seq(store.fp, store.docs),
+        compactEvery, () => WinnowStore.compact(spark, store),
+        Some(identity)) { (b, _) =>
+      Sinks.withhold(spark, b, "doc_id",
+        if (dropShared == Long.MaxValue) None
+        else Some(WinnowStore
+          .probe(spark, store, b.select(col("doc_id"), col("text")))
+          .filter(col("shared") >= dropShared)),
+        _.select(col("doc_id")).distinct(),
+        f => WinnowStore.append(spark, store,
+          f.select(col("doc_id"), col("text"))),
+        onFlagged, onBatch)
+    }
 }

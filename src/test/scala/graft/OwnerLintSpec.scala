@@ -14,7 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `Bucketed.recover`;
   *  - the (ckpt, batch_id) replay guard lives only in
   *    `streaming/FoldStore.scala` — every guarded-fold monitor goes
-  *    through `FoldStore.append`.
+  *    through `FoldStore.append`;
+  *  - the store front-door loop lives only in `streaming/Sinks.scala`:
+  *    `.foreachBatch` appears elsewhere only in the three pipelines
+  *    that own no store, the compact-every-N hook and the
+  *    collect-and-rewrap nowhere else, and no streaming store compacts
+  *    through a `Scratch.flushPath` hop or a lock of its own.
   */
 class OwnerLintSpec extends AnyFunSuite {
 
@@ -31,5 +36,15 @@ class OwnerLintSpec extends AnyFunSuite {
     assert(holders("RENAME TO") == Set("sources/Bucketed.scala"))
     assert(holders("""Seq("ckpt", "batch_id"), "left_anti"""") ==
       Set("streaming/FoldStore.scala"))
+  }
+
+  test("every store front door runs through Sinks.ingest") {
+    assert(holders(".foreachBatch") == Set("streaming/Sinks.scala",
+      "streaming/RepublishPipeline.scala", "streaming/WindowedAgg.scala",
+      "Demo.scala"))
+    assert(holders("% compactEvery") == Set("streaming/Sinks.scala"))
+    assert(holders("Arrays.asList") == Set("streaming/Sinks.scala"))
+    assert(!holders("Scratch.flushPath").exists(_.startsWith("streaming/")))
+    assert(!holders("compactLocks").exists(_.startsWith("streaming/")))
   }
 }

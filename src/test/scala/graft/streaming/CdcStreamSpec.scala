@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (out of time order ACROSS batches), with a replayed batch, then
   * compacted, must materialize bit-identically to the batch q98 MERGE
   * over the same log. Tombstones survive compaction so late data can
-  * never resurrect a deleted key.
+  * never resurrect a deleted key. A compaction that crashed mid-swap
+  * heals on the next compaction or start.
   */
 class CdcStreamSpec extends AnyFunSuite with SparkTestSession {
 
@@ -90,5 +91,51 @@ class CdcStreamSpec extends AnyFunSuite with SparkTestSession {
       .toDF("cust_id", "op", "new_bal", "tsu", "eid"))
     assert(collectSorted(CdcStream.materialize(spark, table, base())) ==
       expected, "a late pre-delete op must lose to the tombstone")
+  }
+
+  test("a crashed state compaction heals on the next compaction or start") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val table = CdcStream.init(spark, s"graft_cdc_crash_${System.nanoTime()}")
+    val rows = changelog()
+      .as[(Long, String, Double, Long, Long)].collect().toSeq
+    CdcStream.applyBatch(spark, table,
+      rows.toDF("cust_id", "op", "new_bal", "tsu", "eid"))
+    val before = collectSorted(CdcStream.materialize(spark, table, base()))
+    val twin = s"${table}_compact"
+    def writeTwin(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.partitionBy("kb").mode("overwrite").saveAsTable(twin)
+    def twinOnly(): Unit = {
+      writeTwin(spark.table(table))
+      graft.sources.Bucketed.dropStale(spark, table)
+      assert(!spark.catalog.tableExists(table), "crash state: canonical gone")
+    }
+    def healed(how: String): Unit = {
+      assert(spark.catalog.tableExists(table), how)
+      assert(!spark.catalog.tableExists(twin), s"$how left the twin behind")
+      assert(collectSorted(CdcStream.materialize(spark, table, base())) ==
+        before, s"$how changed the materialization")
+    }
+
+    // (a) a stale twin beside the canonical table: the crash came before
+    // the drop, so the next compaction discards the twin
+    writeTwin(spark.table(table).limit(1))
+    CdcStream.compact(spark, table)
+    healed("compaction over a stale twin")
+
+    // (b) the twin only: the crash came between the drop and the rename
+    twinOnly()
+    CdcStream.compact(spark, table)
+    healed("compaction over a twin-only store")
+    twinOnly()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-crash-").toString
+    val input = MemoryStream[(Long, String, Double, Long, Long)]
+    val query = CdcStream.startApply(spark,
+      input.toDS().toDF("cust_id", "op", "new_bal", "tsu", "eid"), table, ckpt)
+    try {
+      input.addData(rows.take(50)) // a redelivered slice: state unchanged
+      query.processAllAvailable()
+    } finally query.stop()
+    healed("start over a twin-only store")
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.operators.DupGraph
+import graft.sources.Bucketed
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,6 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. Cross-batch merges relabel EXISTING clusters: two established
   *     clusters joined by one late edge collapse to the global min id,
   *     including members whose own edges arrived batches earlier.
+  *  4. A label compaction that crashed mid-swap heals on the next
+  *     compaction or start, with the labels unchanged.
   */
 class GraphStreamSpec extends AnyFunSuite with SparkTestSession {
 
@@ -128,5 +131,49 @@ class GraphStreamSpec extends AnyFunSuite with SparkTestSession {
       "chained batches should collapse to one cluster rooted at 1")
     assert(labelRows(GraphStream.labels(spark, bcast)) == expect,
       "broadcast fallback diverged from the literal path")
+  }
+
+  test("a crashed label compaction heals on the next compaction or start") {
+    import spark.implicits._
+    val store = GraphStream.build(spark, s"speccrash${System.nanoTime()}")
+    GraphStream.ingest(spark, store, Seq((20L, 30L), (40L, 50L)).toDF("a", "b"))
+    GraphStream.ingest(spark, store, Seq((30L, 40L)).toDF("a", "b"))
+    val before = labelRows(GraphStream.labels(spark, store))
+    val twin = s"${store.labelTable}_compact"
+    def writeTwin(df: DataFrame): Unit =
+      df.write.bucketBy(GraphStream.Buckets, "doc_id").sortBy("doc_id")
+        .mode("overwrite").saveAsTable(twin)
+    def twinOnly(): Unit = {
+      writeTwin(spark.table(store.labelTable))
+      Bucketed.dropStale(spark, store.labelTable)
+      assert(!spark.catalog.tableExists(store.labelTable), "crash state: canonical gone")
+    }
+    def healed(how: String): Unit = {
+      assert(spark.catalog.tableExists(store.labelTable), how)
+      assert(!spark.catalog.tableExists(twin), s"$how left the twin behind")
+      assert(labelRows(GraphStream.labels(spark, store)) == before,
+        s"$how changed the labels")
+    }
+
+    // (a) a stale twin beside the canonical table: the crash came before
+    // the drop, so the next compaction discards the twin
+    writeTwin(Seq((99L, 99L, 0L)).toDF("doc_id", "cluster_id", "gen"))
+    GraphStream.compact(spark, store)
+    healed("compaction over a stale twin")
+
+    // (b) the twin only: the crash came between the drop and the rename
+    twinOnly()
+    GraphStream.compact(spark, store)
+    healed("compaction over a twin-only store")
+    twinOnly()
+    val src = Sources.queue[(Long, Long)](spark)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-gs-crash-").toString
+    val query = GraphStream.startIncremental(
+      spark, src.toDS().toDF("doc_id_1", "doc_id_2"), store, ckpt)
+    try {
+      src.addData((20L, 30L)) // already ledgered: relabels nothing
+      query.processAllAvailable()
+    } finally query.stop()
+    healed("start over a twin-only store")
   }
 }
