@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Corpus, Curation, Dedup}
+import graft.operators.{Corpus, Curation, Dedup, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,8 +74,8 @@ object CurationRun {
 
   def run(spark: SparkSession, inDir: String, outDir: String): Summary = {
     val docs = Tables.load(spark, inDir, "documents")
-    val tag = s"curationrun-d${java.lang.Long.toHexString(
-      graft.functions.PolyHash.hash(inDir))}-r${runSeq.incrementAndGet()}"
+    val tag =
+      s"curationrun-d${Scratch.dirHash(inDir)}-r${runSeq.incrementAndGet()}"
 
     // 1. clean — the q130 rewrite, materialized before anything reads it
     write(Dedup.substringRemove(docs, Dedup.MinRemoveWords), s"$outDir/clean")

@@ -23,48 +23,25 @@ import org.apache.spark.sql.functions._
   *
   * The memo key includes the session's shuffle-partition setting so
   * ParallelismInvarianceSpec still executes the full pipeline per
-  * partitioning; build locks are per key and intermediate round tags
-  * carry the memo tag (two keys building concurrently must never clobber
-  * each other's generation flushes — the DupGraph buildLock lesson).
+  * partitioning; intermediate round tags carry the memo tag (two keys
+  * building concurrently must never clobber each other's generation
+  * flushes — [[Scratch.Memo]] serializes builds only per key).
   */
 private[graft] object CoGraph {
 
   val LpaIters = 4
 
-  private val paths =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
-  private val buildLocks =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Object]
-
-  private def dirTag(dir: String): String =
-    java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))
-
-  /** The catalog name [[memoPath]] registers for a memoized layout —
-    * how a SQL-only user addresses the store (StoreCatalogSpec).
+  /** The catalog name a memoized layout registers under
+    * ([[Scratch.memoTableName]]).
     */
   private[graft] def tableName(s: SparkSession, dir: String,
-      kind: String): String = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    s"graft_cograph_${kind}_d${dirTag(dir)}_p$parts"
-  }
-
-  private def memoPath(s: SparkSession, dir: String, kind: String)
-      (buildPath: String => String): DataFrame = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    val key = (dir, parts, kind)
-    val p = buildLocks.getOrElseUpdate(key, new Object).synchronized {
-      paths.getOrElseUpdate(key, {
-        val path = buildPath(s"cograph-$kind-d${dirTag(dir)}-p$parts")
-        Scratch.register(s, tableName(s, dir, kind), path)
-        path
-      })
-    }
-    s.read.parquet(p)
-  }
+      kind: String): String =
+    Scratch.memoTableName(s, dir, s"cograph_$kind")
 
   private def memo(s: SparkSession, dir: String, kind: String)
       (build: String => DataFrame): DataFrame =
-    memoPath(s, dir, kind)(tag => Scratch.flushPath(s, tag, build(tag)))
+    Scratch.memoTable(s, dir, s"cograph_$kind")(tag =>
+      Scratch.flushPath(s, tag, build(tag)))
 
   /** Symmetrized co-purchase edges (u, v): parts bought together in ≥ 2
     * orders, both orientations — per-order distinct items, pair join

@@ -796,8 +796,7 @@ object Corpus {
     } finally vocab0.unpersist()
   }
 
-  private val bpeMerges = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, String, String, Long)]]
+  private val bpeMerges = new Scratch.Memo[String, Seq[(Long, String, String, Long)]]
 
   /** The trained merge table for `dir`'s corpus (trained on first use;
     * Bench pre-trains in its untimed warmup — a trained tokenizer is a
@@ -805,7 +804,7 @@ object Corpus {
     * training IS that operator, so its timing must include it.
     */
   def ensureBpeMerges(s: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
-    bpeMerges.getOrElseUpdate(dir, bpeTrain(s, dir)._1)
+    bpeMerges(dir)(bpeTrain(s, dir)._1)
 
   val qBpeMerges: QuerySpec = QuerySpec(
     "q75_bpe_merges",
@@ -1055,7 +1054,7 @@ object Corpus {
       val merges = ensureBpeMerges(s, dir)
       tokenShards(s, Tables.load(s, dir, "documents"), merges,
         TokenShardBudget,
-        s"q203-toks-${java.lang.Long.toHexString(PolyHash.hash(dir))}")
+        Scratch.dirTag("q203-toks", dir))
     },
     Some {
       val gsteps = (1 to BpeMergeSteps).map { k =>
@@ -1544,10 +1543,9 @@ object Corpus {
       // the gram set, so the build survives an eval side of any size
       // (the round-11 watch item on driver-collected gram hashes)
       // tag carries the corpus-dir + parallelism discriminator (the
-      // DupGraph/SpanStore lesson): a second corpus in the same JVM must
+      // Scratch.memoTable rule): a second corpus in the same JVM must
       // not delete this flush out from under a still-unexecuted plan
-      val evalTag = "q85-eval-d" +
-        java.lang.Long.toHexString(PolyHash.hash(dir)) +
+      val evalTag = s"q85-eval-d${Scratch.dirHash(dir)}" +
         s"-p${s.conf.get("spark.sql.shuffle.partitions")}"
       val evalDistinct = Scratch.flush(s, evalTag,
         sh.filter(col("doc_id") % 10 === 0).select(col("h")).distinct())
@@ -1913,7 +1911,7 @@ object Corpus {
       // (the q101 pattern); flush the per-doc distinct-hash arrays once
       // and explode from the compact parquet on both reads.
       val base = Scratch.flush(s,
-        s"q122-grams-${java.lang.Long.toHexString(PolyHash.hash(dir))}",
+        Scratch.dirTag("q122-grams", dir),
         Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             WordShingleHashes(col("text"), NoveltyGram).as("H")))

@@ -1176,7 +1176,7 @@ object Curation {
       // carried a 266 KB explain). One flush of the doc-sized
       // (doc_id, dl, affinity, aq) frame makes every branch a read.
       val scq = Scratch.flush(s,
-        s"q160-scq-${java.lang.Long.toHexString(PolyHash.hash(dir))}",
+        Scratch.dirTag("q160-scq", dir),
         importanceScored(s, dir)
           .withColumn("aq",
             round(col("affinity") * 1000000.0, 0).cast("long")))
@@ -1290,8 +1290,7 @@ object Curation {
   val qMixtureSelection: QuerySpec = QuerySpec(
     "q161_mixture_selection",
     (s, dir) => mixtureSelect(Tables.load(s, dir, "documents"),
-      Some((s,
-        s"q161-scq-${java.lang.Long.toHexString(PolyHash.hash(dir))}"))),
+      Some((s, Scratch.dirTag("q161-scq", dir)))),
     Some {
       val planSql = Corpus.qMixturePlanner.oracle.get
       s"""WITH $importanceCtesSql,

@@ -1222,7 +1222,7 @@ object Dedup {
       // `sets` a plain read (no collect_list shuffle at all) and both
       // explode consumers cheap re-reads (guide §2.4).
       val base = Scratch.flush(s,
-        s"q101-sets-${java.lang.Long.toHexString(PolyHash.hash(dir))}",
+        Scratch.dirTag("q101-sets", dir),
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), WordShingleHashes(col("text"), 3).as("G")))
       // (the flush keeps both self-join sides reading one build — plan

@@ -33,56 +33,16 @@ import org.apache.spark.sql.functions._
   */
 object DupGraph {
 
-  private val paths =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
-
-  /** Stable per-corpus discriminator: the scratch tag must vary with the
-    * corpus dir exactly like the memo key does, or a second corpus in
-    * the same JVM flushes under the first's tag and deletes its parquet
-    * out from under the memoized path (ScalarQuant.ensureCodes pattern).
-    */
-  private def dirTag(dir: String): String =
-    java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))
-
-  /** Memoize a flushed-parquet PATH per (dir, parallelism, kind) and
-    * return it as a plain scan. `buildPath` runs once per key and must
-    * return a path that stays live for the JVM (a Scratch flush under a
-    * tag nothing else reuses).
-    */
-  // build locks: TrieMap.getOrElseUpdate may evaluate a racing thunk
-  // twice and discard one result — but a discarded build has already
-  // flushed under the same tag (deleting the winner's files), so the
-  // build itself must be serialized. PER KEY, not globally: only
-  // same-tag builds can clobber each other (the tag carries dir +
-  // parallelism + kind), and a global monitor would block unrelated
-  // corpora behind the multi-minute CC iteration (Scratch.tagLocks
-  // pattern — TrieMap.getOrElseUpdate installs one winning lock object
-  // even if the `new Object` thunk races).
-  private val buildLocks =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Object]
-
-  /** The catalog name [[memoPath]] registers for a memoized layout —
-    * how a SQL-only user addresses the store (StoreCatalogSpec).
+  /** The catalog name a memoized layout registers under
+    * ([[Scratch.memoTableName]]).
     */
   private[graft] def tableName(s: SparkSession, dir: String,
-      kind: String): String = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    s"graft_dupgraph_${kind}_d${dirTag(dir)}_p$parts"
-  }
+      kind: String): String =
+    Scratch.memoTableName(s, dir, s"dupgraph_$kind")
 
   private def memoPath(s: SparkSession, dir: String, kind: String)
-      (buildPath: String => String): DataFrame = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    val key = (dir, parts, kind)
-    val p = buildLocks.getOrElseUpdate(key, new Object).synchronized {
-      paths.getOrElseUpdate(key, {
-        val path = buildPath(s"dupgraph-$kind-d${dirTag(dir)}-p$parts")
-        Scratch.register(s, tableName(s, dir, kind), path)
-        path
-      })
-    }
-    s.read.parquet(p)
-  }
+      (buildPath: String => String): DataFrame =
+    Scratch.memoTable(s, dir, s"dupgraph_$kind")(buildPath)
 
   private def memo(s: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =

@@ -58,8 +58,7 @@ object Entity {
       // so the ×L explode + substring/concat chain runs one time, not
       // three (the q101/q160 multiply-referenced-subtree rule).
       val dels = Scratch.flush(s,
-        s"q169-dels-${java.lang.Long.toHexString(
-          graft.functions.PolyHash.hash(dir))}",
+        Scratch.dirTag("q169-dels", dir),
         c.select(col("id"), col("name"),
             explode(sequence(lit(1), length(col("name")))).as("i"))
           .select(col("id"), col("name"), col("i"),

@@ -75,17 +75,15 @@ object ProductQuant {
     } finally cached.unpersist()
   }
 
-  private val trainedPq =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Seq[Long]]]]
+  private val trainedPq = new Scratch.Memo[String, Seq[Seq[Seq[Long]]]]
 
   /** The [m][c][d] sub-codebooks for `dir`'s embeddings (trained on
     * first use; Bench pre-trains in its untimed warmup — a codebook is a
     * LAYOUT, like the clustered table it accompanies).
     */
   def ensureTrained(s: SparkSession, dir: String): Seq[Seq[Seq[Long]]] =
-    trainedPq.getOrElseUpdate(dir,
-      train(Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), Exact.quantize(col("embedding")).as("qe"))))
+    trainedPq(dir)(train(Tables.load(s, dir, "embeddings")
+      .select(col("vec_id"), Exact.quantize(col("embedding")).as("qe"))))
 
   /** Codes rows for a (vec_id, embedding) frame under FROZEN codebooks —
     * one map-side pass: quantize, IVF-assign, PQ-encode. Both the batch
@@ -135,8 +133,7 @@ object ProductQuant {
     s.catalog.refreshTable(table)
   }
 
-  private val codesTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val codesTables = new Scratch.Memo[String, String]
 
   /** Persist `(vec_id, codes)` PARTITIONED BY the trained IVF cluster id
     * — the at-rest form of an IVF-PQ index: a probe reads only its
@@ -145,11 +142,10 @@ object ProductQuant {
     * shrink that lets a 100 TB corpus' probed share fit in memory.
     */
   def ensureCodes(s: SparkSession, dir: String): String =
-    codesTables.getOrElseUpdate(dir,
-      build(s,
-        Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
-        Similarity.ensureTrained(s, dir), ensureTrained(s, dir),
-        java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))))
+    codesTables(dir)(build(s,
+      Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+      Similarity.ensureTrained(s, dir), ensureTrained(s, dir),
+      Scratch.dirHash(dir)))
 
   // ---- oracle fragments ---------------------------------------------------
 

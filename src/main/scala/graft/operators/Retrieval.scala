@@ -647,7 +647,7 @@ object Retrieval {
       // through the repartition, so reuse cannot dedupe the subtrees
       // (static plan: 4 store scans for a 0.98× local win)
       val m = Scratch.flush(s,
-        s"semccagree-${java.lang.Long.toHexString(PolyHash.hash(dir))}",
+        Scratch.dirTag("semccagree", dir),
         qSemDedupMulti.build(s, dir)
           .select(col("vec_id"), col("exemplar_id"),
             col("kept").as("kept_m")))

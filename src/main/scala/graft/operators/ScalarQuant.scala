@@ -27,8 +27,7 @@ object ScalarQuant {
   private[graft] val Dim = 64
   private val Rerank = 50
 
-  private val boundsCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Long], Seq[Long])]
+  private val boundsCache = new Scratch.Memo[String, (Seq[Long], Seq[Long])]
 
   /** Corpus per-dimension (min, span) over the quantized domain — the SQ
     * "training" step: ONE scan with a 64-group partial-aggregated
@@ -37,7 +36,7 @@ object ScalarQuant {
     * 128 longs.
     */
   def ensureBounds(s: SparkSession, dir: String): (Seq[Long], Seq[Long]) =
-    boundsCache.getOrElseUpdate(dir, {
+    boundsCache(dir) {
       val rows = Tables.load(s, dir, "embeddings")
         .select(posexplode(Exact.quantize(col("embedding"))))
         .groupBy(col("pos"))
@@ -46,10 +45,9 @@ object ScalarQuant {
         .sortBy(_._1)
       require(rows.length == Dim, s"expected $Dim dims, got ${rows.length}")
       (rows.map(_._2).toSeq, rows.map(t => t._3 - t._2).toSeq)
-    })
+    }
 
-  private val codesTables =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val codesTables = new Scratch.Memo[String, String]
 
   /** Persist `(vec_id, c8)` — the at-rest flat SQ8 index. Codes are
     * 0..255 per dimension, so the parquet encoding bit-packs them to
@@ -58,17 +56,16 @@ object ScalarQuant {
     * SQ is the exhaustive tier; the pruned tiers are q26c/q74.
     */
   def ensureCodes(s: SparkSession, dir: String): String =
-    codesTables.getOrElseUpdate(dir, {
+    codesTables(dir) {
       val (mins, spans) = ensureBounds(s, dir)
-      val tag = java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))
-      val table = s"graft_sq8_$tag"
+      val table = s"graft_sq8_${Scratch.dirHash(dir)}"
       graft.sources.Bucketed.dropStale(s, table)
       Tables.load(s, dir, "embeddings")
         .select(col("vec_id"),
           SqEncode(Exact.quantize(col("embedding")), mins, spans).as("c8"))
         .write.mode("overwrite").saveAsTable(table)
       table
-    })
+    }
 
   /** q94 — SQ8 recall report: recall@10 of the raw code-distance scan
     * and of the exact re-rank of its top-50 shortlist, vs the exact

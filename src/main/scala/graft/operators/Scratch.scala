@@ -58,11 +58,92 @@ private[graft] object Scratch {
   def flush(s: SparkSession, tag: String, df: DataFrame): DataFrame =
     s.read.parquet(flushPath(s, tag, df))
 
+  /** The one hex discriminator of a corpus dir, carried by every
+    * per-corpus flush tag and layout table name.
+    */
+  def dirHash(dir: String): String =
+    java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))
+
   /** A per-corpus-dir flush tag: concurrent suites over DIFFERENT dirs
     * must never share (and therefore delete) one tag's directory.
     */
-  def dirTag(prefix: String, dir: String): String =
-    s"$prefix-${java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))}"
+  def dirTag(prefix: String, dir: String): String = s"$prefix-${dirHash(dir)}"
+
+  /** Build-once memo behind every JVM-scoped layout cache (the
+    * bucketed tables, signature/index/winnow stores, codebooks, codes
+    * tables and the [[memoTable]] graph and span layouts).
+    *
+    * `TrieMap.getOrElseUpdate` may evaluate a racing thunk twice and
+    * discard one result — but a discarded layout build has already run
+    * its side effects (a scratch flush deleting the winner's directory
+    * under the same tag, a `dropStale` + CTAS dropping the winner's
+    * table mid-read), so the BUILD is serialized, not just the insert.
+    * Per KEY, never globally: only same-key builds clobber each other,
+    * and a global monitor would block unrelated corpora behind a
+    * multi-minute build. Nested builds (labels → edges → pairs,
+    * `ensureClustered` → `ensureTrained`) form a DAG over distinct keys,
+    * so per-key locks cannot deadlock. A hit takes no lock; a build
+    * that throws memoizes nothing.
+    */
+  final class Memo[K, V] {
+    private val values = scala.collection.concurrent.TrieMap.empty[K, V]
+    // TrieMap.getOrElseUpdate installs one winning lock per key
+    private val locks = scala.collection.concurrent.TrieMap.empty[K, Object]
+
+    def apply(k: K)(build: => V): V =
+      values.getOrElse(k, locks.getOrElseUpdate(k, new Object).synchronized {
+        values.getOrElseUpdate(k, build)
+      })
+
+    /** Replace the memoized value (a caller that just rebuilt it). */
+    def put(k: K, v: V): Unit = values.put(k, v): Unit
+  }
+
+  private val tables = new Memo[(String, String, String), String]
+
+  /** The catalog name [[memoTable]] registers for `name` over `dir` at
+    * the session's shuffle parallelism — how a SQL-only user addresses
+    * the layout (StoreCatalogSpec).
+    */
+  def memoTableName(s: SparkSession, dir: String, name: String): String =
+    s"graft_${name}_d${dirHash(dir)}_p${s.conf.get("spark.sql.shuffle.partitions")}"
+
+  /** Memoize a flushed-parquet layout per (dir, shuffle parallelism,
+    * `name`) and return it as a plain scan. `buildPath` runs once per
+    * key with a flush tag carrying the dir and parallelism (two corpora
+    * or partitionings never share, and so never delete, one tag's
+    * directory) and returns a path that stays live for the JVM; the
+    * path is registered as [[memoTableName]]. Parallelism is in the key
+    * so ParallelismInvarianceSpec still runs each pipeline per
+    * partitioning — one memoized flush would make its cross-parallelism
+    * assertion vacuous.
+    */
+  def memoTable(s: SparkSession, dir: String, name: String)(
+      buildPath: String => String): DataFrame = {
+    val parts = s.conf.get("spark.sql.shuffle.partitions")
+    s.read.parquet(tables((dir, parts, name)) {
+      val path = buildPath(s"${name.replace('_', '-')}-d${dirHash(dir)}-p$parts")
+      register(s, memoTableName(s, dir, name), path)
+      path
+    })
+  }
+
+  private val probeSeq = scala.collection.concurrent.TrieMap
+    .empty[String, java.util.concurrent.atomic.AtomicLong]
+
+  /** The next of 4 rotating flush slots for a probe of the store `key`.
+    * [[flush]] deletes a tag's PREVIOUS directory on entry, so a fixed
+    * per-store tag lets two concurrent probes of one store (a second
+    * stream, an ad-hoc probe beside the stream) delete each other's
+    * flush while the earlier probe's lazy frame may still read it. The
+    * slot keeps each probe's flush alive across the next THREE probes
+    * of the same store (growth stays bounded at 4 slots per tag);
+    * callers must consume a probe frame before 4 further probes of that
+    * store — the streams collect within their own trigger.
+    */
+  def probeSlot(key: String): Long =
+    probeSeq.getOrElseUpdate(key, new java.util.concurrent.atomic.AtomicLong)
+      .getAndIncrement() % 4
 
   /** Register a flushed path as an EXTERNAL parquet catalog table so a
     * SQL-only user can query the memoized store by name

@@ -24,36 +24,16 @@ import org.apache.spark.sql.functions._
   */
 object SemGraph {
 
-  private val paths =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
-  private val buildLocks =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), Object]
-
-  private def dirTag(dir: String): String =
-    java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))
-
-  /** The catalog name a memoized layout registers under (the
-    * StoreCatalogSpec convention — SQL-only users can read the store).
+  /** The catalog name a memoized layout registers under
+    * ([[Scratch.memoTableName]]).
     */
   private[graft] def tableName(s: SparkSession, dir: String,
-      kind: String): String = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    s"graft_semgraph_${kind}_d${dirTag(dir)}_p$parts"
-  }
+      kind: String): String =
+    Scratch.memoTableName(s, dir, s"semgraph_$kind")
 
   private def memoPath(s: SparkSession, dir: String, kind: String)
-      (buildPath: String => String): DataFrame = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    val key = (dir, parts, kind)
-    val p = buildLocks.getOrElseUpdate(key, new Object).synchronized {
-      paths.getOrElseUpdate(key, {
-        val path = buildPath(s"semgraph-$kind-d${dirTag(dir)}-p$parts")
-        Scratch.register(s, tableName(s, dir, kind), path)
-        path
-      })
-    }
-    s.read.parquet(p)
-  }
+      (buildPath: String => String): DataFrame =
+    Scratch.memoTable(s, dir, s"semgraph_$kind")(buildPath)
 
   private def memo(s: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =

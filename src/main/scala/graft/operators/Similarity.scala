@@ -385,17 +385,15 @@ object Similarity {
     } finally cached.unpersist()
   }
 
-  private val trained =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Seq[Long]]]
+  private val trained = new Scratch.Memo[String, Seq[Seq[Long]]]
 
   /** The converged codebook for `dir`'s embeddings (trained on first
     * use; Bench pre-trains in its untimed warmup — the codebook is a
     * LAYOUT, like the bucketed tables and the signature store).
     */
   def ensureTrained(s: SparkSession, dir: String): Seq[Seq[Long]] =
-    trained.getOrElseUpdate(dir,
-      train(Tables.load(s, dir, "embeddings")
-        .select(col("vec_id"), Exact.quantize(col("embedding")).as("qe"))))
+    trained(dir)(train(Tables.load(s, dir, "embeddings")
+      .select(col("vec_id"), Exact.quantize(col("embedding")).as("qe"))))
 
   /** The oracle's training half: `TrainIters` unrolled Lloyd steps as
     * MATERIALIZED CTEs (`cI` references `cI-1` twice — for assignment
@@ -481,8 +479,7 @@ object Similarity {
 
   // ---- clustered-at-rest ANN layout (IVF with partition pruning) ---------
 
-  private val clustered =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val clustered = new Scratch.Memo[String, String]
 
   /** Persist `(vec_id, qe, label, cid)` PARTITIONED BY the trained
     * cluster id — the at-rest form of an IVF index. At 100 TB this is
@@ -499,10 +496,8 @@ object Similarity {
     * layouts).
     */
   def ensureClustered(s: SparkSession, dir: String): String =
-    clustered.getOrElseUpdate(dir, {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.PolyHash.hash(dir))
-      val table = s"graft_annclu_$tag"
+    clustered(dir) {
+      val table = s"graft_annclu_${Scratch.dirHash(dir)}"
       graft.sources.Bucketed.dropStale(s, table)
       val cents = ensureTrained(s, dir)
       Tables.load(s, dir, "embeddings")
@@ -511,7 +506,7 @@ object Similarity {
         .withColumn("cid", NearestCentroid(col("qe"), cents))
         .write.partitionBy("cid").mode("overwrite").saveAsTable(table)
       table
-    })
+    }
 
   /** An EMPTY clustered-layout table (the [[ensureClustered]] schema,
     * cid-partitioned) for incremental builds — the

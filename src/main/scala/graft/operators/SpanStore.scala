@@ -27,45 +27,19 @@ import org.apache.spark.sql.functions._
   */
 object SpanStore {
 
-  private val paths =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
-  private def dirTag(dir: String): String =
-    java.lang.Long.toHexString(graft.functions.PolyHash.hash(dir))
-
-  // build locks: TrieMap.getOrElseUpdate may evaluate a racing thunk
-  // twice and discard one result — but a discarded build has already
-  // FLUSHED (deleting the winner's directory under the same tag), so
-  // the build must be serialized, not just the memo insert. PER KEY:
-  // only same-tag builds clobber each other; distinct corpora build
-  // concurrently (the DupGraph rule).
-  private val buildLocks =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Object]
-
-  /** The catalog name [[spans]] registers for the memoized layout —
-    * how a SQL-only user addresses the store (StoreCatalogSpec).
+  /** The catalog name [[spans]] registers for the memoized layout
+    * ([[Scratch.memoTableName]]).
     */
-  private[graft] def tableName(s: SparkSession, dir: String): String = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    s"graft_spanstore_d${dirTag(dir)}_p$parts"
-  }
+  private[graft] def tableName(s: SparkSession, dir: String): String =
+    Scratch.memoTableName(s, dir, "spanstore")
 
   /** All distinct spans per doc with df: (doc_id, h, df). */
-  def spans(s: SparkSession, dir: String): DataFrame = {
-    val parts = s.conf.get("spark.sql.shuffle.partitions")
-    val key = (dir, parts)
-    val p = buildLocks.getOrElseUpdate(key, new Object).synchronized {
-      paths.getOrElseUpdate(key, {
-        val sp = Dedup.spanHashes(graft.Tables.load(s, dir, "documents"))
-        val df = sp.groupBy(col("h")).agg(count(lit(1)).as("df"))
-        val path = Scratch.flushPath(s,
-          s"spanstore-d${dirTag(dir)}-p$parts", sp.join(df, Seq("h")))
-        Scratch.register(s, tableName(s, dir), path)
-        path
-      })
+  def spans(s: SparkSession, dir: String): DataFrame =
+    Scratch.memoTable(s, dir, "spanstore") { tag =>
+      val sp = Dedup.spanHashes(graft.Tables.load(s, dir, "documents"))
+      val df = sp.groupBy(col("h")).agg(count(lit(1)).as("df"))
+      Scratch.flushPath(s, tag, sp.join(df, Seq("h")))
     }
-    s.read.parquet(p)
-  }
 
   /** The df-capped slice — the only spans that may serve as pair
     * evidence (the q59 skew guard).

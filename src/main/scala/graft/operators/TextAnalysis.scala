@@ -461,7 +461,7 @@ object TextAnalysis {
     // interpreted `transform`s are all gone; the label join vanishes
     // (both sides were per-row). DocKernelsSpec pins kernel ≡ legacy.
     Scratch.flush(s,
-      s"q207-fy-${java.lang.Long.toHexString(PolyHash.hash(dir))}",
+      Scratch.dirTag("q207-fy", dir),
       docs.select(col("doc_id"),
           TextMetrics.wordCount(col("text")).as("nw"),
           TextMetrics.stopCount(col("text")).as("ns"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.{QuerySpec, Tables}
 import graft.functions.Exact
+import graft.operators.Scratch
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,8 +34,7 @@ object Bucketed {
   // bucketed layouts already materialized in this JVM, per sf directory —
   // the one-time write cost is paid once, every later query reads the
   // exchange-free layout (exactly the production pattern)
-  private val prepared =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val prepared = new Scratch.Memo[String, (String, String)]
 
   // the in-memory catalog forgets tables across JVMs but their warehouse
   // directories survive: drop the catalog entry AND any leftover location
@@ -89,8 +89,8 @@ object Bucketed {
   /** The ONE crash-safe rewrite of a catalog table, shared by every
     * compaction and purge here and by [[graft.streaming.FoldStore]],
     * [[graft.streaming.GraphStream]] and [[graft.streaming.CdcStream]]
-    * compaction: heal a previous crash
-    * ([[recover]]), drop a stale twin, write the complete replacement
+    * compaction and by the [[Forget.graph]] label purge: heal a previous
+    * crash ([[recover]]), drop a stale twin, write the complete replacement
     * (`write`) under `${table}_compact`, drop `table`, rename the twin
     * into place. The CTAS fully materializes (and only then registers)
     * the twin BEFORE the canonical name is touched, so every crash point
@@ -252,9 +252,8 @@ object Bucketed {
   def prepare(s: SparkSession, dir: String): Unit = ensureLayout(s, dir)
 
   private def ensureLayout(s: SparkSession, dir: String): (String, String) =
-    prepared.getOrElseUpdate(dir, {
-      val tag = java.lang.Long.toHexString(
-        graft.functions.PolyHash.hash(dir))
+    prepared(dir) {
+      val tag = Scratch.dirHash(dir)
       val li = s"graft_bkt_lineitem_$tag"
       val ord = s"graft_bkt_orders_$tag"
       dropStale(s, li)
@@ -264,7 +263,7 @@ object Bucketed {
       write(Tables.load(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
         ord, buckets = 16, key = "o_orderkey")
       (li, ord)
-    })
+    }
 
   /** Q45 — co-located fact⋈fact join + bucket-key aggregation on the
     * bucketed layout. The WHOLE plan must be exchange-free: both sides

@@ -104,12 +104,6 @@ object EmbedStore {
     Bucketed.compactDistinct(s, t.vecs, VecBuckets, "vec_id")
   }
 
-  /** Heal a compaction swap that crashed mid-rename. */
-  def recover(s: SparkSession, t: Store): Unit = {
-    Bucketed.recover(s, t.a2)
-    Bucketed.recover(s, t.vecs)
-  }
-
   /** Full-corpus q227 verdicts FROM THE STORE — order-independent,
     * bit-identical to the gated `q227_semdedup_multi` over the same
     * corpus (one shared [[Retrieval.semDedupMultiFrom]] plan).
@@ -117,11 +111,6 @@ object EmbedStore {
   def verdicts(s: SparkSession, t: Store,
       cents: Seq[Seq[Long]]): DataFrame =
     Retrieval.semDedupMultiFrom(s.table(t.vecs), cents, Retrieval.SemGroup)
-
-  // Rotating probe-flush slots (the WinnowStore rule): a fixed tag lets
-  // two concurrent probes of one store delete each other's flush.
-  private val probeSeq = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.atomic.AtomicLong]
 
   /** Probe a (vec_id, qe) micro-batch against the store BEFORE
     * appending it: `(vec_id, dup_of, n_dups)` for every batch vector
@@ -142,9 +131,7 @@ object EmbedStore {
     */
   def probe(s: SparkSession, t: Store, cents: Seq[Seq[Long]],
       batch: DataFrame): DataFrame = {
-    val slot = probeSeq
-      .getOrElseUpdate(t.a2, new java.util.concurrent.atomic.AtomicLong)
-      .getAndIncrement() % 4
+    val slot = Scratch.probeSlot(t.a2)
     val bfp = Scratch.flush(s, s"embedprobe-b-$slot-${t.a2}",
       assignRows(batch, cents))
     val storeRows = Scratch.flush(s, s"embedprobe-s-$slot-${t.a2}",

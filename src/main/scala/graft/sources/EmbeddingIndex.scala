@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.Tables
-import graft.functions.{Exact, PolyHash}
-import graft.operators.Similarity
+import graft.functions.Exact
+import graft.operators.{Scratch, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,14 +44,13 @@ object EmbeddingIndex {
     table
   }
 
-  private val prepared = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val prepared = new Scratch.Memo[String, String]
 
   /** The index over `dir`'s embeddings table (built on first use). */
   def ensure(s: SparkSession, dir: String): String =
-    prepared.getOrElseUpdate(dir, {
-      val tag = java.lang.Long.toHexString(PolyHash.hash(dir))
-      build(s, Tables.load(s, dir, "embeddings").select("vec_id", "embedding"), tag)
-    })
+    prepared(dir)(build(s,
+      Tables.load(s, dir, "embeddings").select("vec_id", "embedding"),
+      Scratch.dirHash(dir)))
 
   /** Upsert with the same bucket spec (probe first: caller guarantees
     * new vec_ids).
@@ -84,10 +83,6 @@ object EmbeddingIndex {
   /** Compact the index's per-append file sets ([[Bucketed.compact]]). */
   def compact(s: SparkSession, table: String): Unit =
     Bucketed.compact(s, table, Buckets, "band", "bh")
-
-  /** Heal a compaction swap that crashed mid-rename ([[Bucketed.recover]]). */
-  def recover(s: SparkSession, table: String): Unit =
-    Bucketed.recover(s, table)
 
   /** Probe a (vec_id, embedding) batch against the index: verified
     * near-dups `(vec_id, dup_of, cos_sim)` with an already-indexed

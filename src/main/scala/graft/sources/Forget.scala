@@ -134,13 +134,16 @@ object Forget {
     * clusters (the GraphStream touched-cluster discipline — broadcast
     * semi-joins, label side exchange-free); the CC pass runs over the
     * affected clusters' remaining edges, never the whole graph. The
-    * label rewrite collapses to gen 0 through the compact() scratch
-    * hop.
+    * label rewrite collapses to gen 0 through [[Bucketed.swap]], like
+    * `GraphStream.compact`; a crashed earlier swap of either table is
+    * healed on entry.
     */
   def graph(s: SparkSession, t: graft.streaming.GraphStream.Store,
       docIds: Seq[Long]): Unit = {
     import s.implicits._
     import graft.streaming.GraphStream
+    Bucketed.recover(s, t.labelTable)
+    Bucketed.recover(s, t.edgeTable)
     val lbl = GraphStream.labels(s, t)
     val idsDf = broadcast(docIds.toDF("doc_id"))
     // the purged docs' clusters, captured BEFORE any mutation
@@ -171,17 +174,10 @@ object Forget {
         .join(broadcast(affected.select(col("cluster_id"))),
           Seq("cluster_id"), "left_anti")
         .select(col("doc_id"), col("cluster_id"))
-      val newLbl = untouched
-        .union(merged.toDF("doc_id", "cluster_id"))
-        .withColumn("gen", lit(0L))
-      // rewrite through scratch (Spark refuses to overwrite a table it
-      // reads in the same plan)
-      val tmp = graft.operators.Scratch.flushPath(s,
-        s"graph-forget-${t.labelTable}", newLbl)
-      s.read.parquet(tmp)
-        .write.bucketBy(GraphStream.Buckets, "doc_id").sortBy("doc_id")
-        .mode("overwrite").saveAsTable(t.labelTable)
-      s.catalog.refreshTable(t.labelTable)
+      Bucketed.swap(s, s.newSession(), t.labelTable)(
+        untouched.union(merged.toDF("doc_id", "cluster_id"))
+          .withColumn("gen", lit(0L))
+          .write.bucketBy(GraphStream.Buckets, "doc_id").sortBy("doc_id"))
     } finally affected.unpersist()
   }
 }

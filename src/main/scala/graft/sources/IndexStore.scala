@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.functions.PolyHash
+import graft.operators.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,18 +62,14 @@ object IndexStore {
     t
   }
 
-  // store per sf directory, memoized like SignatureStore.prepared;
-  // builds serialized (the DupGraph/SpanStore racing-thunk lesson)
-  private val prepared = scala.collection.concurrent.TrieMap.empty[String, Store]
-  private val buildLock = new Object
+  // store per sf directory, memoized like SignatureStore.prepared
+  private val prepared = new Scratch.Memo[String, Store]
 
   /** The store over `dir`'s documents table (built on first use). */
-  def ensure(s: SparkSession, dir: String): Store = buildLock.synchronized {
-    prepared.getOrElseUpdate(dir, {
-      val tag = java.lang.Long.toHexString(PolyHash.hash(dir))
-      build(s, Tables.load(s, dir, "documents").select("doc_id", "text"), tag)
-    })
-  }
+  def ensure(s: SparkSession, dir: String): Store =
+    prepared(dir)(build(s,
+      Tables.load(s, dir, "documents").select("doc_id", "text"),
+      Scratch.dirHash(dir)))
 
   /** Idempotent upsert: index the batch's documents not already in the
     * manifest (anti-join on `doc_id` — the store side is bucketed, so

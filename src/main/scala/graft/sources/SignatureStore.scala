@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.functions.PolyHash
-import graft.operators.Dedup
+import graft.operators.{Dedup, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,14 +70,13 @@ object SignatureStore {
   }
 
   // store per sf directory, memoized like Bucketed.prepared
-  private val prepared = scala.collection.concurrent.TrieMap.empty[String, Store]
+  private val prepared = new Scratch.Memo[String, Store]
 
   /** The store over `dir`'s documents table (built on first use). */
   def ensure(s: SparkSession, dir: String): Store =
-    prepared.getOrElseUpdate(dir, {
-      val tag = java.lang.Long.toHexString(PolyHash.hash(dir))
-      build(s, Tables.load(s, dir, "documents").select("doc_id", "text"), tag)
-    })
+    prepared(dir)(build(s,
+      Tables.load(s, dir, "documents").select("doc_id", "text"),
+      Scratch.dirHash(dir)))
 
   /** Upsert: append a batch's signatures/bands with the SAME bucket
     * spec, so later probes stay exchange-free on the store side (each
@@ -113,16 +112,6 @@ object SignatureStore {
   def compact(s: SparkSession, t: Store): Unit = {
     Bucketed.compact(s, t.sig, Buckets, "doc_id")
     Bucketed.compact(s, t.bands, Buckets, "bk")
-  }
-
-  /** Heal a compaction swap that crashed mid-rename ([[Bucketed.recover]])
-    * — call when (re)opening a store handle; [[compact]] also self-heals
-    * on entry, so an at-least-once replay of a compacting batch recovers
-    * without intervention.
-    */
-  def recover(s: SparkSession, t: Store): Unit = {
-    Bucketed.recover(s, t.sig)
-    Bucketed.recover(s, t.bands)
   }
 
   /** Probe a (doc_id, text) micro-batch against the store: every

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.Tables
-import graft.functions.PolyHash
 import graft.operators.{Dedup, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -58,19 +57,13 @@ object WinnowStore {
   }
 
   // store per sf directory, memoized like SignatureStore.prepared
-  private val prepared = scala.collection.concurrent.TrieMap.empty[String, Store]
-  // Serialize first-use builds: TrieMap.getOrElseUpdate may run a racing
-  // thunk twice, and the loser's dropStale+write clobbers the winner's
-  // table mid-read (the DupGraph/IndexStore buildLock rule).
-  private val buildLock = new Object
+  private val prepared = new Scratch.Memo[String, Store]
 
   /** The store over `dir`'s documents table (built on first use). */
-  def ensure(s: SparkSession, dir: String): Store = buildLock.synchronized {
-    prepared.getOrElseUpdate(dir, {
-      val tag = java.lang.Long.toHexString(PolyHash.hash(dir))
-      build(s, Tables.load(s, dir, "documents").select("doc_id", "text"), tag)
-    })
-  }
+  def ensure(s: SparkSession, dir: String): Store =
+    prepared(dir)(build(s,
+      Tables.load(s, dir, "documents").select("doc_id", "text"),
+      Scratch.dirHash(dir)))
 
   /** Upsert a (doc_id, text) batch with the SAME bucket spec (appends
     * add files per bucket, never reshuffle existing ones). IDEMPOTENT
@@ -114,12 +107,6 @@ object WinnowStore {
   def compact(s: SparkSession, t: Store): Unit = {
     Bucketed.compactDistinct(s, t.fp, Buckets, "fp")
     Bucketed.compactDistinct(s, t.docs, Buckets, "doc_id")
-  }
-
-  /** Heal a compaction swap that crashed mid-rename. */
-  def recover(s: SparkSession, t: Store): Unit = {
-    Bucketed.recover(s, t.fp)
-    Bucketed.recover(s, t.docs)
   }
 
   /** Full-corpus scored near-dup pairs FROM THE STORE — the q213
@@ -168,22 +155,8 @@ object WinnowStore {
       .join(broadcast(batch.select(col("doc_id"))), Seq("doc_id"),
         "left_anti")
 
-  // Per-store probe sequence: Scratch.flush deletes a tag's PREVIOUS
-  // directory on entry, so a fixed per-store tag lets two concurrent
-  // probes of one store (a second WinnowStream, an ad-hoc probe beside
-  // the stream) delete each other's flush while the earlier probe's
-  // lazy frame may still read it. A rotating 4-slot discriminator keeps
-  // each probe's flush alive across the next THREE probes of the same
-  // store (growth stays bounded at 4 slots × 2 tags per store); callers
-  // must consume a probe frame before 4 further probes of that store —
-  // WinnowStream collects within its own trigger, far inside the bound.
-  private val probeSeq = scala.collection.concurrent.TrieMap
-    .empty[String, java.util.concurrent.atomic.AtomicLong]
-
   def probe(s: SparkSession, t: Store, batch: DataFrame): DataFrame = {
-    val slot = probeSeq
-      .getOrElseUpdate(t.fp, new java.util.concurrent.atomic.AtomicLong)
-      .getAndIncrement() % 4
+    val slot = Scratch.probeSlot(t.fp)
     val bfp = Scratch.flush(s, s"winnowprobe-b-$slot-${t.fp}",
       Dedup.winnowFingerprints(batch))
     val bCnt = bfp.groupBy(col("fp")).agg(count(lit(1)).as("nb"))

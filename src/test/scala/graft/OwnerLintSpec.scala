@@ -19,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `.foreachBatch` appears elsewhere only in the three pipelines
   *    that own no store, the compact-every-N hook and the
   *    collect-and-rewrap nowhere else, and no streaming store compacts
-  *    through a `Scratch.flushPath` hop or a lock of its own.
+  *    through a `Scratch.flushPath` hop or a lock of its own;
+  *  - the build-once layout memo lives only in `operators/Scratch.scala`:
+  *    every layout cache is a `Scratch.Memo` (no `buildLock`, no
+  *    `getOrElseUpdate(dir`), and the corpus-dir hex is `Scratch.dirHash`.
   */
 class OwnerLintSpec extends AnyFunSuite {
 
@@ -46,5 +49,11 @@ class OwnerLintSpec extends AnyFunSuite {
     assert(holders("Arrays.asList") == Set("streaming/Sinks.scala"))
     assert(!holders("Scratch.flushPath").exists(_.startsWith("streaming/")))
     assert(!holders("compactLocks").exists(_.startsWith("streaming/")))
+  }
+
+  test("every layout cache builds once through Scratch.Memo") {
+    assert(holders("buildLock").isEmpty)
+    assert(holders("getOrElseUpdate(dir").isEmpty)
+    assert(holders("toHexString") == Set("operators/Scratch.scala"))
   }
 }

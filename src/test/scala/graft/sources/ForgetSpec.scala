@@ -156,6 +156,44 @@ class ForgetSpec extends AnyFunSuite with SparkTestSession {
     assert(lbl(t) == lbl(rebuilt))
   }
 
+  test("graph store: a purge over a crashed label compaction heals it") {
+    import graft.streaming.GraphStream
+    import spark.implicits._
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+      .toDF("doc_id_1", "doc_id_2")
+    val rebuilt = GraphStream.build(spark, s"fgcre${System.nanoTime()}")
+    GraphStream.ingest(spark, rebuilt,
+      Seq((3L, 4L), (10L, 11L)).toDF("doc_id_1", "doc_id_2"))
+    def lbl(st: GraphStream.Store) =
+      GraphStream.labels(spark, st).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    def crashed(writeTwin: GraphStream.Store => Unit): Unit = {
+      val t = GraphStream.build(spark, s"fgc${System.nanoTime()}")
+      GraphStream.ingest(spark, t, chain)
+      writeTwin(t)
+      Forget.graph(spark, t, Seq(2L))
+      assert(spark.catalog.tableExists(t.labelTable))
+      assert(!spark.catalog.tableExists(s"${t.labelTable}_compact"),
+        "the purge left the twin behind")
+      assert(lbl(t) == lbl(rebuilt),
+        "purged labels must match a rebuild from the remaining pairs")
+      assert(rows(t.edgeTable) == rows(rebuilt.edgeTable))
+    }
+    def twinOf(t: GraphStream.Store, df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.bucketBy(GraphStream.Buckets, "doc_id").sortBy("doc_id")
+        .mode("overwrite").saveAsTable(s"${t.labelTable}_compact")
+    // (a) a stale twin beside the canonical table: the crash came before
+    // the drop, so the purge discards the twin
+    crashed(t => twinOf(t,
+      Seq((99L, 99L, 0L)).toDF("doc_id", "cluster_id", "gen")))
+    // (b) the twin only: the crash came between the drop and the rename
+    crashed { t =>
+      twinOf(t, spark.table(t.labelTable))
+      Bucketed.dropStale(spark, t.labelTable)
+      assert(!spark.catalog.tableExists(t.labelTable), "crash state: canonical gone")
+    }
+  }
+
   test("graph store: corpus-scale purge ≡ rebuild from the filtered pair set") {
     import graft.streaming.GraphStream
     import spark.implicits._

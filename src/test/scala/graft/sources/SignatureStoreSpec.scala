@@ -165,7 +165,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestSession {
     spark.table(store.bands).write.bucketBy(SignatureStore.Buckets, "bk")
       .sortBy("bk").mode("overwrite").saveAsTable(s"${store.bands}_compact")
     Bucketed.dropStale(spark, store.bands)
-    SignatureStore.recover(spark, store)
+    Seq(store.sig, store.bands).foreach(Bucketed.recover(spark, _))
     assert(spark.catalog.tableExists(store.bands))
     assert(SignatureStore.pairs(spark, store)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq

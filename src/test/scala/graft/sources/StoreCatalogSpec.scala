@@ -56,6 +56,14 @@ class StoreCatalogSpec extends AnyFunSuite with SparkTestSession {
       Seq("v", "lbl"))
   }
 
+  test("catalog names are pinned literally, one per store family") {
+    // d<hex of the corpus dir>_p<shuffle partitions of the test session>
+    assert(DupGraph.tableName(spark, dir, "labels") ==
+      "graft_dupgraph_labels_d4923e80c_p4")
+    assert(SpanStore.tableName(spark, dir) == "graft_spanstore_d4923e80c_p4")
+    assert(SignatureStore.ensure(spark, dir).sig == "graft_sig_4923e80c")
+  }
+
   test("warehouse stores answer SQL by name with bucketing metadata intact") {
     val sig = SignatureStore.ensure(spark, dir)
     val idx = IndexStore.ensure(spark, dir)

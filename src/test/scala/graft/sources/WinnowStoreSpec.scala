@@ -185,7 +185,7 @@ class WinnowStoreSpec extends AnyFunSuite with SparkTestSession {
     spark.table(store.fp).write.bucketBy(WinnowStore.Buckets, "fp")
       .sortBy("fp").mode("overwrite").saveAsTable(tmp)
     Bucketed.dropStale(spark, store.fp)
-    WinnowStore.recover(spark, store)
+    Seq(store.fp, store.docs).foreach(Bucketed.recover(spark, _))
     assert(spark.catalog.tableExists(store.fp))
     assert(q213Rows(WinnowStore.pairs(spark, store)) == before)
   }
