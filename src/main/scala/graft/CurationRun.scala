@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Corpus, Curation, Dedup, Scratch}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The end-to-end batch curation artifact a data engineer actually
@@ -53,8 +53,14 @@ import org.apache.spark.sql.functions._
   * read the materialized result — the span/LSH pipelines run exactly
   * once (the per-branch re-execution discipline: an unmaterialized
   * `cleaned` would re-run the q130 splice under every one of the four
-  * consumers). At 100 TB each `outDir` table is a warehouse table and
-  * the stages are independent jobs sharing it.
+  * consumers). The verified pairs are flushed before connected
+  * components, which executes its edges on every pass, so the MinHash →
+  * band join → Jaccard pipeline runs once too. Every re-read of an
+  * output carries the schema of the frame written there (no inference
+  * job), and the [[Summary]] counts are observed on the stage writes
+  * themselves, so no output is read back to be counted. At 100 TB each
+  * `outDir` table is a warehouse table and the stages are independent
+  * jobs sharing it.
   *
   *   sbt "runMain graft.CurationRun /root/testdata/sf0.01 /tmp/curation"
   */
@@ -72,59 +78,80 @@ object CurationRun {
   private def write(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
+  /** [[write]], returning the rows written (`n`) and any further
+    * `metrics`, observed on the write itself.
+    */
+  private def counted(df: DataFrame, path: String,
+      metrics: Column*): Map[String, Any] = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("n"), metrics: _*), path)
+    obs.get
+  }
+
+  private def n(m: Map[String, Any]): Long = m("n").asInstanceOf[Long]
+
   def run(spark: SparkSession, inDir: String, outDir: String): Summary = {
     val docs = Tables.load(spark, inDir, "documents")
     val tag =
       s"curationrun-d${Scratch.dirHash(inDir)}-r${runSeq.incrementAndGet()}"
 
     // 1. clean — the q130 rewrite, materialized before anything reads it
-    write(Dedup.substringRemove(docs, Dedup.MinRemoveWords), s"$outDir/clean")
-    val cleaned = spark.read.parquet(s"$outDir/clean")
+    val cleanDf = Dedup.substringRemove(docs, Dedup.MinRemoveWords)
+    val acct = counted(cleanDf, s"$outDir/clean",
+      sum(col("n_removed")).as("removed"))
+    val clean = spark.read.schema(cleanDf.schema).parquet(s"$outDir/clean")
+    val cleaned = clean
       .join(docs.select(col("doc_id"), col("lang"), col("source")), Seq("doc_id"))
       .select(col("doc_id"), col("clean_text").as("text"), col("lang"),
         col("source"), length(col("clean_text")).cast("long").as("n_chars"))
 
     // 2. collapse — fresh pairs/labels over the CLEANED text (cleaning
-    // changes shingles, so the pre-clean DupGraph store would be stale)
-    val p = Dedup.verifiedPairs(cleaned)
-      .select(col("doc_id_1"), col("doc_id_2"))
+    // changes shingles, so the pre-clean DupGraph store would be stale).
+    // The pairs are flushed first, as DupGraph.edges does: CC executes
+    // its edges on every pass, and the LSH pipeline must run once
+    val p = Scratch.flush(spark, s"$tag-pairs", Dedup.verifiedPairs(cleaned)
+      .select(col("doc_id_1"), col("doc_id_2")))
     val edges = p.union(p.select(col("doc_id_2"), col("doc_id_1")))
       .toDF("u", "v")
     val (labels, _) =
       Dedup.connectedComponents(spark, edges, scratchTag = tag)
-    write(Dedup.qualityCollapse(cleaned, labels), s"$outDir/collapse")
+    val collapseDf = Dedup.qualityCollapse(cleaned, labels)
+    write(collapseDf, s"$outDir/collapse")
+    val collapse =
+      spark.read.schema(collapseDf.schema).parquet(s"$outDir/collapse")
     val kept = cleaned.join(
-      spark.read.parquet(s"$outDir/collapse")
-        .filter(col("kept") === 1L).select(col("doc_id")),
+      collapse.filter(col("kept") === 1L).select(col("doc_id")),
       Seq("doc_id"))
 
     // 3.–4. the mixture plan and the training layout, over the survivors
     write(Corpus.mixturePlan(kept), s"$outDir/mixture")
-    write(Corpus.sequencePack(kept), s"$outDir/shards")
+    val nKept = n(counted(Corpus.sequencePack(kept), s"$outDir/shards"))
 
     // 4c. tokens — the q203 token-id shard materialization over the
     // survivors: the trained tokenizer (a LAYOUT, trained once on the
     // input corpus) applied to every shipped doc, ids packed into the
     // same 4096 budget the shards stage lays out — the tensor-ready
     // artifact a training loader reads (q56/q140 only plan it)
-    write(Corpus.tokenShards(spark, kept,
+    val nTokens = n(counted(Corpus.tokenShards(spark, kept,
       Corpus.ensureBpeMerges(spark, inDir), 4096L, s"$tag-tokens"),
-      s"$outDir/tokens")
+      s"$outDir/tokens"))
 
     // 4b. selection — the q161 mixture-constrained cut over the
     // survivors: which kept docs a target-domain-matched training run
     // would actually draw, per the plan's token quotas (advisory
     // artifact; the shard layout above packs ALL survivors)
-    write(Curation.mixtureSelect(kept, Some((spark, s"$tag-scq"))),
-      s"$outDir/selection")
+    val nSelected = n(counted(
+      Curation.mixtureSelect(kept, Some((spark, s"$tag-scq"))),
+      s"$outDir/selection"))
 
     // 5b. winnow audit — residual local overlap among SHIPPED docs
     // (the q213 rule through the SAME shared helpers): what splice +
     // collapse left behind for the next ingest cycle to watch
     // r19: the two Scratch flushes (wfps + wcap) replaced by the one
     // shared fp repartition — the gated q213/q218/q225 form
-    write(Dedup.winnowPairsFrom(Dedup.winnowCapped(Dedup.sharedFps(kept))),
-      s"$outDir/winnow_audit")
+    val nResidualPairs = n(counted(
+      Dedup.winnowPairsFrom(Dedup.winnowCapped(Dedup.sharedFps(kept))),
+      s"$outDir/winnow_audit"))
 
     // 5. provenance — the q146 audit frame over THIS run's decisions
     // (the gated q146 runs the same union over the raw corpus; here the
@@ -138,28 +165,25 @@ object CurationRun {
       .join(hashes, "h")
       .filter(col("doc_id") =!= col("keep_id"))
       .select(col("doc_id"), lit("exact_dup").as("reason"))
-    val near = spark.read.parquet(s"$outDir/collapse")
+    val near = collapse
       .filter(col("kept") === 0L)
       .select(col("doc_id"), lit("near_dup").as("reason"))
-    val spliced = spark.read.parquet(s"$outDir/clean")
+    val spliced = clean
       .filter(col("n_removed") > 0)
       .select(col("doc_id"), lit("substring_spliced").as("reason"))
-    write(exact.unionByName(near).unionByName(spliced), s"$outDir/provenance")
+    val nFlagged = n(counted(exact.unionByName(near).unionByName(spliced),
+      s"$outDir/provenance"))
 
     // 6. the health report of what actually shipped, last
-    write(Curation.sourceScorecard(kept), s"$outDir/scorecard")
+    val nSources =
+      n(counted(Curation.sourceScorecard(kept), s"$outDir/scorecard"))
 
-    val acct = spark.read.parquet(s"$outDir/clean")
-      .agg(count(lit(1)), sum(col("n_removed"))).first()
     Summary(
-      nDocs = acct.getLong(0),
-      tokensRemoved = acct.getLong(1),
-      nKept = spark.read.parquet(s"$outDir/shards").count(),
-      nSources = spark.read.parquet(s"$outDir/scorecard").count(),
-      nFlagged = spark.read.parquet(s"$outDir/provenance").count(),
-      nSelected = spark.read.parquet(s"$outDir/selection").count(),
-      nTokens = spark.read.parquet(s"$outDir/tokens").count(),
-      nResidualPairs = spark.read.parquet(s"$outDir/winnow_audit").count())
+      nDocs = n(acct),
+      tokensRemoved = acct("removed").asInstanceOf[Long],
+      nKept = nKept, nSources = nSources, nFlagged = nFlagged,
+      nSelected = nSelected, nTokens = nTokens,
+      nResidualPairs = nResidualPairs)
   }
 
   def main(args: Array[String]): Unit = {
@@ -173,6 +197,7 @@ object CurationRun {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.quietWindowWarnings()
     val t0 = System.nanoTime()
     val sm = run(spark, inDir, outDir)
     val sec = (System.nanoTime() - t0) / 1e9

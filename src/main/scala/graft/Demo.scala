@@ -39,6 +39,7 @@ object Demo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.quietWindowWarnings()
     import spark.implicits._
 
     val gauges = new Gauges

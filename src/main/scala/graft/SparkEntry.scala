@@ -20,4 +20,15 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     Queries.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+
+  /** Silence WindowExec's per-plan "No Partition Defined" WARN in the
+    * mains that print to a console. PlanLintSpec already pins and
+    * justifies every unpartitioned window, so the repeated line is
+    * noise that buries real warnings (it was the whole tail of Verify's
+    * output). Call after `setLogLevel`, which resets only the root.
+    */
+  private[graft] def quietWindowWarnings(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -16,6 +17,24 @@ object Tables {
 
   def path(sfDir: String, table: String): String = s"$sfDir/$table.parquet"
 
+  private val schemas =
+    new graft.operators.Scratch.Memo[(String, Long), StructType]
+
+  /** The file schema of the parquet at `p`, inferred once per (path,
+    * modification time) and never again: inference is a Spark job (a
+    * footer read), ~90 ms per call at sf0.1, that every query paid on
+    * every `load`. The modification time is the newest of the path and,
+    * for a directory, its entries, so a rewritten table is re-inferred.
+    * Metadata only — every read still scans the files. The schema
+    * depends on `nanosAsLong`, which [[load]] sets before every call.
+    */
+  private def fileSchema(spark: SparkSession, p: String): StructType = {
+    val f = new java.io.File(p)
+    val mtime = (f +: Option(f.listFiles()).getOrElse(Array.empty[java.io.File]))
+      .map(_.lastModified()).max
+    schemas((p, mtime))(spark.read.parquet(p).schema)
+  }
+
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
     // events.ts has shipped as TWO encodings across testdata generations:
     //   (a) parquet TIMESTAMP(NANOS) — Spark only reads it via the
@@ -27,7 +46,8 @@ object Tables {
     // the UTC session every entry point sets), so downstream code can
     // rely on a single `ts: TIMESTAMP` contract.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path(sfDir, table))
+    val p = path(sfDir, table)
+    val df = spark.read.schema(fileSchema(spark, p)).parquet(p)
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.dataType == org.apache.spark.sql.types.LongType && f.name == "ts")
         // `div` (integral division), NOT `/`: epoch-nanos exceed the 53-bit

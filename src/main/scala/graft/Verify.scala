@@ -70,6 +70,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.quietWindowWarnings()
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: comma-separated query names; unset (the driver's
     // invocation) dumps the full surface. Unknown names fail FAST — a

@@ -467,11 +467,19 @@ object Dedup {
     * directions present). Returns the converged (u, cluster_id) frame
     * and the iteration count — see [[qDupClusters]] for the algorithm
     * and storage discipline.
+    *
+    * `edges` is executed 1 + iterations times (the seed `distinct`,
+    * then each iteration's neighbour join), and an edge frame built as a
+    * union of a pair list and its mirror runs that pair list twice per
+    * execution. Callers must therefore pass a scan — a flushed or
+    * memoized edge or pair table — never the pipeline that produces the
+    * pairs, or that pipeline re-runs on every pass.
     */
   private[graft] def connectedComponents(s: SparkSession, edges: DataFrame,
       maxIter: Int = 25, scratchTag: String = "default"): (DataFrame, Int) = {
     val (path, iter) = connectedComponentsPath(s, edges, maxIter, scratchTag)
-    (s.read.parquet(path), iter)
+    // the flushed labels' known schema: the read-back infers nothing
+    (s.read.schema("u BIGINT, cluster_id BIGINT").parquet(path), iter)
   }
 
   /** [[connectedComponents]], returning the flushed scratch PATH instead

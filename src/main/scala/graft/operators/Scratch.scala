@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** JVM-scoped scratch parquet for iterative operators that must
   * materialize a converged result before returning it (the
@@ -54,9 +55,14 @@ private[graft] object Scratch {
       out
     }
 
-  /** [[flushPath]], returning the path-backed frame. */
+  /** [[flushPath]], returning the path-backed frame. The read-back
+    * carries the schema of `df`, so it starts no inference job: a
+    * user-given parquet schema is made nullable on read (nested fields
+    * too), which is exactly what inference would return from the footer
+    * (ScratchSpec pins the equality).
+    */
   def flush(s: SparkSession, tag: String, df: DataFrame): DataFrame =
-    s.read.parquet(flushPath(s, tag, df))
+    s.read.schema(df.schema).parquet(flushPath(s, tag, df))
 
   /** The one hex discriminator of a corpus dir, carried by every
     * per-corpus flush tag and layout table name.
@@ -99,7 +105,7 @@ private[graft] object Scratch {
     def put(k: K, v: V): Unit = values.put(k, v): Unit
   }
 
-  private val tables = new Memo[(String, String, String), String]
+  private val tables = new Memo[(String, String, String), (String, StructType)]
 
   /** The catalog name [[memoTable]] registers for `name` over `dir` at
     * the session's shuffle parallelism — how a SQL-only user addresses
@@ -113,19 +119,23 @@ private[graft] object Scratch {
     * key with a flush tag carrying the dir and parallelism (two corpora
     * or partitionings never share, and so never delete, one tag's
     * directory) and returns a path that stays live for the JVM; the
-    * path is registered as [[memoTableName]]. Parallelism is in the key
-    * so ParallelismInvarianceSpec still runs each pipeline per
-    * partitioning — one memoized flush would make its cross-parallelism
-    * assertion vacuous.
+    * path is registered as [[memoTableName]]. The schema the catalog
+    * inferred for it is memoized with the path (once per build, never
+    * on a hit), so every later call is a scan that starts no job.
+    * Parallelism is in the key so ParallelismInvarianceSpec still runs
+    * each pipeline per partitioning — one memoized flush would make its
+    * cross-parallelism assertion vacuous.
     */
   def memoTable(s: SparkSession, dir: String, name: String)(
       buildPath: String => String): DataFrame = {
     val parts = s.conf.get("spark.sql.shuffle.partitions")
-    s.read.parquet(tables((dir, parts, name)) {
+    val (path, schema) = tables((dir, parts, name)) {
       val path = buildPath(s"${name.replace('_', '-')}-d${dirHash(dir)}-p$parts")
-      register(s, memoTableName(s, dir, name), path)
-      path
-    })
+      val table = memoTableName(s, dir, name)
+      register(s, table, path)
+      (path, s.table(table).schema) // inferred by the CREATE TABLE
+    }
+    s.read.schema(schema).parquet(path)
   }
 
   private val probeSeq = scala.collection.concurrent.TrieMap

@@ -18,6 +18,23 @@ class CurationRunSpec extends AnyFunSuite with SparkTestSession {
     (d, CurationRun.run(spark, dir, d))
   }
 
+  test("the Summary's clean-stage counts match the written clean output") {
+    val (o, sm) = out
+    val clean = spark.read.parquet(s"$o/clean")
+    assert(sm.nDocs == clean.count())
+    assert(sm.tokensRemoved ==
+      clean.agg(sum(col("n_removed"))).first().getLong(0))
+    assert(sm.tokensRemoved > 0, "sf0.001 contains shared extents to splice")
+  }
+
+  test("a second run in the same JVM returns an identical Summary") {
+    // the Summary is observed on each run's own writes, and the pair
+    // flush tag carries the run nonce, so no count carries over
+    val (_, sm) = out
+    val d = java.nio.file.Files.createTempDirectory("graft-curation-").toString
+    assert(CurationRun.run(spark, dir, d) == sm)
+  }
+
   test("the clean stage is bit-identical to the gated q130 rewrite") {
     val (o, _) = out
     val fromRun = spark.read.parquet(s"$o/clean")

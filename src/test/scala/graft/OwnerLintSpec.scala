@@ -22,7 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    through a `Scratch.flushPath` hop or a lock of its own;
   *  - the build-once layout memo lives only in `operators/Scratch.scala`:
   *    every layout cache is a `Scratch.Memo` (no `buildLock`, no
-  *    `getOrElseUpdate(dir`), and the corpus-dir hex is `Scratch.dirHash`.
+  *    `getOrElseUpdate(dir`), and the corpus-dir hex is `Scratch.dirHash`;
+  *  - parquet schema inference (`.read.parquet(`) lives only in
+  *    `Tables.scala`, the miss of the (path, mtime) schema memo, and in
+  *    Bench's warm-up: every other read of a parquet path the engine
+  *    wrote or already read carries its known schema.
   */
 class OwnerLintSpec extends AnyFunSuite {
 
@@ -55,5 +59,9 @@ class OwnerLintSpec extends AnyFunSuite {
     assert(holders("buildLock").isEmpty)
     assert(holders("getOrElseUpdate(dir").isEmpty)
     assert(holders("toHexString") == Set("operators/Scratch.scala"))
+  }
+
+  test("parquet schemas are inferred only by the Tables memo and Bench's warm-up") {
+    assert(holders(".read.parquet(") == Set("Tables.scala", "Bench.scala"))
   }
 }

@@ -65,6 +65,27 @@ class TablesSpec extends AnyFunSuite with SparkTestSession {
       assert(loaded(table) == expected(table))
     }
 
+  test("a table rewritten with a newer mtime is re-inferred") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-tables-")
+    val table = tmp.resolve("region.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(Tables.path(dir, "region")), table)
+    val before = Tables.load(spark, tmp.toString, "region")
+    assert(before.columns.toSeq == Seq("r_regionkey", "r_name"))
+    // rewrite the table's single file with one extra column
+    val staged = tmp.resolve("staged").toString
+    before.withColumn("r_extra", org.apache.spark.sql.functions.lit(7L))
+      .coalesce(1).write.parquet(staged)
+    val part = new java.io.File(staged).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    val mtime = table.toFile.lastModified()
+    java.nio.file.Files.move(part, table,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(table.toFile.setLastModified(mtime + 10000L))
+    val after = Tables.load(spark, tmp.toString, "region")
+    assert(after.columns.toSeq == Seq("r_regionkey", "r_name", "r_extra"))
+    assert(after.filter(col("r_extra") === 7L).count() == before.count())
+  }
+
   /** The columns among `cols` that hold a null in `df` (one pass). */
   private def nullColumns(df: DataFrame, cols: Seq[String]): Seq[String] = {
     val r = df.select(cols.map(c => count(when(col(c).isNull, 1)).as(c)): _*)
