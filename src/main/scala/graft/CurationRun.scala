@@ -91,9 +91,17 @@ object CurationRun {
   private def n(m: Map[String, Any]): Long = m("n").asInstanceOf[Long]
 
   def run(spark: SparkSession, inDir: String, outDir: String): Summary = {
-    val docs = Tables.load(spark, inDir, "documents")
     val tag =
       s"curationrun-d${Scratch.dirHash(inDir)}-r${runSeq.incrementAndGet()}"
+    // the run's flushes carry its nonce, so no later flush replaces them
+    try stages(spark, inDir, outDir, tag)
+    finally Seq(s"cc-$tag", s"$tag-pairs", s"$tag-tokens", s"$tag-scq")
+      .foreach(Scratch.release)
+  }
+
+  private def stages(spark: SparkSession, inDir: String, outDir: String,
+      tag: String): Summary = {
+    val docs = Tables.load(spark, inDir, "documents")
 
     // 1. clean — the q130 rewrite, materialized before anything reads it
     val cleanDf = Dedup.substringRemove(docs, Dedup.MinRemoveWords)

@@ -1439,7 +1439,9 @@ object Retrieval {
     * plans (q155 lexical, q143 dense, q173 fused); agreement is one
     * equi-join of ≤batch·6 vs ≤batch·10 frames, a per-(pair, query)
     * rollup, and a left join back to the literal pair×query grid so
-    * zero-overlap rows report 0 rather than vanish.
+    * zero-overlap rows report 0 rather than vanish. The rollup (one row
+    * per pair and query) is the broadcast build side: a left outer join
+    * can only build its right side, so a hint on the grid is dropped.
     */
   val qRankAgreement: QuerySpec = QuerySpec(
     "q184_rank_agreement",
@@ -1492,8 +1494,7 @@ object Retrieval {
       val grid = Seq("lex|dense", "fused|dense")
         .flatMap(p => HybridQueryIds.map(q => (p, q)))
         .toDF("pair", "query_id")
-      broadcast(grid)
-        .join(ov, Seq("pair", "query_id"), "left")
+      grid.join(broadcast(ov), Seq("pair", "query_id"), "left")
         .select(col("pair"), col("query_id"),
           coalesce(col("ov_at_1"), lit(0L)).as("ov_at_1"),
           coalesce(col("ov_at_2"), lit(0L)).as("ov_at_2"),

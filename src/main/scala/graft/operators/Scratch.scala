@@ -55,6 +55,16 @@ private[graft] object Scratch {
       out
     }
 
+  /** Deletes `tag`'s live flush and forgets the tag, lock included: the
+    * release for a tag no caller flushes again (one carrying a run nonce),
+    * once every reader of the flush has run.
+    */
+  def release(tag: String): Unit =
+    tagLocks.getOrElseUpdate(tag, new Object).synchronized {
+      prevFlush.remove(tag).foreach(p => rmTree(p.toFile))
+      tagLocks.remove(tag): Unit
+    }
+
   /** [[flushPath]], returning the path-backed frame. The read-back
     * carries the schema of `df`, so it starts no inference job: a
     * user-given parquet schema is made nullable on read (nested fields

@@ -88,13 +88,12 @@ final class ConnectorTopic(val spark: SparkSession, val name: String,
           col("p.deliveries").as("deliveries"),
           col("p.not_before").as("not_before"))).toIndexedSeq: _*)
 
-  override def publish(rows: DataFrame): Unit = {
-    val out = encodeRecords(rows)
-    if (!out.isEmpty) publishRecords(out)
-  }
-
-  override def publishNonEmpty(rows: DataFrame): Unit =
+  // zero records append nothing, so no emptiness probe runs first: the
+  // send is one job, and an `Observation` on `rows` sees every row
+  override def publish(rows: DataFrame): Unit =
     publishRecords(encodeRecords(rows))
+
+  override def publishNonEmpty(rows: DataFrame): Unit = publish(rows)
 
   override def publishSeed(rows: DataFrame): Unit =
     publish(rows.withColumn("deliveries", lit(0)))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -21,27 +21,30 @@ final class FileTopic(val spark: SparkSession, val name: String, val dir: String
   private val envelopeSchema: StructType = schema
     .add("topic", "string").add("deliveries", "int").add("not_before", "long")
 
-  /** Producer send (reference K4). Batching intentionally not tunable:
-    * each call is one atomic append, like the examples' batching-off
-    * producers (part2/SingleWorkloadExample.scala:85).
+  /** Producer send (reference K4): one append per call, like the
+    * examples' batching-off producers (part2/SingleWorkloadExample.scala:85).
+    * An empty write still makes a parquet file, which a reader takes for
+    * new input (an endless empty-batch loop on feedback topologies), so
+    * the one write job lands in a `_staging-` dir readers skip and moves
+    * in only if its observed row count is non-zero. No emptiness probe
+    * runs first, so an `Observation` on `rows` sees every row.
     */
   override def publish(rows: DataFrame): Unit = {
-    // an empty append still creates a parquet file, which a streaming
-    // reader of this topic would see as a new file — feeding an infinite
-    // empty-batch loop on feedback topologies. Never write empty sends.
-    // (Callers that already know the send is non-empty — e.g. a pipeline
-    // that counted its batch slices in one pass — use publishNonEmpty and
-    // skip this extra Spark action.)
-    val out = envelope(rows)
-    if (!out.isEmpty) out.write.mode(SaveMode.Append).parquet(dir)
+    val staged = new java.io.File(dir, s"_staging-${java.util.UUID.randomUUID()}")
+    val obs = Observation()
+    try {
+      envelope(rows).observe(obs, count(lit(1)).as("n"))
+        .write.parquet(staged.getPath)
+      if (obs.get.get("n").exists(_ != 0L))
+        staged.listFiles().filter(_.getName.startsWith("part-")).foreach(f =>
+          java.nio.file.Files.move(f.toPath, new java.io.File(dir, f.getName).toPath))
+    } finally {
+      Option(staged.listFiles()).foreach(_.foreach(_.delete()))
+      staged.delete(): Unit
+    }
   }
 
-  /** [[publish]] minus the emptiness action, for callers that have
-    * already established `rows` is non-empty (one counting pass over a
-    * persisted batch instead of one action per publish).
-    */
-  override def publishNonEmpty(rows: DataFrame): Unit =
-    envelope(rows).write.mode(SaveMode.Append).parquet(dir)
+  override def publishNonEmpty(rows: DataFrame): Unit = publish(rows)
 
   private def envelope(rows: DataFrame): DataFrame =
     rows

@@ -18,8 +18,11 @@ final class Gauges extends StreamingQueryListener {
 
   final case class Snapshot(
       batches: Long, totalRows: Long, lastBatchRows: Long, maxBatchRows: Long,
-      terminated: Boolean, error: Option[String])
+      terminated: Boolean, error: Option[String],
+      lastTriggerMs: Long = 0, maxTriggerMs: Long = 0,
+      lastAddBatchMs: Long = 0, maxAddBatchMs: Long = 0)
 
+  private val empty = Snapshot(0, 0, 0, 0, terminated = false, None)
   private val byName = TrieMap[String, Snapshot]()
   private val byId = TrieMap[java.util.UUID, String]()
 
@@ -28,17 +31,25 @@ final class Gauges extends StreamingQueryListener {
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
     byId.put(e.id, e.name)
-    byName.putIfAbsent(e.name, Snapshot(0, 0, 0, 0, terminated = false, None))
+    byName.putIfAbsent(e.name, empty)
   }
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val name = e.progress.name
-    val prev = byName.getOrElse(name, Snapshot(0, 0, 0, 0, terminated = false, None))
+    val prev = byName.getOrElse(name, empty)
+    // phase times in ms; an idle trigger has no addBatch: keep the last
+    def ms(phase: String, last: Long): Long =
+      Option(e.progress.durationMs.get(phase)).fold(last)(_.longValue)
+    val trigger = ms("triggerExecution", prev.lastTriggerMs)
+    val addBatch = ms("addBatch", prev.lastAddBatchMs)
     byName.put(name, prev.copy(
       batches = prev.batches + 1,
       totalRows = prev.totalRows + e.progress.numInputRows,
       lastBatchRows = e.progress.numInputRows,
-      maxBatchRows = math.max(prev.maxBatchRows, e.progress.numInputRows)))
+      maxBatchRows = math.max(prev.maxBatchRows, e.progress.numInputRows),
+      lastTriggerMs = trigger, maxTriggerMs = math.max(prev.maxTriggerMs, trigger),
+      lastAddBatchMs = addBatch,
+      maxAddBatchMs = math.max(prev.maxAddBatchMs, addBatch)))
   }
 
   override def onQueryTerminated(

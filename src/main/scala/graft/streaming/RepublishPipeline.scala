@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -24,11 +24,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    `deliverAfter` semantics — `InMemoryBroker.admissibleEnd`), so on
   *    the broker path this pipeline never sees an early row. A source
   *    that cannot hold admission (the parquet [[FileTopic]] harness)
-  *    admits early; those rows nap inside the batch (capped at 1 s of
-  *    trigger-latency degradation per batch — the documented cost of a
-  *    hold-less source) and any row still early after the nap is
-  *    re-enqueued with its stamp intact, so waiting costs at most one
-  *    retained duplicate per SECOND of backoff, not per 50 ms trigger;
+  *    admits early; [[routeBatch]] naps those rows, at most 1 s a batch;
   *  - **republish with numPublishes + 1** (reference K4,
   *    part2/MessageProcessor.scala:65-68) ≡ success rows appended back to
   *    the topic with the hop counter incremented, bounded by `maxHops`
@@ -37,6 +33,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - **bounded intake** (reference C3) ≡ `admitPerTrigger` on the source
   *    (files for [[FileTopic]], rows for the DSv2 broker source), so one
   *    trigger never admits unbounded work.
+  *
+  * A trigger on a source that holds admission is ONE Spark job: one
+  * routed append carries the batch's republishes and redeliveries, with
+  * no persist and no counting action. The dead-letter and early counts
+  * are observed on that append; their sends run only when non-zero.
+  * Every row must be a success or a failure: a NULL or third status
+  * raises in the routed projection and fails its task before the task
+  * appends, but other tasks' rows may already be on the topic. The batch
+  * then replays, as after a crash between two appends: at-least-once.
   *
   * The pipeline is written against [[Topic]] — it runs identically on the
   * parquet test harness and on the DataSource-V2 embedded-broker source.
@@ -56,120 +61,82 @@ object RepublishPipeline {
     * checkpointing = resumability.
     */
   def start(topic: Topic, deadLetter: Topic, checkpointDir: String,
-      queryName: String, cfg: Config = Config()): StreamingQuery = {
-
-    val payloadCols = Seq("name", "numPublishes")
-    val envelopeCols = payloadCols ++ Seq("deliveries", "not_before")
-
+      queryName: String, cfg: Config = Config()): StreamingQuery =
     topic.readStream(cfg.admitPerTrigger)
       .writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val now = System.currentTimeMillis()
-        val notBefore = coalesce(col("not_before"), lit(0L))
-        val processed = ProcessStage.withProcessing(batch, cfg.failPercent)
-          .withColumn("due", notBefore <= lit(now))
-          // foreachBatch re-evaluates its input per action below; persist so
-          // the (deterministic) processing runs once per message per batch
-          .persist()
-        try {
-          // each slice matches its status EXPLICITLY (never `!success`):
-          // a third status value or a NULL must surface as an unrouted
-          // row in the invariant below, not silently flow to the
-          // nack/dead-letter path
-          val isSuccess = col("status") === ProcessStage.Success
-          val isFailure = col("status") === ProcessStage.Failure
-
-          val republishable = isSuccess &&
-            Payloads.republishHop(col("numPublishes")) < cfg.maxHops
-          val redeliverable = isFailure &&
-            (col("deliveries") + 1) < cfg.maxDeliveries
-          val dead = isFailure && (col("deliveries") + 1) >= cfg.maxDeliveries
-
-          /** K4 republish with the hop increment bounded by maxHops; T2
-            * nack → redelivery with deliveries+1 no earlier than
-            * now + backoff; dead-letter past maxDeliveries. Publishes are
-            * guarded by pre-computed slice counts, so an empty slice
-            * costs no Spark job.
-            */
-          def publishSlices(slice: DataFrame, rep: Long, redel: Long,
-              deadCnt: Long): Unit = {
-            if (rep > 0) topic.publishNonEmpty(
-              slice.filter(republishable)
-                .withColumn("numPublishes", Payloads.republishHop(col("numPublishes")))
-                .withColumn("deliveries", lit(0))
-                .withColumn("not_before", lit(0L))
-                .select(envelopeCols.map(col): _*))
-            if (redel > 0) topic.publishNonEmpty(
-              slice.filter(redeliverable)
-                .withColumn("deliveries", col("deliveries") + 1)
-                .withColumn("not_before",
-                  if (cfg.redeliveryBackoffMs > 0)
-                    lit(System.currentTimeMillis() + cfg.redeliveryBackoffMs)
-                  else lit(0L))
-                .select(envelopeCols.map(col): _*))
-            if (deadCnt > 0) deadLetter.publishNonEmpty(
-              slice.filter(dead)
-                .withColumn("deliveries", col("deliveries") + 1)
-                .withColumn("not_before", lit(0L))
-                .select(envelopeCols.map(col): _*))
-          }
-
-          // ONE counting action over the persisted batch: the due slices'
-          // publish guards, the deferred stats, and the status-domain
-          // invariant (instead of one emptiness job per publish)
-          val counts = processed.select(
-            sum((col("due") && republishable).cast("long")),
-            sum((col("due") && redeliverable).cast("long")),
-            sum((col("due") && dead).cast("long")),
-            sum((!col("due")).cast("long")),
-            max(when(!col("due"), notBefore)),
-            sum(coalesce(!isSuccess && !isFailure, lit(true)).cast("long")),
-            count(lit(1))).head()
-          def cnt(i: Int): Long = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-          // status-domain assertion: every row is success or failure
-          require(cnt(5) == 0L,
-            s"ProcessStage emitted ${cnt(5)} of ${cnt(6)} rows with " +
-              "a status outside {success, failure}; refusing to route them")
-
-          publishSlices(processed.filter(col("due")), cnt(0), cnt(1), cnt(2))
-
-          // Early-admitted rows (only possible on sources that cannot hold
-          // admission — the FileTopic harness; the DSv2 broker holds them
-          // at the source): nap toward the LATEST due time in the batch,
-          // then route whatever is due exactly once. Re-enqueueing every
-          // trigger instead would append one retained duplicate envelope
-          // per 50 ms of backoff. The nap runs ON the micro-batch thread,
-          // so it is HARD-CAPPED at 1 s however large the backoff — a
-          // batch holding a not-yet-due row degrades trigger latency by
-          // at most that second — and anything still early after the nap
-          // falls back to ONE re-enqueue (log churn bounded at one
-          // envelope per second of remaining backoff, not one per
-          // trigger). Deferred rows reuse the ProcessStage result
-          // computed at admission — sound because processing is
-          // deterministic in the payload.
-          if (cnt(3) > 0) {
-            val latestDue = counts.getLong(4)
-            val nap = math.min(latestDue - System.currentTimeMillis(), 1000L)
-            if (nap > 0) Thread.sleep(nap)
-            val now2 = System.currentTimeMillis()
-            val due2 = notBefore <= lit(now2)
-            val dcounts = processed.filter(!col("due")).select(
-              sum((due2 && republishable).cast("long")),
-              sum((due2 && redeliverable).cast("long")),
-              sum((due2 && dead).cast("long")),
-              sum((!due2).cast("long"))).head()
-            def dcnt(i: Int): Long = if (dcounts.isNullAt(i)) 0L else dcounts.getLong(i)
-            publishSlices(processed.filter(!col("due") && due2),
-              dcnt(0), dcnt(1), dcnt(2))
-            if (dcnt(3) > 0) topic.publishNonEmpty(
-              processed.filter(!col("due") && !due2)
-                .select(envelopeCols.map(col): _*))
-          }
-        } finally processed.unpersist()
+        routeBatch(ProcessStage.withProcessing(batch, cfg.failPercent),
+          topic, deadLetter, cfg)
       }
       .start()
+
+  private val notBefore = coalesce(col("not_before"), lit(0L))
+
+  /** Routes one processed batch (K4 republish, T2 nack → redelivery,
+    * dead-letter). Rows admitted early (only on a hold-less source) nap
+    * toward the batch's latest due time, capped at 1 s on the micro-batch
+    * thread, are routed once, and what is still early is re-enqueued once
+    * with its stamp: one retained envelope per second of backoff, not one
+    * per 50 ms trigger. Deferred rows reuse the processing computed at
+    * admission — sound because processing is deterministic in the payload.
+    */
+  private[streaming] def routeBatch(processed: DataFrame, topic: Topic,
+      deadLetter: Topic, cfg: Config): Unit = {
+    val guarded = processed.withColumn("ok",
+      when(col("status") === ProcessStage.Success, true)
+        .when(col("status") === ProcessStage.Failure, false)
+        .otherwise(raise_error(concat(lit("ProcessStage emitted status "),
+          coalesce(col("status"), lit("NULL")),
+          lit(" outside {success, failure}; refusing to route it")))))
+    val now = System.currentTimeMillis()
+    val (nEarly, latest) = routeDue(guarded, now, topic, deadLetter, cfg)
+    if (nEarly > 0) {
+      val nap = math.min(latest - System.currentTimeMillis(), 1000L)
+      if (nap > 0) Thread.sleep(nap)
+      val early = guarded.filter(notBefore > lit(now))
+      val now2 = System.currentTimeMillis()
+      if (routeDue(early, now2, topic, deadLetter, cfg)._1 > 0)
+        topic.publishNonEmpty(early.filter(notBefore > lit(now2)))
+    }
+  }
+
+  /** One append to `topic` of the rows of `rows` that are due at `now`:
+    * successes below maxHops on their next hop, failures below
+    * maxDeliveries redelivered. The counts are observed on that append,
+    * over every row: due rows to dead-letter (sent here when there are
+    * any) and rows not yet due, returned with their latest `not_before`.
+    */
+  private def routeDue(rows: DataFrame, now: Long, topic: Topic,
+      deadLetter: Topic, cfg: Config): (Long, Long) = {
+    // `now` enters through a UDF: a literal would be inlined into the
+    // generated code, and every trigger would compile its stages anew
+    val at = udf(() => now).asNondeterministic()
+    val withDue = rows.withColumn("due", notBefore <= at())
+    val (due, ok) = (col("due"), col("ok"))
+    val hop = Payloads.republishHop(col("numPublishes"))
+    val retry = col("deliveries") + 1
+    val dead = due && !ok && retry >= cfg.maxDeliveries
+    val backoff =
+      if (cfg.redeliveryBackoffMs > 0) at() + cfg.redeliveryBackoffMs else lit(0L)
+    val obs = Observation()
+    topic.publish(withDue
+      .observe(obs, count_if(dead).as("dead"), count_if(!due).as("early"),
+        max(when(!due, notBefore)).as("latest"))
+      .filter(due && when(ok, hop < cfg.maxHops)
+        .otherwise(retry < cfg.maxDeliveries))
+      .select(col("name"),
+        when(ok, hop).otherwise(col("numPublishes")).as("numPublishes"),
+        when(ok, lit(0)).otherwise(retry).as("deliveries"),
+        when(ok, lit(0L)).otherwise(backoff).as("not_before")))
+    // an optimizer that proves a metric's input empty leaves it out
+    val m = obs.get
+    def observed(k: String): Long =
+      m.get(k).collect { case v: Long => v }.getOrElse(0L)
+    if (observed("dead") > 0) deadLetter.publishNonEmpty(withDue.filter(dead)
+      .withColumn("deliveries", retry).withColumn("not_before", lit(0L)))
+    (observed("early"), observed("latest"))
   }
 }

@@ -23,12 +23,12 @@ trait Topic {
 
   def name: String
 
-  /** Producer send (reference K4); atomic append, skips empty sends. */
+  /** Producer send (reference K4); one append, skips empty sends, and
+    * fulfils an `Observation` on `rows` over every row (TopicContract).
+    */
   def publish(rows: DataFrame): Unit
 
-  /** [[publish]] minus the emptiness check, for callers that already
-    * counted the batch (one Spark action saved per send).
-    */
+  /** [[publish]] for callers that know `rows` is non-empty. */
   def publishNonEmpty(rows: DataFrame): Unit
 
   /** Seed publish: first delivery, `deliveries = 0`. */

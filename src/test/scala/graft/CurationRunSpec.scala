@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Scratch}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +18,12 @@ class CurationRunSpec extends AnyFunSuite with SparkTestSession {
     (d, CurationRun.run(spark, dir, d))
   }
 
+  /** A second run, into a fresh dir, in the same JVM as [[out]]. */
+  private lazy val second = {
+    val d = java.nio.file.Files.createTempDirectory("graft-curation-").toString
+    CurationRun.run(spark, dir, d)
+  }
+
   test("the Summary's clean-stage counts match the written clean output") {
     val (o, sm) = out
     val clean = spark.read.parquet(s"$o/clean")
@@ -31,8 +37,22 @@ class CurationRunSpec extends AnyFunSuite with SparkTestSession {
     // the Summary is observed on each run's own writes, and the pair
     // flush tag carries the run nonce, so no count carries over
     val (_, sm) = out
-    val d = java.nio.file.Files.createTempDirectory("graft-curation-").toString
-    assert(CurationRun.run(spark, dir, d) == sm)
+    assert(second == sm)
+  }
+
+  test("two runs in one JVM leave no scratch directory behind") {
+    // the scratch root, found through a probe flush that release deletes
+    val tag = "curationrunspec-probe"
+    val probe = java.nio.file.Paths.get(
+      Scratch.flushPath(spark, tag, spark.range(1).toDF())).getParent
+    Scratch.release(tag)
+    assert(!probe.toFile.exists(), "release deletes the tag's live flush")
+    def left() = probe.getParent.toFile.listFiles().map(_.getName)
+      .filter(_.contains("curationrun-")).toSeq
+    out
+    assert(left().isEmpty, s"left after one run: ${left()}")
+    second
+    assert(left().isEmpty, s"left after two runs: ${left()}")
   }
 
   test("the clean stage is bit-identical to the gated q130 rewrite") {

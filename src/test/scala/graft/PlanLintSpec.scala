@@ -1,5 +1,11 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +22,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    cross-joined under an explicit `broadcast()` — the q83-style
   *    shapes the round-14 audit spot-checked), pinned per query name so
   *    a NEW unintended BNLJ anywhere in the suite fails this spec.
+  *
+  * A third check listens to Spark's hint-error logger while every gated
+  * query is planned: Spark drops a hint it cannot honor (a broadcast of
+  * the preserved side of an outer join, say) with only a warning, so the
+  * plan that runs is not the one the code asks for.
   *
   * AQE is disabled for the build (the AnnPrunedSpec discipline: AQE
   * wraps the tree in unexecuted query stages and hides exec nodes from
@@ -143,5 +154,37 @@ class PlanLintSpec extends AnyFunSuite with SparkTestSession {
       assert(bad.result().isEmpty,
         s"unwhitelisted global windows: ${bad.result().mkString(", ")}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("no gated query carries a hint Spark drops") {
+    assume(new java.io.File(dir).exists(), s"$dir not present")
+    val name = "org.apache.spark.sql.catalyst.analysis.HintErrorLogger"
+    val logger = LogManager.getLogger(name).asInstanceOf[CoreLogger]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("plan-lint-hints", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage): Unit
+    }
+    appender.start()
+    val level = logger.getLevel
+    // the session logs at ERROR; the hint errors are WARN lines
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val dropped = Queries.all.flatMap { q =>
+        lines.clear()
+        q.build(spark, dir).queryExecution.executedPlan
+        lines.asScala.filter(_.contains("is not supported"))
+          .map(l => s"${q.name}: $l")
+      }
+      assert(dropped.isEmpty, s"dropped hints:\n${dropped.mkString("\n")}")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, level)
+      appender.stop()
+    }
   }
 }

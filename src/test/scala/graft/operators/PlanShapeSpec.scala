@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -307,5 +309,18 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSession {
     val scans = rawScans(Profiling.qReferentialAudit, "lineitem")
     assert(scans.size == 1,
       s"expected ONE lineitem pass covering all three edges, found ${scans.size}")
+  }
+
+  test("q184_rank_agreement left-joins the grid to its broadcast overlap rollup") {
+    withStaticPlans {
+      val plan = Retrieval.qRankAgreement.build(spark, dir)
+        .queryExecution.executedPlan
+      val outer = plan.collect {
+        case j: BroadcastHashJoinExec if j.joinType == LeftOuter => j
+      }
+      assert(outer.size == 1 && outer.head.buildSide == BuildRight,
+        s"expected one LeftOuter broadcast hash join building its right " +
+          s"(rollup) side, got ${outer.map(j => (j.joinType, j.buildSide))}")
+    }
   }
 }

@@ -27,10 +27,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * Contract clauses (each a test):
   *  - publish/readAll round-trip with the envelope columns; empty
   *    publishes are no-ops; seeds stamp `deliveries = 0` (K4/F3);
+  *  - an `Observation` on a published frame is fulfilled over every
+  *    row, empty frames included ([[RepublishPipeline]] routes on it);
   *  - per-trigger intake never exceeds the admission bound (C3);
   *  - at-least-once under failure injection: every (seed, hop) is
   *    processed, failures are redelivered, hops increment exactly once
   *    per republish (T2/T13 — the reference part-2 feedback loop);
+  *  - past `maxDeliveries` a failure dead-letters, never redelivered;
   *  - ack = checkpoint commit: a restart resumes without reprocessing
   *    (T2 — checkpoint as the subscription cursor).
   */
@@ -68,6 +71,20 @@ trait TopicContract extends AnyFunSuite with SparkTestSession {
     assert(topic.readAll().count() == 2, "empty publish must be a no-op")
   }
 
+  test(s"[$kind] publish fulfils an Observation on its rows over every row") {
+    val base = freshBase("graft-contract-obs-")
+    val topic = makeTopic("observed", base)
+    def rows(n: Long) = spark.range(0, n, 1, 8)
+      .select(concat(lit("m"), col("id").cast("string")).as("name"),
+        lit(0).as("numPublishes"))
+    for (n <- Seq(40L, 0L)) {
+      val obs = org.apache.spark.sql.Observation()
+      topic.publish(rows(n).observe(obs, count(lit(1)).as("n")))
+      assert(obs.get("n") == n, s"observed ${obs.get} over $n published rows")
+    }
+    assert(topic.readAll().count() == 40)
+  }
+
   test(s"[$kind] rows per trigger never exceed the configured admission bound") {
     import spark.implicits._
     val base = freshBase("graft-contract-intake-")
@@ -89,6 +106,10 @@ trait TopicContract extends AnyFunSuite with SparkTestSession {
       assert(snap.maxBatchRows <= 1,
         s"a trigger admitted ${snap.maxBatchRows} rows, bound is 1")
       assert(snap.batches >= 6, "the backlog required at least 6 triggers")
+      assert(snap.lastTriggerMs > 0 && snap.maxTriggerMs > 0,
+        s"trigger timings not recorded: $snap")
+      assert(snap.lastAddBatchMs > 0 && snap.maxAddBatchMs > 0,
+        s"addBatch timings not recorded: $snap")
     } finally {
       query.stop()
       spark.streams.removeListener(gauges)
@@ -142,6 +163,49 @@ trait TopicContract extends AnyFunSuite with SparkTestSession {
       assert(redelivered == failing.toSet)
       // nothing dead-lettered (all failures succeed on redelivery)
       assert(dlq.readAll().count() == 0)
+    } finally query.stop()
+  }
+
+  test(s"[$kind] past maxDeliveries a failure dead-letters and is never redelivered") {
+    import spark.implicits._
+    val base = freshBase("graft-contract-dlq-")
+    val topic = makeTopic("wolves", base)
+    val dlq = makeTopic("wolves-dlq", base)
+    val cfg = RepublishPipeline.Config(
+      failPercent = 40, maxHops = 3, maxDeliveries = 1, admitPerTrigger = 8)
+
+    val seeds = Seq("lion", "tiger", "panther", "lynx", "puma")
+    def fails(n: String, h: Int) =
+      PolyHash.hash(s"$n#$h") % 100 < cfg.failPercent
+    // a seed's chain runs hop by hop up to its first failing hop, which
+    // dead-letters on its first delivery (maxDeliveries = 1)
+    val reached = for {
+      n <- seeds
+      h <- (0 until cfg.maxHops).takeWhile(h => h == 0 || !fails(n, h - 1))
+    } yield (n, h)
+    val failing = reached.filter { case (n, h) => fails(n, h) }
+    assert(failing.nonEmpty, "fixture must include at least one injected failure")
+
+    topic.publishSeed(seeds.map(n => (n, 0)).toDF("name", "numPublishes"))
+    val query = RepublishPipeline.start(
+      topic, dlq, s"$base/ckpt", s"republish-wolves-$kind", cfg)
+    try {
+      var prev = -1L
+      var stable = 0
+      while (stable < 2) {
+        query.processAllAvailable()
+        val cnt = topic.readAll().count() + dlq.readAll().count()
+        if (cnt == prev) stable += 1 else { stable = 0; prev = cnt }
+      }
+      val rows = topic.readAll().select("name", "numPublishes", "deliveries")
+        .as[(String, Int, Int)].collect().toSeq
+      assert(rows.map(r => (r._1, r._2)).sorted == reached.sorted,
+        s"topic holds ${rows.sorted}, expected the hops ${reached.sorted}")
+      assert(rows.forall(_._3 == 0), s"a failure was redelivered: $rows")
+      val dead = dlq.readAll().select("name", "numPublishes", "deliveries")
+        .as[(String, Int, Int)].collect().toSeq
+      assert(dead.sorted == failing.map { case (n, h) => (n, h, 1) }.sorted,
+        s"dead letters ${dead.sorted}, expected the failures ${failing.sorted}")
     } finally query.stop()
   }
 
