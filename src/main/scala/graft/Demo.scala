@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Gauges, OrderedProcessor}
+import graft.streaming.{Checkpoints, Gauges, OrderedProcessor}
 import graft.streaming.broker.{BrokerTopic, InMemoryBroker}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -40,6 +40,7 @@ object Demo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.quietWindowWarnings()
+    Checkpoints.install(spark)
     import spark.implicits._
 
     val gauges = new Gauges
@@ -76,7 +77,7 @@ object Demo {
       .queryName("demo-ordered")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[OrderedProcessor.Out], id: Long) =>
-        out.publishNonEmpty(batch.filter(col("status") === "success")
+        out.publish(batch.filter(col("status") === "success")
           .select(col("key"), col("seq"), col("name"),
             col("numPublishes"), col("attempts")))
       }
@@ -90,7 +91,7 @@ object Demo {
         s"maxBatch=${g.maxBatchRows}")
     }
     // a second wave proves steady-state flow after the retry
-    in.publishNonEmpty(demoKeys.map(k => (k, 5L, s"$k-5", 0))
+    in.publish(demoKeys.map(k => (k, 5L, s"$k-5", 0))
       .toDF("key", "seq", "name", "numPublishes").coalesce(1))
     query.processAllAvailable()
     query.stop()

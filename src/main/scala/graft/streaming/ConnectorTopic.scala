@@ -93,7 +93,6 @@ final class ConnectorTopic(val spark: SparkSession, val name: String,
   override def publish(rows: DataFrame): Unit =
     publishRecords(encodeRecords(rows))
 
-  override def publishNonEmpty(rows: DataFrame): Unit = publish(rows)
 
   override def publishSeed(rows: DataFrame): Unit =
     publish(rows.withColumn("deliveries", lit(0)))

@@ -44,7 +44,6 @@ final class FileTopic(val spark: SparkSession, val name: String, val dir: String
     }
   }
 
-  override def publishNonEmpty(rows: DataFrame): Unit = publish(rows)
 
   private def envelope(rows: DataFrame): DataFrame =
     rows

@@ -66,10 +66,15 @@ final case class FoldStore(table: String, bucket: String, schema: String,
     */
   def append(s: SparkSession, summary: DataFrame, ckpt: String,
       batchId: Long): Unit = {
+    val bid = FoldStore.batchIdColumn(batchId)
+    // the store side is filtered to this pair explicitly: a batch id that
+    // is not a literal infers no filter onto it
     summary
-      .select(lit(ckpt).as("ckpt") +: lit(batchId).as("batch_id") +:
+      .select(lit(ckpt).as("ckpt") +: bid.as("batch_id") +:
         columns.map(col): _*)
-      .join(s.table(table).select(col("ckpt"), col("batch_id")).distinct(),
+      .join(s.table(table)
+          .filter(col("ckpt") === ckpt && col("batch_id") === bid)
+          .select(col("ckpt"), col("batch_id")).distinct(),
         Seq("ckpt", "batch_id"), "left_anti")
       .write.bucketBy(FoldStore.Buckets, bucket).sortBy(bucket)
       .mode("append").saveAsTable(table)
@@ -94,7 +99,8 @@ final case class FoldStore(table: String, bucket: String, schema: String,
       val maxBid = cur.filter(col("ckpt") === activeCkpt)
         .agg(coalesce(max(col("batch_id")), lit(-1L)))
         .collect().head.getLong(0)
-      val keep = col("ckpt") === activeCkpt && col("batch_id") === maxBid
+      val keep = col("ckpt") === activeCkpt &&
+        col("batch_id") === FoldStore.batchIdColumn(maxBid)
       collapse(cur.filter(!keep))
         .select(lit("").as("ckpt") +: lit(-1L).as("batch_id") +:
           columns.map(col): _*)
@@ -120,10 +126,18 @@ final case class FoldStore(table: String, bucket: String, schema: String,
       append(spark, summary(batch), checkpointDir, batchId)
       val body = report(batchId)
       onBatch(Sinks.collected(spark, body.select(
-        lit(batchId).as("batch_id") +: body.columns.toSeq.map(col): _*)))
+        FoldStore.batchIdColumn(batchId).as("batch_id") +:
+          body.columns.toSeq.map(col): _*)))
     }
 }
 
 object FoldStore {
   val Buckets = 8
+
+  /** `batchId` as a column. It enters through a UDF: a literal would be
+    * inlined into the generated code, and every trigger would compile its
+    * stages anew.
+    */
+  private def batchIdColumn(batchId: Long): Column =
+    udf(() => batchId).asNondeterministic()()
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Semantics mapping:
   *  - **ack** (reference T2 `acknowledgeAsync`, `:57-69`) ≡ micro-batch
-  *    checkpoint commit: a batch whose `foreachBatch` body returns is
+  *    checkpoint commit (through [[Checkpoints]]): a batch whose
+  *    `foreachBatch` body returns is
   *    acked exactly once by the checkpoint — the ack-with-one-retry dance
   *    disappears because commit is transactional per batch;
   *  - **nack → broker redelivery** (reference `negativeAcknowledge`,
@@ -61,9 +62,10 @@ object RepublishPipeline {
     * checkpointing = resumability.
     */
   def start(topic: Topic, deadLetter: Topic, checkpointDir: String,
-      queryName: String, cfg: Config = Config()): StreamingQuery =
-    topic.readStream(cfg.admitPerTrigger)
-      .writeStream
+      queryName: String, cfg: Config = Config()): StreamingQuery = {
+    val input = topic.readStream(cfg.admitPerTrigger)
+    Checkpoints.install(input.sparkSession)
+    input.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime("50 milliseconds"))
@@ -72,6 +74,7 @@ object RepublishPipeline {
           topic, deadLetter, cfg)
       }
       .start()
+  }
 
   private val notBefore = coalesce(col("not_before"), lit(0L))
 
@@ -99,7 +102,7 @@ object RepublishPipeline {
       val early = guarded.filter(notBefore > lit(now))
       val now2 = System.currentTimeMillis()
       if (routeDue(early, now2, topic, deadLetter, cfg)._1 > 0)
-        topic.publishNonEmpty(early.filter(notBefore > lit(now2)))
+        topic.publish(early.filter(notBefore > lit(now2)))
     }
   }
 
@@ -135,7 +138,7 @@ object RepublishPipeline {
     val m = obs.get
     def observed(k: String): Long =
       m.get(k).collect { case v: Long => v }.getOrElse(0L)
-    if (observed("dead") > 0) deadLetter.publishNonEmpty(withDue.filter(dead)
+    if (observed("dead") > 0) deadLetter.publish(withDue.filter(dead)
       .withColumn("deliveries", retry).withColumn("not_before", lit(0L)))
     (observed("early"), observed("latest"))
   }

@@ -34,9 +34,11 @@ object Sinks {
 
   /** K1/K2: drain the stream (checkpoint-acked, rows discarded). */
   def drain(df: DataFrame, queryName: String, checkpointDir: String)
-      : StreamingQuery =
+      : StreamingQuery = {
+    Checkpoints.install(df.sparkSession)
     df.writeStream.format("noop").queryName(queryName)
       .option("checkpointLocation", checkpointDir).start()
+  }
 
   /** K3: fold a bounded control dataset into one value. */
   def fold[T](ds: Dataset[T])(op: (T, T) => T): T = ds.reduce(op)
@@ -58,7 +60,8 @@ object Sinks {
     *    compaction heals a crashed swap only on a compaction batch, but
     *    batch 0 reads the store at once;
     *  - the checkpoint (ack = checkpoint commit, at-least-once
-    *    redelivery, so every body is replay-idempotent);
+    *    redelivery, so every body is replay-idempotent), written through
+    *    [[Checkpoints]];
     *  - `compactEvery`: run `compact` before batches N, 2N, … (never
     *    batch 0; also when that batch is empty; 0 = never). Per-trigger
     *    appends add one file set per bucket or partition per batch, and
@@ -76,6 +79,7 @@ object Sinks {
       prepare: Option[DataFrame => DataFrame] = None)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
     tables.foreach(Bucketed.recover(spark, _))
+    Checkpoints.install(input.sparkSession)
     input.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -28,9 +28,6 @@ trait Topic {
     */
   def publish(rows: DataFrame): Unit
 
-  /** [[publish]] for callers that know `rows` is non-empty. */
-  def publishNonEmpty(rows: DataFrame): Unit
-
   /** Seed publish: first delivery, `deliveries = 0`. */
   def publishSeed(rows: DataFrame): Unit
 

@@ -67,7 +67,8 @@ object WindowedAgg {
     */
   def topKPerWindow(events: DataFrame, k: Int = 3,
       watermarkDelay: String = "10 minutes", windowLength: String = "1 hour")(
-      onWindow: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      onWindow: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    Checkpoints.install(events.sparkSession)
     tumbling(events, watermarkDelay, windowLength)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -81,4 +82,5 @@ object WindowedAgg {
             col("event_type"), col("cnt")))
       }
       .start()
+  }
 }

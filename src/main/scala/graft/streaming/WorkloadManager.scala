@@ -117,6 +117,8 @@ final class WorkloadManager(spark: SparkSession,
     */
   def reconcile(requested: Set[Workload]): WorkloadReport = synchronized {
     val rep = report(requested)
+    // a builder may start its query with a bare writeStream
+    Checkpoints.install(spark)
     rep.workloadsToStart.foreach { w =>
       if (!running.contains(w.workloadName)) {
         // route through Pools.withPool so the thread-local pool is restored

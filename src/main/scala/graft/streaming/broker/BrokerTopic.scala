@@ -60,7 +60,6 @@ final class BrokerTopic(val spark: SparkSession, val name: String,
   }
 
   // executor-side produce already skips empty tasks for free
-  override def publishNonEmpty(rows: DataFrame): Unit = publish(rows)
 
   override def publishSeed(rows: DataFrame): Unit =
     publish(rows.withColumn("deliveries", lit(0)))

@@ -26,7 +26,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - parquet schema inference (`.read.parquet(`) lives only in
   *    `Tables.scala`, the miss of the (path, mtime) schema memo, and in
   *    Bench's warm-up: every other read of a parquet path the engine
-  *    wrote or already read carries its known schema.
+  *    wrote or already read carries its known schema;
+  *  - the checkpoint file manager is chosen only in
+  *    `streaming/Checkpoints.scala`: every file that starts a query with
+  *    `.writeStream`, and `WorkloadManager` (whose builders may), calls
+  *    `Checkpoints.install` first.
   */
 class OwnerLintSpec extends AnyFunSuite {
 
@@ -63,5 +67,11 @@ class OwnerLintSpec extends AnyFunSuite {
 
   test("parquet schemas are inferred only by the Tables memo and Bench's warm-up") {
     assert(holders(".read.parquet(") == Set("Tables.scala", "Bench.scala"))
+  }
+
+  test("every engine stream installs the fork-free checkpoint file manager") {
+    val starters = holders(".writeStream") + "streaming/WorkloadManager.scala"
+    assert(starters.diff(holders("Checkpoints.install")).isEmpty)
+    assert(holders("checkpointFileManagerClass") == Set("streaming/Checkpoints.scala"))
   }
 }

@@ -61,7 +61,7 @@ class Part5PipelineSpec extends AnyFunSuite with SparkTestSession {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Out], _: Long) =>
           // the reference processor republishes PROCESSED messages
           // (part5/OrderedMessageProcessor.scala:28-29): successes only
-          out.publishNonEmpty(batch.filter(col("status") === "success")
+          out.publish(batch.filter(col("status") === "success")
             .select(col("key"), col("seq"), col("name"),
               col("numPublishes"), col("attempts")))
         }
