@@ -37,36 +37,13 @@ object Dedup {
 
   // ---- engine-side building blocks --------------------------------------
 
-  /** Exploded (doc_id, h) rows: h = distinct PolyHash per word-3-gram.
-    * [[WordShingleHashes]] tokenizes + shingles + hashes + dedups in one
-    * codegen'd pass per row (the composed split/slice/zip_with/transform
-    * form evaluated its lambdas interpreted).
-    */
-  private[graft] def shingleHashRows(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(WordShingleHashes(col("text"), 3)).as("h"))
-
-  /** One hash-aggregate producing the MinHash signature columns mh0..mh15
-    * (plus optionally the full shingle-hash set for Jaccard verification).
-    *
-    * r19: the LEGACY aggregate formulation — production paths use the
-    * map-side [[minhashSigs]] (DocKernelsSpec pins the two equivalent);
-    * kept as the spec's reference definition.
-    */
-  private[graft] def minhashAgg(rows: DataFrame, withSet: Boolean): DataFrame = {
-    val mins = (0 until NumHashes).map { j =>
-      min((lit(permA(j)) * col("h") + lit(permB(j))) % P).as(s"mh$j")
-    }
-    val aggs = if (withSet) mins :+ collect_set(col("h")).as("H") else mins
-    rows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** r19: the signature frame (doc_id, mh0..mh15[, H]) computed MAP-SIDE
     * — [[graft.functions.MinHashSig]] over the per-doc distinct
     * shingle-hash array inside the scan projection, replacing the
-    * corpus-scale explode → shuffle → 16-min + collect_set aggregate of
-    * [[minhashAgg]] (guide §2.4: remove shuffles outright; collect_set
-    * is an object-hash aggregate on top). Zero-shingle docs are filtered
+    * corpus-scale explode → shuffle → 16-min + collect_set aggregate
+    * that DocKernelsSpec keeps as its legacy reference (guide §2.4:
+    * remove shuffles outright; collect_set is an object-hash aggregate
+    * on top). Zero-shingle docs are filtered
     * exactly like the legacy explode dropped them (the oracle's
     * `len(H) > 0`); H is the kernel's first-occurrence distinct array —
     * same SET as collect_set with a different order, and every consumer

@@ -163,8 +163,9 @@ object Bucketed {
   }
 
   /** [[compact]] that also DROPS DUPLICATE ROWS in the rewrite — for
-    * stores whose replay contract can double-append (SpanStream's
-    * crash window between its span and manifest appends).
+    * stores whose replay contract can double-append (the
+    * [[graft.streaming.KeyedStore]] crash window between the child and
+    * manifest appends).
     */
   def compactDistinct(s0: SparkSession, table: String, buckets: Int,
       key: String, moreKeys: String*): Unit =

@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.functions.{Exact, PolyHash, ProbeCentroids}
 import graft.operators.{Retrieval, Scratch}
+import graft.streaming.KeyedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * takes it explicitly so store and gated query share ONE ranking
   * definition ([[graft.functions.ProbeCentroids]]).
   *
-  * Two tables:
+  * Two tables, a [[KeyedStore]]:
   *  - `a2(acid, vec_id, qe)` — every stored vector under BOTH of its 2
   *    nearest centroids (q227's assignment), bucketed by `acid`, the
   *    probe key: probing a micro-batch prunes the store to the batch's
@@ -31,20 +32,18 @@ import org.apache.spark.sql.functions._
   * batch cell counts), so per-batch verdicts legitimately depend on
   * ingest order; [[verdicts]] after full ingest is order-independent
   * and bit-identical to the batch q227 (EmbedDedupStreamSpec pins it).
-  *
-  * Crash window (the IndexStore/WinnowStore precedent): a2 rows append
-  * BEFORE the vecs manifest, so a crash between the writes followed by
-  * checkpoint replay re-appends the batch's (acid, vec_id, qe) rows
-  * EXACTLY (2 distinct cells per vector by construction);
-  * [[compact]]'s compactDistinct rewrite heals them, and the order can
-  * never silently drop a vector.
   */
 object EmbedStore {
 
   val A2Buckets = 8
   val VecBuckets = 16
 
-  final case class Store(a2: String, vecs: String)
+  final case class Store(a2: String, vecs: String) {
+    /** `a2` the child, `vecs` the manifest, keyed on `vec_id`. */
+    def keyed: KeyedStore = KeyedStore(Seq("vec_id"), Seq(
+      KeyedStore.Table(a2, A2Buckets, "acid"),
+      KeyedStore.Table(vecs, VecBuckets, "vec_id")))
+  }
 
   /** The 2-nearest assignment rows `(acid, vec_id, qe)` — exactly
     * q227's `semMultiAssign` explosion, shared store/probe/append.
@@ -61,48 +60,23 @@ object EmbedStore {
       element_at(ProbeCentroids(col("qe"), cents, 2), 1).as("cid"),
       col("qe"))
 
+  private def rows(v: DataFrame, cents: Seq[Seq[Long]]): Seq[DataFrame] =
+    Seq(assignRows(v, cents), vecRows(v, cents))
+
   /** Create (or overwrite) the store from a (vec_id, qe) frame. */
   def build(s: SparkSession, vecs: DataFrame, cents: Seq[Seq[Long]],
       tag: String): Store = {
     val t = Store(s"graft_embeda2_$tag", s"graft_embedvecs_$tag")
-    Bucketed.dropStale(s, t.a2)
-    Bucketed.dropStale(s, t.vecs)
-    Bucketed.write(assignRows(vecs, cents), t.a2, A2Buckets, "acid")
-    Bucketed.write(vecRows(vecs, cents), t.vecs, VecBuckets, "vec_id")
+    t.keyed.build(s, rows(vecs, cents))
     t
   }
 
-  /** Idempotent upsert (the SignatureStore/WinnowStore contract): the
-    * batch anti-joins the vec_id-bucketed manifest (store side
-    * exchange-free, batch side batch-sized) and appends with the SAME
-    * bucket specs. See the object doc for the a2-before-manifest crash
-    * window.
+  /** Upsert a (vec_id, qe) batch through [[KeyedStore.append]]:
+    * replay-idempotent per vec_id, appended with the SAME bucket specs.
     */
   def append(s: SparkSession, t: Store, cents: Seq[Seq[Long]],
-      batch: DataFrame): Unit = {
-    val fresh = batch
-      .join(s.table(t.vecs).select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .persist()
-    try {
-      assignRows(fresh, cents)
-        .write.bucketBy(A2Buckets, "acid").sortBy("acid")
-        .mode("append").saveAsTable(t.a2)
-      vecRows(fresh, cents)
-        .write.bucketBy(VecBuckets, "vec_id").sortBy("vec_id")
-        .mode("append").saveAsTable(t.vecs)
-      s.catalog.refreshTable(t.a2)
-      s.catalog.refreshTable(t.vecs)
-    } finally fresh.unpersist(): Unit
-  }
-
-  /** Compact per-batch append files; compactDistinct is a no-op in
-    * normal operation (rows distinct per key by construction) and
-    * heals exactly the append crash-window replays.
-    */
-  def compact(s: SparkSession, t: Store): Unit = {
-    Bucketed.compactDistinct(s, t.a2, A2Buckets, "acid")
-    Bucketed.compactDistinct(s, t.vecs, VecBuckets, "vec_id")
-  }
+      batch: DataFrame): Unit =
+    t.keyed.append(s, batch)(rows(_, cents))
 
   /** Full-corpus q227 verdicts FROM THE STORE — order-independent,
     * bit-identical to the gated `q227_semdedup_multi` over the same

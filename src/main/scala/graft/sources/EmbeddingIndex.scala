@@ -52,13 +52,6 @@ object EmbeddingIndex {
       Tables.load(s, dir, "embeddings").select("vec_id", "embedding"),
       Scratch.dirHash(dir)))
 
-  /** Upsert with the same bucket spec (probe first: caller guarantees
-    * new vec_ids).
-    */
-  def append(s: SparkSession, table: String, emb: DataFrame): Unit =
-    indexRows(emb).write.bucketBy(Buckets, "band", "bh").sortBy("band", "bh")
-      .mode("append").saveAsTable(table)
-
   /** IDEMPOTENT upsert for the at-least-once streaming front door: a
     * replayed micro-batch re-offers vec_ids that are already indexed.
     * Already-stored detection rides the (band, bh) equi-join — the
@@ -66,7 +59,9 @@ object EmbeddingIndex {
     * equality is an extra predicate on the same join: equal vec_ids
     * imply equal band hashes, so co-location on (band, bh) suffices) —
     * and the anti-join drops re-offered vectors instead of duplicating
-    * their index rows forever.
+    * their index rows forever. This guard is why the index is no
+    * [[graft.streaming.KeyedStore]]: it rides the (band, bh) bucketing,
+    * and there is no vec_id-bucketed manifest to anti-join.
     */
   def appendFresh(s: SparkSession, table: String, emb: DataFrame): Unit = {
     val rows = indexRows(emb)

@@ -35,9 +35,8 @@ import org.apache.spark.sql.functions._
   * apply per hour/day alongside compaction (each purge IS a
   * compaction); for corpus-scale erasure, rebuild the store instead.
   *
-  * The streaming span stores (SpanStream / CleanStream position tables)
-  * purge with the identical [[Bucketed.purgeBucketed]] call on their
-  * doc-keyed tables — same row-local layout discipline.
+  * The keyed stores purge through [[graft.streaming.KeyedStore.purge]],
+  * children first.
   */
 object Forget {
 
@@ -45,25 +44,14 @@ object Forget {
     * (the doc stops being a candidate), then its shingle-hash sets.
     */
   def signatures(s: SparkSession, t: SignatureStore.Store,
-      docIds: Seq[Long]): Unit = {
-    Bucketed.purgeBucketed(s, t.bands, SignatureStore.Buckets, "bk", Nil,
-      "doc_id", docIds)
-    Bucketed.purgeBucketed(s, t.sig, SignatureStore.Buckets, "doc_id", Nil,
-      "doc_id", docIds)
-  }
+      docIds: Seq[Long]): Unit = t.keyed.purge(s, docIds)
 
   /** Erase `docIds` from an inverted index: postings first (the doc
     * stops being served), then the manifest rows — N and D are manifest
     * aggregates, so the corpus stats shift exactly as a rebuild would.
     */
-  def index(s: SparkSession, t: IndexStore.Store, docIds: Seq[Long]): Unit = {
-    Bucketed.purgeBucketed(s, t.postings, IndexStore.Buckets, "tok", Nil,
-      "doc_id", docIds)
-    Bucketed.purgeBucketed(s, t.manifest, IndexStore.Buckets, "doc_id", Nil,
-      "doc_id", docIds)
-    s.catalog.refreshTable(t.postings)
-    s.catalog.refreshTable(t.manifest)
-  }
+  def index(s: SparkSession, t: IndexStore.Store, docIds: Seq[Long]): Unit =
+    t.keyed.purge(s, docIds)
 
   /** Erase `vecIds` from a banded sign-LSH embedding index
     * ([[EmbeddingIndex]] layout: bucketed by (band, bh), rows carry the
@@ -93,12 +81,7 @@ object Forget {
     * rebuild's.
     */
   def spanStore(s: SparkSession, t: graft.streaming.SpanStream.Store,
-      docIds: Seq[Long]): Unit = {
-    Bucketed.purgeBucketed(s, t.spanTable, graft.streaming.SpanStream.Buckets,
-      "h", Nil, "doc_id", docIds)
-    Bucketed.purgeBucketed(s, t.docTable, graft.streaming.SpanStream.Buckets,
-      "doc_id", Nil, "doc_id", docIds)
-  }
+      docIds: Seq[Long]): Unit = t.keyed.purge(s, docIds)
 
   /** Erase `docIds` from a streaming positioned-span store
     * ([[graft.streaming.CleanStream]]). The tombstone list is RETAINED:
@@ -111,12 +94,7 @@ object Forget {
     * store if the sink must also forget).
     */
   def cleanStore(s: SparkSession, t: graft.streaming.CleanStream.Store,
-      docIds: Seq[Long]): Unit = {
-    Bucketed.purgeBucketed(s, t.posTable, graft.streaming.CleanStream.Buckets,
-      "h", Nil, "doc_id", docIds)
-    Bucketed.purgeBucketed(s, t.docTable, graft.streaming.CleanStream.Buckets,
-      "doc_id", Nil, "doc_id", docIds)
-  }
+      docIds: Seq[Long]): Unit = t.keyed.purge(s, docIds)
 
   /** Erase `docIds` from the incremental dedup-graph store
     * ([[graft.streaming.GraphStream]]) — the one layout where a delete

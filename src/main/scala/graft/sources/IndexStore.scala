@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.operators.Scratch
+import graft.streaming.KeyedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    per-term rows, never a corpus scan;
   *  - `manifest(doc_id, dl)` — one row per indexed document, bucketed
   *    by `doc_id`: the corpus stats side (N, total tokens D) and the
-  *    idempotent-append guard (the [[SignatureStore]] discipline).
+  *    idempotent-append guard of the [[KeyedStore]].
   *
   * tf/dl from explode + hash-agg are bit-identical to q93's
   * bracketed-replace counts (both count exact whole-token occurrences),
@@ -33,7 +34,12 @@ object IndexStore {
 
   val Buckets = 16
 
-  final case class Store(postings: String, manifest: String)
+  final case class Store(postings: String, manifest: String) {
+    /** `postings` the child, `manifest` the manifest, keyed on `doc_id`. */
+    def keyed: KeyedStore = KeyedStore(Seq("doc_id"), Seq(
+      KeyedStore.Table(postings, Buckets, "tok"),
+      KeyedStore.Table(manifest, Buckets, "doc_id")))
+  }
 
   /** (postings rows, manifest rows) for a (doc_id, text) frame: one
     * token explosion + two map-side-combinable aggs.
@@ -49,16 +55,17 @@ object IndexStore {
     (post, man)
   }
 
+  private def rows(docs: DataFrame): Seq[DataFrame] = {
+    val (post, man) = postingsOf(docs)
+    Seq(post, man)
+  }
+
   /** Create (or overwrite) the store from a corpus — one-time layout
     * cost, like [[Bucketed]]'s CTAS.
     */
   def build(s: SparkSession, docs: DataFrame, tag: String): Store = {
     val t = Store(s"graft_post_$tag", s"graft_docman_$tag")
-    Bucketed.dropStale(s, t.postings)
-    Bucketed.dropStale(s, t.manifest)
-    val (post, man) = postingsOf(docs)
-    Bucketed.write(post, t.postings, Buckets, "tok")
-    Bucketed.write(man, t.manifest, Buckets, "doc_id")
+    t.keyed.build(s, rows(docs))
     t
   }
 
@@ -71,31 +78,12 @@ object IndexStore {
       Tables.load(s, dir, "documents").select("doc_id", "text"),
       Scratch.dirHash(dir)))
 
-  /** Idempotent upsert: index the batch's documents not already in the
-    * manifest (anti-join on `doc_id` — the store side is bucketed, so
-    * only the tiny batch shuffles), appending postings and manifest.
-    * Replay-safe: a re-delivered batch's docs are manifested and drop
-    * out. Refreshes the caller's relation caches (the micro-batch
-    * session-clone rule).
-    *
-    * Crash window (the SpanStream precedent): postings append BEFORE
-    * manifest append, so a crash between them re-indexes the batch on
-    * replay and duplicates its postings rows EXACTLY (same (tok,
-    * doc_id, tf, dl)); the periodic [[Bucketed.compactDistinct]] in
-    * [[graft.streaming.IndexStream]]'s hook heals them, and they can
-    * never drop a document (the manifest-first order would lose
-    * postings silently instead — the worse failure).
+  /** Index a (doc_id, text) batch: its [[KeyedStore.fresh]] rows,
+    * [[KeyedStore.commit]]ted, replay-idempotent per doc_id. Until a
+    * crash-window duplicate heals, it doubles that batch's tf. The fresh
+    * rows are not persisted: both frames read them through one self-joined
+    * aggregate, and a persisted input costs the trigger a job (measured).
     */
-  def append(s: SparkSession, t: Store, docs: DataFrame): Unit = {
-    val fresh = docs
-      .join(s.table(t.manifest).select(col("doc_id")), Seq("doc_id"),
-        "left_anti")
-    val (post, man) = postingsOf(fresh)
-    post.write.bucketBy(Buckets, "tok").sortBy("tok")
-      .mode("append").saveAsTable(t.postings)
-    man.write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-      .mode("append").saveAsTable(t.manifest)
-    s.catalog.refreshTable(t.postings)
-    s.catalog.refreshTable(t.manifest)
-  }
+  def append(s: SparkSession, t: Store, docs: DataFrame): Unit =
+    t.keyed.commit(s, rows(t.keyed.fresh(s, docs)))
 }

@@ -3,6 +3,7 @@ package graft.sources
 import graft.Tables
 import graft.functions.PolyHash
 import graft.operators.{Dedup, Scratch}
+import graft.streaming.KeyedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +29,7 @@ import org.apache.spark.sql.functions._
   * scan, [[pairs]]) is exchange-free on BOTH sides for the same reason.
   *
   * All signature math is the ONE definition shared with the batch
-  * pipeline ([[Dedup.minhashAgg]]/[[Dedup.bandHash]]) — a store row is
+  * pipeline ([[Dedup.minhashSigs]]/[[Dedup.bandHash]]) — a store row is
   * bit-identical to what q22/q23 compute from raw text, so store-derived
   * results stay oracle-checkable against DuckDB recomputing from text.
   */
@@ -37,7 +38,12 @@ object SignatureStore {
   private val P = PolyHash.P
   val Buckets = 16
 
-  final case class Store(sig: String, bands: String)
+  final case class Store(sig: String, bands: String) {
+    /** `bands` the child, `sig` the manifest, keyed on `doc_id`. */
+    def keyed: KeyedStore = KeyedStore(Seq("doc_id"), Seq(
+      KeyedStore.Table(bands, Buckets, "bk"),
+      KeyedStore.Table(sig, Buckets, "doc_id")))
+  }
 
   /** (sig rows, band rows) for a (doc_id, text) DataFrame — fully
     * map-side since r19 ([[Dedup.minhashSigs]]: shingle + signature
@@ -61,12 +67,14 @@ object SignatureStore {
     */
   def build(s: SparkSession, docs: DataFrame, tag: String): Store = {
     val t = Store(s"graft_sig_$tag", s"graft_band_$tag")
-    Bucketed.dropStale(s, t.sig)
-    Bucketed.dropStale(s, t.bands)
-    val (sig, bands) = sigAndBands(docs)
-    Bucketed.write(sig, t.sig, Buckets, "doc_id")
-    Bucketed.write(bands, t.bands, Buckets, "bk")
+    t.keyed.build(s, rows(docs))
     t
+  }
+
+  /** (band rows, sig rows): [[sigAndBands]] in the store's table order. */
+  private def rows(docs: DataFrame): Seq[DataFrame] = {
+    val (sig, bands) = sigAndBands(docs)
+    Seq(bands, sig)
   }
 
   // store per sf directory, memoized like Bucketed.prepared
@@ -78,41 +86,12 @@ object SignatureStore {
       Tables.load(s, dir, "documents").select("doc_id", "text"),
       Scratch.dirHash(dir)))
 
-  /** Upsert: append a batch's signatures/bands with the SAME bucket
-    * spec, so later probes stay exchange-free on the store side (each
-    * bucket is a file set; appends add files per bucket, never reshuffle
-    * existing ones).
-    *
-    * IDEMPOTENT per doc_id: a replayed micro-batch (foreachBatch is
-    * at-least-once — a crash after this append re-delivers the batch)
-    * re-offers doc_ids that are already stored; the anti-join against
-    * the sig table (bucketed by doc_id — exchange-free on the store
-    * side, only the tiny batch shuffles) drops them instead of silently
-    * duplicating sig/band rows forever. Bands are written BEFORE sig:
-    * a crash between the two writes then leaves at worst duplicate band
-    * rows for one batch (harmless — candidates are DISTINCTed), never a
-    * stored signature whose bands are missing (which would permanently
-    * hide the doc from future probes).
+  /** Upsert a (doc_id, text) batch through [[KeyedStore.append]]:
+    * replay-idempotent per doc_id, appended with the SAME bucket specs,
+    * so later probes stay exchange-free on the store side.
     */
-  def append(s: SparkSession, t: Store, docs: DataFrame): Unit = {
-    val fresh = docs.join(s.table(t.sig).select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    val (sig, bands) = sigAndBands(fresh)
-    bands.write.bucketBy(Buckets, "bk").sortBy("bk")
-      .mode("append").saveAsTable(t.bands)
-    sig.write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-      .mode("append").saveAsTable(t.sig)
-  }
-
-  /** Compact the store's tables ([[Bucketed.compact]]): per-batch
-    * appends add one file set per bucket per batch (the streaming front
-    * door appends every trigger); the rewrite merges them to one file
-    * per bucket without changing rows, bucketing, or probe plans.
-    */
-  def compact(s: SparkSession, t: Store): Unit = {
-    Bucketed.compact(s, t.sig, Buckets, "doc_id")
-    Bucketed.compact(s, t.bands, Buckets, "bk")
-  }
+  def append(s: SparkSession, t: Store, docs: DataFrame): Unit =
+    t.keyed.append(s, docs)(rows)
 
   /** Probe a (doc_id, text) micro-batch against the store: every
     * verified near-dup `(doc_id, dup_of, jaccard)` where `dup_of` is an

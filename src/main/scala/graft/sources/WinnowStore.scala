@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables
 import graft.operators.{Dedup, Scratch}
+import graft.streaming.KeyedStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * 100 TB to ask "does this new document share a passage with anything
   * we already hold".
   *
-  * Two tables (the IndexStore postings+manifest discipline):
+  * Two tables, a [[KeyedStore]]:
   *  - `fp(doc_id, fp)` — each document's winnowing-selected
   *    fingerprints ([[Dedup.winnowFingerprints]], the ONE selection
   *    definition shared with the gated query), bucketed by `fp`, the
@@ -44,15 +45,21 @@ object WinnowStore {
 
   val Buckets = 16
 
-  final case class Store(fp: String, docs: String)
+  final case class Store(fp: String, docs: String) {
+    /** `fp` the child, `docs` the manifest, keyed on `doc_id`. */
+    def keyed: KeyedStore = KeyedStore(Seq("doc_id"), Seq(
+      KeyedStore.Table(fp, Buckets, "fp"),
+      KeyedStore.Table(docs, Buckets, "doc_id")))
+  }
+
+  /** (fp rows, manifest rows) of a (doc_id, text) frame. */
+  private def rows(docs: DataFrame): Seq[DataFrame] =
+    Seq(Dedup.winnowFingerprints(docs), docs.select(col("doc_id")))
 
   /** Create (or overwrite) the store from a (doc_id, text) corpus. */
   def build(s: SparkSession, docs: DataFrame, tag: String): Store = {
     val t = Store(s"graft_winnow_$tag", s"graft_winnowdocs_$tag")
-    Bucketed.dropStale(s, t.fp)
-    Bucketed.dropStale(s, t.docs)
-    Bucketed.write(Dedup.winnowFingerprints(docs), t.fp, Buckets, "fp")
-    Bucketed.write(docs.select(col("doc_id")), t.docs, Buckets, "doc_id")
+    t.keyed.build(s, rows(docs))
     t
   }
 
@@ -65,49 +72,13 @@ object WinnowStore {
       Tables.load(s, dir, "documents").select("doc_id", "text"),
       Scratch.dirHash(dir)))
 
-  /** Upsert a (doc_id, text) batch with the SAME bucket spec (appends
-    * add files per bucket, never reshuffle existing ones). IDEMPOTENT
-    * per doc_id — the SignatureStore.append contract: a replayed
-    * micro-batch's doc_ids anti-join against the MANIFEST (doc_id-
-    * bucketed: store side exchange-free, batch side batch-sized) and
-    * fold nothing twice.
-    *
-    * Crash window (the IndexStore/SpanStream precedent): fp rows append
-    * BEFORE the docs manifest, so a crash between the two writes
-    * followed by checkpoint replay re-appends the batch's (doc_id, fp)
-    * rows EXACTLY (winnowFingerprints is distinct per (doc_id, fp), so
-    * the replay duplicates rows bit-for-bit); [[compact]]'s
-    * compactDistinct rewrite heals them, and the order can never drop a
-    * document (manifest-first would silently lose fingerprints — the
-    * worse failure). Until compaction runs, duplicated fp rows double
-    * that batch's contribution to `ns`/`shared` in [[probe]] — the same
-    * pre-heal skew IndexStore documents for tf.
+  /** Upsert a (doc_id, text) batch through [[KeyedStore.append]]:
+    * replay-idempotent per doc_id, appended with the SAME bucket specs.
+    * Until a crash-window duplicate heals, it doubles that batch's
+    * contribution to `ns`/`shared` in [[probe]].
     */
-  def append(s: SparkSession, t: Store, docs: DataFrame): Unit = {
-    val fresh = docs.join(s.table(t.docs), Seq("doc_id"), "left_anti")
-      .persist()
-    try {
-      Dedup.winnowFingerprints(fresh)
-        .write.bucketBy(Buckets, "fp").sortBy("fp")
-        .mode("append").saveAsTable(t.fp)
-      fresh.select(col("doc_id"))
-        .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-        .mode("append").saveAsTable(t.docs)
-      s.catalog.refreshTable(t.fp)
-      s.catalog.refreshTable(t.docs)
-    } finally fresh.unpersist(): Unit
-  }
-
-  /** Compact per-batch append files to one file set per bucket. The fp
-    * table goes through [[Bucketed.compactDistinct]]: rows are distinct
-    * per (doc_id, fp) by construction ([[Dedup.winnowFingerprints]]'s
-    * `.distinct()`), so the rewrite's dedupe is a no-op in normal
-    * operation and heals exactly the [[append]] crash-window replays.
-    */
-  def compact(s: SparkSession, t: Store): Unit = {
-    Bucketed.compactDistinct(s, t.fp, Buckets, "fp")
-    Bucketed.compactDistinct(s, t.docs, Buckets, "doc_id")
-  }
+  def append(s: SparkSession, t: Store, docs: DataFrame): Unit =
+    t.keyed.append(s, docs)(rows)
 
   /** Full-corpus scored near-dup pairs FROM THE STORE — the q213
     * result without touching raw text: df cap, self-join and scoring

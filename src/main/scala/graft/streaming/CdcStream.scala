@@ -29,7 +29,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * rewrite every touched partition per trigger AND self-read the
   * table). Read amplification is bounded by [[compact]], which
   * collapses the log to one row per key — run it on the maintenance
-  * cadence, like `SignatureStore.compact`.
+  * cadence, like `KeyedStore.compact`.
   */
 object CdcStream {
 

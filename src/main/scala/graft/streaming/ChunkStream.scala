@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.TextAnalysis
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -16,22 +15,24 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale shape: the chunk explosion + per-hash aggregation are map-side
   * over the admission-bounded batch; the store is BUCKETED by chunk
   * hash, so the probe anti-join and the idempotent append shuffle only
-  * the tiny batch side (the [[graft.sources.SignatureStore]]
-  * discipline); store growth is bounded by DISTINCT chunk volume, not
-  * ingest volume.
+  * the tiny batch side; store growth is bounded by DISTINCT chunk
+  * volume, not ingest volume.
   *
-  * Failure/replay contract: foreachBatch is at-least-once. The STORE
-  * stays exact under replay — the append anti-joins the store on `h`,
-  * so re-delivered chunks append nothing twice. Per-batch reports carry
-  * `batch_id`; a consumer needing exactly-once accounting dedupes on it
-  * (a replayed batch may re-report with `chunks_new = 0` once its
-  * chunks are stored).
+  * Failure/replay contract: the store is a one-table [[KeyedStore]]
+  * keyed on `h`, so re-delivered chunks append nothing. Per-batch
+  * reports carry `batch_id`; a consumer needing exactly-once accounting
+  * dedupes on it (a replayed batch may re-report with `chunks_new = 0`
+  * once its chunks are stored).
   */
 object ChunkStream {
 
   val Buckets = 16
 
-  final case class Store(table: String)
+  final case class Store(table: String) {
+    /** The chunk table, its own manifest, keyed on `h`. */
+    def keyed: KeyedStore =
+      KeyedStore(Seq("h"), Seq(KeyedStore.Table(table, Buckets, "h")))
+  }
 
   /** Per-batch chunk summary: (h, occ, tok) — one row per distinct
     * chunk hash with its occurrence count and token length. Delegates
@@ -44,20 +45,13 @@ object ChunkStream {
   def build(s: SparkSession, tag: String): Store = {
     import s.implicits._
     val t = Store(s"graft_chunk_$tag")
-    Bucketed.dropStale(s, t.table)
-    Bucketed.write(Seq.empty[(Long, Long)].toDF("h", "tok"),
-      t.table, Buckets, "h")
+    t.keyed.build(s, Seq(Seq.empty[(Long, Long)].toDF("h", "tok")))
     t
   }
 
-  /** Idempotent upsert: append the batch's chunks not already stored
-    * (anti-join on `h` — exchange-free on the bucketed store side).
-    */
-  def append(s: SparkSession, t: Store, chunks: DataFrame): Unit =
-    chunks.select(col("h"), col("tok"))
-      .join(s.table(t.table).select(col("h")), Seq("h"), "left_anti")
-      .write.bucketBy(Buckets, "h").sortBy("h")
-      .mode("append").saveAsTable(t.table)
+  /** The stored rows of the [[KeyedStore.fresh]] chunks. */
+  def rows(fresh: DataFrame): Seq[DataFrame] =
+    Seq(fresh.select(col("h"), col("tok")))
 
   /** Store-level KPI — the q126 columns derivable from the store alone. */
   def stats(s: SparkSession, t: Store): DataFrame =
@@ -65,49 +59,36 @@ object ChunkStream {
       count(lit(1)).as("chunks_distinct"),
       coalesce(sum(col("tok")), lit(0L)).as("tokens_distinct"))
 
-  /** The incremental front door: per micro-batch, chunk + probe +
-    * report + upsert. `onBatch` receives ONE report row per non-empty
-    * batch: (batch_id, chunks_total, chunks_new, tokens_total,
-    * tokens_new) where `new` counts chunks absent from the store BEFORE
-    * this batch (probe-then-append, the CurationStream order: a batch's
-    * chunks are visible to the NEXT batch's probe, never its own).
+  /** The incremental front door: per micro-batch, chunk, then
+    * [[KeyedStore.append]] with the report taken between the probe and
+    * the commit. `onBatch` receives ONE report row per non-empty batch:
+    * (batch_id, chunks_total, chunks_new, tokens_total, tokens_new)
+    * where `new` counts chunks absent from the store BEFORE this batch
+    * (probe-then-append, the CurationStream order: a batch's chunks are
+    * visible to the NEXT batch's probe, never its own).
     *
     * @param compactEvery see [[Sinks.ingest]]; the compaction is
-    *   [[Bucketed.compact]] on the store
+    *   [[KeyedStore.compact]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, onBatch: DataFrame => Unit,
       compactEvery: Int = 0): StreamingQuery =
-    Sinks.ingest(spark, docs, checkpointDir, Seq(store.table), compactEvery,
-        () => Bucketed.compact(spark, store.table, Buckets, "h"),
-        Some(chunksOf)) { (ch, batchId) =>
-      val flagged = ch.join(
-          spark.table(store.table).select(col("h"), lit(1).as("stored")),
-          Seq("h"), "left").persist()
-      try {
-        // the report is collected before the append mutates the store
-        // (the lazy-frame rule, Sinks.collected)
-        onBatch(Sinks.collected(spark, flagged.agg(
-          lit(batchId).as("batch_id"),
-          sum(col("occ")).as("chunks_total"),
-          count(when(col("stored").isNull, 1)).as("chunks_new"),
-          sum(col("occ") * col("tok")).as("tokens_total"),
-          coalesce(sum(when(col("stored").isNull, col("tok"))), lit(0L))
-            .as("tokens_new"))))
-        // `flagged.filter(stored IS NULL)` IS the anti-join result
-        // against the pre-append store — write it directly instead of
-        // routing through append()'s anti-join (which would scan the
-        // growing store a second time per trigger). Replay-safe: a
-        // re-delivered batch recomputes the filter against the
-        // post-append store and writes nothing.
-        flagged.filter(col("stored").isNull).select(col("h"), col("tok"))
-          .write.bucketBy(Buckets, "h").sortBy("h")
-          .mode("append").saveAsTable(store.table)
-        // the append runs through the micro-batch session clone and
-        // relation caches are per-session: refresh the coordinating
-        // session's view so the next probe and any stats() reader see
-        // this batch's files (the ProductQuant.appendFresh rule)
-        spark.catalog.refreshTable(store.table)
-      } finally flagged.unpersist()
+    Sinks.ingest(spark, docs, checkpointDir, store.keyed.names, compactEvery,
+        () => store.keyed.compact(spark), Some(chunksOf)) { (ch, batchId) =>
+      store.keyed.append(spark, ch) { fresh =>
+        // collected before the commit mutates the store (Sinks.collected)
+        onBatch(Sinks.collected(spark, ch
+          .select(col("occ"), col("tok"), lit(false).as("new"))
+          .unionByName(
+            fresh.select(col("occ"), col("tok"), lit(true).as("new")))
+          .agg(lit(batchId).as("batch_id"),
+            sum(when(!col("new"), col("occ"))).as("chunks_total"),
+            count(when(col("new"), 1)).as("chunks_new"),
+            sum(when(!col("new"), col("occ") * col("tok")))
+              .as("tokens_total"),
+            coalesce(sum(when(col("new"), col("tok"))), lit(0L))
+              .as("tokens_new"))))
+        rows(fresh)
+      }
     }
 }

@@ -28,15 +28,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch's positioned spans against the h-BUCKETED store (exchange-free
   * on the store side), the in-batch self-join is batch-sized, the
   * extent windows run over candidate rows only, and the splice is one
-  * pass over the batch. The doc-id manifest makes replay a no-op
-  * (at-least-once foreachBatch): a replayed batch cleans nothing and
-  * appends nothing. Spans append before the manifest commits — the
-  * SpanStream crash-window choice (duplication is recoverable via
-  * [[compact]]'s DISTINCT rewrite; loss would not be). In that window
-  * (spans committed, manifest not) the replay re-runs the batch against
-  * a stored side stripped of the batch's own spans, so it emits the
-  * SAME cleaned rows as the crashed attempt and the duplicate span
-  * rows heal at the next compact.
+  * pass over the batch. Replay and the spans-before-manifest crash
+  * window are the [[KeyedStore]] contract: a replayed batch cleans
+  * nothing and appends nothing, and a replay in the crash window re-runs
+  * the batch against a stored side stripped of the batch's own spans,
+  * so it emits the SAME cleaned rows as the crashed attempt.
   *
   * No df cap on the DEFAULT probe: the batch store's cap is a
   * corpus-global skew guard, but a stream cannot know a span's final
@@ -68,21 +64,26 @@ object CleanStream {
   val Buckets = 16
 
   final case class Store(posTable: String, docTable: String,
-      tombTable: String)
+      tombTable: String) {
+    /** `posTable` the child, `docTable` the manifest, keyed on `doc_id`. */
+    def keyed: KeyedStore = KeyedStore(Seq("doc_id"), Seq(
+      KeyedStore.Table(posTable, Buckets, "h"),
+      KeyedStore.Table(docTable, Buckets, "doc_id")))
+
+    /** The tombstone list, its own manifest, keyed on `h`. */
+    def tomb: KeyedStore =
+      KeyedStore(Seq("h"), Seq(KeyedStore.Table(tombTable, Buckets, "h")))
+  }
 
   /** Create (or overwrite) an empty positioned-span store. */
   def build(s: SparkSession, tag: String): Store = {
     import s.implicits._
     val t = Store(s"graft_clean_$tag", s"graft_clean_docs_$tag",
       s"graft_clean_tomb_$tag")
-    Bucketed.dropStale(s, t.posTable)
-    Bucketed.dropStale(s, t.docTable)
-    Bucketed.dropStale(s, t.tombTable)
-    Bucketed.write(Seq.empty[(Long, Long, Long)].toDF("doc_id", "pos", "h"),
-      t.posTable, Buckets, "h")
-    Bucketed.write(Seq.empty[Long].toDF("doc_id"),
-      t.docTable, Buckets, "doc_id")
-    Bucketed.write(Seq.empty[Long].toDF("h"), t.tombTable, Buckets, "h")
+    t.keyed.build(s, Seq(
+      Seq.empty[(Long, Long, Long)].toDF("doc_id", "pos", "h"),
+      Seq.empty[Long].toDF("doc_id")))
+    t.tomb.build(s, Seq(Seq.empty[Long].toDF("h")))
     t
   }
 
@@ -100,8 +101,7 @@ object CleanStream {
   def cleanAndIngest(s: SparkSession, t: Store, docs: DataFrame,
       minWords: Int, maxStoredDf: Long = Long.MaxValue): DataFrame = {
     val capped = maxStoredDf != Long.MaxValue
-    val newDocs = docs.select(col("doc_id"), col("text"))
-      .join(s.table(t.docTable), Seq("doc_id"), "left_anti")
+    val newDocs = t.keyed.fresh(s, docs.select(col("doc_id"), col("text")))
       .persist()
     try {
       if (newDocs.limit(1).count() == 0) {
@@ -154,15 +154,7 @@ object CleanStream {
         val cleaned = graft.operators.Scratch.flush(
           s, s"cleanstream-${t.posTable}",
           Dedup.spliceTokens(newDocs, Dedup.removalPositions(m, minWords)))
-        spNew.write.bucketBy(Buckets, "h").sortBy("h")
-          .mode("append").saveAsTable(t.posTable)
-        newDocs.select(col("doc_id"))
-          .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-          .mode("append").saveAsTable(t.docTable)
-        // appends ran on the frame's bound session; refresh the
-        // coordinating session's relation caches (the ChunkStream rule)
-        s.catalog.refreshTable(t.posTable)
-        s.catalog.refreshTable(t.docTable)
+        t.keyed.commit(s, Seq(spNew, newDocs.select(col("doc_id"))))
         if (capped) {
           // detect hashes whose STORED occurrence count just crossed the
           // bound: count only over this batch's hashes (the store is
@@ -170,12 +162,11 @@ object CleanStream {
           // holds ≤ maxStoredDf + batch rows, so this is bounded even
           // for the hash that is about to go hot). Crash tolerance: the
           // tombstone append is last — losing it just re-detects at the
-          // hash's next appearance; duplicates are impossible (anti-join
-          // below) short of a tombstone-append crash, which the probe's
-          // anti-join semantics absorb anyway.
+          // hash's next appearance; the tombstone store's own replay
+          // guard keeps a hash from being listed twice.
           //
           // The probe hashes derive from the RAW batch frame, not from
-          // spNew: the refreshTable calls above invalidate every cached
+          // spNew: the commit's refreshes invalidate every cached
           // dataset that READS the store tables (spNew does, through
           // newDocs' manifest anti-join), so spNew re-evaluated here
           // would see its own docs manifested and collapse to empty.
@@ -184,14 +175,10 @@ object CleanStream {
           val batchHashes = Dedup
             .spanPosRows(docs.select(col("doc_id"), col("text")))
             .select(col("h")).distinct()
-          val hot = s.table(t.posTable)
+          t.tomb.append(s, s.table(t.posTable)
             .join(batchHashes, Seq("h"), "left_semi")
             .groupBy(col("h")).agg(count(lit(1)).as("df"))
-            .filter(col("df") > maxStoredDf).select(col("h"))
-            .join(s.table(t.tombTable), Seq("h"), "left_anti")
-          hot.write.bucketBy(Buckets, "h").sortBy("h")
-            .mode("append").saveAsTable(t.tombTable)
-          s.catalog.refreshTable(t.tombTable)
+            .filter(col("df") > maxStoredDf).select(col("h")))(Seq(_))
         }
         cleaned
       }
@@ -200,15 +187,18 @@ object CleanStream {
 
   /** Heal crash-window duplicate rows, collapse per-trigger append
     * files (DISTINCT rewrite, one file set per bucket), and purge
-    * spans of tombstoned hashes (they can never be probed again).
+    * spans of tombstoned hashes (they can never be probed again). The
+    * tombstones compact first: their rewrite heals a crashed swap of
+    * the list before it is read.
     */
   def compact(s: SparkSession, t: Store): Unit = {
-    if (s.table(t.tombTable).limit(1).count() > 0)
+    t.tomb.compact(s)
+    if (s.table(t.tombTable).isEmpty) t.keyed.compact(s)
+    else {
       Bucketed.compactDistinctExcluding(s, t.posTable, Buckets, "h",
         t.tombTable)
-    else Bucketed.compactDistinct(s, t.posTable, Buckets, "h")
-    Bucketed.compactDistinct(s, t.docTable, Buckets, "doc_id")
-    Bucketed.compactDistinct(s, t.tombTable, Buckets, "h")
+      Bucketed.compactDistinct(s, t.docTable, Buckets, "doc_id")
+    }
   }
 
   /** The incremental front door: per micro-batch, clean + ingest;
@@ -221,7 +211,7 @@ object CleanStream {
       compactEvery: Int = 0,
       maxStoredDf: Long = Long.MaxValue): StreamingQuery =
     Sinks.ingest(spark, docs, checkpointDir,
-        Seq(store.posTable, store.docTable, store.tombTable), compactEvery,
+        store.keyed.names ++ store.tomb.names, compactEvery,
         () => compact(spark, store)) { (batch, _) =>
       val cleaned = cleanAndIngest(spark, store, batch, minWords, maxStoredDf)
       if (!cleaned.isEmpty) onBatch(cleaned)

@@ -74,7 +74,7 @@ object CurationStream {
     * @param onFlagged receives each batch's near-dup verdicts
     *                  (doc_id, dup_of, jaccard)
     * @param compactEvery see [[Sinks.ingest]]; the compaction is
-    *                  [[SignatureStore.compact]]
+    *                  [[KeyedStore.compact]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame,
       store: SignatureStore.Store, checkpointDir: String,
@@ -82,8 +82,8 @@ object CurationStream {
       onFlagged: DataFrame => Unit = _ => (),
       compactEvery: Int = 0): StreamingQuery =
     Sinks.ingest(spark, curate(docs, keepText = true), checkpointDir,
-        Seq(store.sig, store.bands), compactEvery,
-        () => SignatureStore.compact(spark, store), Some(identity)) { (b, _) =>
+        store.keyed.names, compactEvery,
+        () => store.keyed.compact(spark), Some(identity)) { (b, _) =>
       val verdicts = SignatureStore
         .probe(spark, store, b.select(col("doc_id"), col("text"))).persist()
       try {
@@ -91,12 +91,14 @@ object CurationStream {
         val fresh = b.join(verdicts.select(col("doc_id")).distinct(),
           Seq("doc_id"), "left_anti").persist()
         try {
-          // probe-then-append order guarantees a batch's survivors are
-          // visible to the NEXT batch but never to their own probe (no
-          // self-pairs)
+          // collected before the append mutates the store
+          // (Sinks.collected); probe-then-append order guarantees a
+          // batch's survivors are visible to the NEXT batch but never to
+          // their own probe (no self-pairs)
+          val kept = Sinks.collected(spark, fresh.drop("text"))
           SignatureStore.append(spark, store,
             fresh.select(col("doc_id"), col("text")))
-          onBatch(fresh.drop("text"))
+          onBatch(kept)
         } finally fresh.unpersist()
       } finally verdicts.unpersist()
     }

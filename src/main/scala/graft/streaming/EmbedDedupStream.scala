@@ -35,7 +35,7 @@ object EmbedDedupStream {
     * @param withhold false = index-build mode (probe skipped entirely,
     *   the WinnowStream dropShared = MaxValue rule — [[Sinks.withhold]])
     * @param compactEvery see [[Sinks.ingest]]; the compaction is
-    *   [[EmbedStore.compact]]
+    *   [[KeyedStore.compact]]
     */
   def startIncremental(spark: SparkSession, vecs: DataFrame,
       cents: Seq[Seq[Long]], store: EmbedStore.Store, checkpointDir: String,
@@ -43,8 +43,8 @@ object EmbedDedupStream {
       onFlagged: DataFrame => Unit = _ => (),
       withhold: Boolean = true,
       compactEvery: Int = 0): StreamingQuery =
-    Sinks.ingest(spark, vecs, checkpointDir, Seq(store.a2, store.vecs),
-        compactEvery, () => EmbedStore.compact(spark, store),
+    Sinks.ingest(spark, vecs, checkpointDir, store.keyed.names,
+        compactEvery, () => store.keyed.compact(spark),
         Some(_.select(col("vec_id"),
           Exact.quantize(col("embedding")).as("qe")))) { (b, _) =>
       Sinks.withhold(spark, b, "vec_id",

@@ -26,14 +26,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * membership — so the edge table serves only as the seen-pair ledger
   * that makes replay a no-op.
   *
-  * Failure/replay contract: at-least-once foreachBatch. Labels append
-  * BEFORE the edge ledger commits; every crash point is self-healing —
-  * a replay whose edges are unledgered recomputes from the
-  * already-merged stars and appends byte-equal labels at a higher gen
-  * (harmless under merge-on-read), then ledgers the edges; a crash that
-  * loses only the ledger entry leaves labels correct, and any future
-  * re-delivery of the pair is a no-op relabel. The reverse order would
-  * strand stale labels forever.
+  * Failure/replay contract: the store is a [[KeyedStore]] keyed on
+  * `(u, v)`, the edge ledger its manifest and the labels its child.
+  * Every crash point is self-healing — a replay whose edges are
+  * unledgered recomputes from the already-merged stars and appends
+  * byte-equal labels at a higher gen (harmless under merge-on-read),
+  * then ledgers the edges. The reverse order would strand stale labels
+  * forever.
   *
   * Scale shape: per trigger, everything is bounded by the batch and the
   * touched components — the new-edge anti-join probes the u-bucketed
@@ -49,19 +48,23 @@ object GraphStream {
 
   val Buckets = 16
 
-  final case class Store(edgeTable: String, labelTable: String)
+  final case class Store(edgeTable: String, labelTable: String) {
+    /** `labelTable` the child, `edgeTable` the manifest, keyed on
+      * `(u, v)`.
+      */
+    def keyed: KeyedStore = KeyedStore(Seq("u", "v"), Seq(
+      KeyedStore.Table(labelTable, Buckets, "doc_id"),
+      KeyedStore.Table(edgeTable, Buckets, "u")))
+  }
 
   /** Create (or overwrite) an empty graph store. */
   def build(s: SparkSession, tag: String): Store = {
     import s.implicits._
     val t = Store(s"graft_graph_$tag", s"graft_graph_labels_$tag")
     genCounters.remove(t.labelTable)
-    Bucketed.dropStale(s, t.edgeTable)
-    Bucketed.dropStale(s, t.labelTable)
-    Bucketed.write(Seq.empty[(Long, Long)].toDF("u", "v"),
-      t.edgeTable, Buckets, "u")
-    Bucketed.write(Seq.empty[(Long, Long, Long)]
-      .toDF("doc_id", "cluster_id", "gen"), t.labelTable, Buckets, "doc_id")
+    t.keyed.build(s, Seq(
+      Seq.empty[(Long, Long, Long)].toDF("doc_id", "cluster_id", "gen"),
+      Seq.empty[(Long, Long)].toDF("u", "v")))
     t
   }
 
@@ -118,9 +121,7 @@ object GraphStream {
       .select(least(col("d1"), col("d2")).as("u"),
         greatest(col("d1"), col("d2")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    val newEdges = canon
-      .join(s.table(t.edgeTable), Seq("u", "v"), "left_anti").persist()
-    try if (newEdges.limit(1).count() > 0) {
+    t.keyed.append(s, canon) { newEdges =>
       val gen = nextGen(s, t)
       val lbl = labels(s, t)
       val endpoints = newEdges.select(col("u").as("doc_id"))
@@ -132,35 +133,28 @@ object GraphStream {
       // literal (partition-filterable, label side untouched) up to the
       // threshold; past it they stay distributed as a broadcast
       // semi-join (label side still exchange-free).
-      val touchedSample = touchedDf.limit(literalThreshold + 1).collect()
-      val stars =
-        if (touchedSample.isEmpty) newEdges.limit(0).toDF("u", "v")
-        else if (touchedSample.length <= literalThreshold) {
-          val touched = touchedSample.map(_.getLong(0)).toSeq
-          lbl.filter(col("cluster_id").isInCollection(touched))
-            .filter(col("doc_id") =!= col("cluster_id"))
-            .select(col("doc_id").as("u"), col("cluster_id").as("v"))
-        } else
-          lbl.join(broadcast(touchedDf), Seq("cluster_id"), "left_semi")
-            .filter(col("doc_id") =!= col("cluster_id"))
-            .select(col("doc_id").as("u"), col("cluster_id").as("v"))
-      val half = stars.union(newEdges)
-      val sym = half.union(half.select(col("v"), col("u"))).toDF("u", "v")
       try {
+        val touchedSample = touchedDf.limit(literalThreshold + 1).collect()
+        val stars =
+          if (touchedSample.isEmpty) newEdges.limit(0).toDF("u", "v")
+          else if (touchedSample.length <= literalThreshold) {
+            val touched = touchedSample.map(_.getLong(0)).toSeq
+            lbl.filter(col("cluster_id").isInCollection(touched))
+              .filter(col("doc_id") =!= col("cluster_id"))
+              .select(col("doc_id").as("u"), col("cluster_id").as("v"))
+          } else
+            lbl.join(broadcast(touchedDf), Seq("cluster_id"), "left_semi")
+              .filter(col("doc_id") =!= col("cluster_id"))
+              .select(col("doc_id").as("u"), col("cluster_id").as("v"))
+        val half = stars.union(newEdges)
+        val sym = half.union(half.select(col("v"), col("u"))).toDF("u", "v")
+        // the CC labels are a scratch read, free of touchedDf
         val (merged, _) = Dedup.connectedComponents(
           s, sym, scratchTag = s"graphstream-${t.edgeTable}")
-        merged.toDF("doc_id", "cluster_id").withColumn("gen", lit(gen))
-          .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-          .mode("append").saveAsTable(t.labelTable)
-      } finally touchedDf.unpersist()
-      newEdges
-        .write.bucketBy(Buckets, "u").sortBy("u")
-        .mode("append").saveAsTable(t.edgeTable)
-      // appends ran on the frames' bound session; refresh the
-      // coordinating session's relation caches (the ChunkStream rule)
-      s.catalog.refreshTable(t.labelTable)
-      s.catalog.refreshTable(t.edgeTable)
-    } finally newEdges.unpersist()
+        Seq(merged.toDF("doc_id", "cluster_id").withColumn("gen", lit(gen)),
+          newEdges)
+      } finally touchedDf.unpersist(): Unit
+    }
   }
 
   /** Collapse the label log to one row per doc (latest gen, renumbered
@@ -183,8 +177,7 @@ object GraphStream {
     */
   def startIncremental(spark: SparkSession, pairs: DataFrame, store: Store,
       checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    Sinks.ingest(spark, pairs, checkpointDir,
-        Seq(store.edgeTable, store.labelTable), compactEvery,
+    Sinks.ingest(spark, pairs, checkpointDir, store.keyed.names, compactEvery,
         () => compact(spark, store)) { (batch, _) =>
       ingest(spark, store, batch)
     }

@@ -87,10 +87,10 @@ object Sinks {
           compact()
         prepare match {
           case None =>
-            if (batch.limit(1).count() > 0) body(batch, batchId)
+            if (!batch.isEmpty) body(batch, batchId)
           case Some(project) =>
             val b = project(batch).persist()
-            try if (b.limit(1).count() > 0) body(b, batchId)
+            try if (!b.isEmpty) body(b, batchId)
             finally b.unpersist()
         }
       }

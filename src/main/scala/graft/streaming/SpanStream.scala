@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -32,21 +31,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * costs one self-agg + join on the table's own bucket key — no
   * exchange on the store side.
   *
-  * Failure/replay contract: foreachBatch is at-least-once. Spans append
-  * BEFORE the manifest row commits, so a crash between the two appends
-  * re-delivers a batch whose spans are stored but unmanifested — the
-  * replay then double-appends those docs' spans. [[compact]] heals this
-  * (its rewrite is DISTINCT); until it runs, affected span rows are
-  * duplicated (df inflated for their hashes). The opposite order would
-  * silently LOSE spans of manifested docs, which no compaction can
-  * recover — duplication is the recoverable failure, so it is the one
-  * this store accepts.
+  * Replay and the spans-before-manifest crash window are the
+  * [[KeyedStore]] contract; until [[KeyedStore.compact]] heals a
+  * duplicated batch, df is inflated for its hashes.
   */
 object SpanStream {
 
   val Buckets = 16
 
-  final case class Store(spanTable: String, docTable: String)
+  final case class Store(spanTable: String, docTable: String) {
+    /** `spanTable` the child, `docTable` the manifest, keyed on `doc_id`. */
+    def keyed: KeyedStore = KeyedStore(Seq("doc_id"), Seq(
+      KeyedStore.Table(spanTable, Buckets, "h"),
+      KeyedStore.Table(docTable, Buckets, "doc_id")))
+  }
 
   /** Per-doc distinct span hashes — the ONE shared definition with the
     * batch store ([[Dedup.spanHashes]]).
@@ -57,39 +55,18 @@ object SpanStream {
   def build(s: SparkSession, tag: String): Store = {
     import s.implicits._
     val t = Store(s"graft_span_$tag", s"graft_span_docs_$tag")
-    Bucketed.dropStale(s, t.spanTable)
-    Bucketed.dropStale(s, t.docTable)
-    Bucketed.write(Seq.empty[(Long, Long)].toDF("doc_id", "h"),
-      t.spanTable, Buckets, "h")
-    Bucketed.write(Seq.empty[Long].toDF("doc_id"),
-      t.docTable, Buckets, "doc_id")
+    t.keyed.build(s, Seq(Seq.empty[(Long, Long)].toDF("doc_id", "h"),
+      Seq.empty[Long].toDF("doc_id")))
     t
   }
 
-  /** Idempotent ingest of one document batch: docs already in the
-    * manifest are dropped (anti-join — exchange-free on the bucketed
-    * manifest side), the remainder's spans and doc_ids append. Safe to
-    * call again with the same batch.
+  /** Ingest a (doc_id, text) batch through [[KeyedStore.append]]: docs
+    * already in the manifest append nothing, so it is safe to call again
+    * with the same batch.
     */
-  def append(s: SparkSession, t: Store, docs: DataFrame): Unit = {
-    val newDocs = docs.select(col("doc_id"), col("text"))
-      .join(s.table(t.docTable), Seq("doc_id"), "left_anti")
-      .persist()
-    try if (newDocs.limit(1).count() > 0) {
-      spansOf(newDocs)
-        .write.bucketBy(Buckets, "h").sortBy("h")
-        .mode("append").saveAsTable(t.spanTable)
-      newDocs.select(col("doc_id"))
-        .write.bucketBy(Buckets, "doc_id").sortBy("doc_id")
-        .mode("append").saveAsTable(t.docTable)
-      // appends execute through the frame's bound session (the
-      // micro-batch clone under foreachBatch); refresh the coordinating
-      // session so its next probe sees this batch (the ChunkStream /
-      // ProductQuant.appendFresh rule)
-      s.catalog.refreshTable(t.spanTable)
-      s.catalog.refreshTable(t.docTable)
-    } finally newDocs.unpersist()
-  }
+  def append(s: SparkSession, t: Store, docs: DataFrame): Unit =
+    t.keyed.append(s, docs.select(col("doc_id"), col("text")))(d =>
+      Seq(spansOf(d), d.select(col("doc_id"))))
 
   /** The store in the batch [[graft.operators.SpanStore]] layout
     * (doc_id, h, df) — df re-derived from the current span set, so the
@@ -101,22 +78,14 @@ object SpanStream {
     sp.join(sp.groupBy(col("h")).agg(count(lit(1)).as("df")), Seq("h"))
   }
 
-  /** Collapse per-trigger append files to one file set per bucket and
-    * heal any crash-window duplicate span rows (DISTINCT rewrite).
-    */
-  def compact(s: SparkSession, t: Store): Unit = {
-    Bucketed.compactDistinct(s, t.spanTable, Buckets, "h")
-    Bucketed.compactDistinct(s, t.docTable, Buckets, "doc_id")
-  }
-
   /** The incremental front door: per micro-batch, idempotent ingest,
-    * through [[Sinks.ingest]] with [[compact]] as its compaction.
+    * through [[Sinks.ingest]] with [[KeyedStore.compact]] as its
+    * compaction.
     */
   def startIncremental(spark: SparkSession, docs: DataFrame, store: Store,
       checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    Sinks.ingest(spark, docs, checkpointDir,
-        Seq(store.spanTable, store.docTable), compactEvery,
-        () => compact(spark, store)) { (batch, _) =>
+    Sinks.ingest(spark, docs, checkpointDir, store.keyed.names, compactEvery,
+        () => store.keyed.compact(spark)) { (batch, _) =>
       append(spark, store, batch)
     }
 }

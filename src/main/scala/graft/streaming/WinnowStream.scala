@@ -33,7 +33,7 @@ object WinnowStream {
     *   many fingerprints with it (default: the q213 pair rule);
     *   `Long.MaxValue` = never withhold
     * @param compactEvery see [[Sinks.ingest]]; the compaction is
-    *   [[WinnowStore.compact]]
+    *   [[KeyedStore.compact]]
     */
   def startIncremental(spark: SparkSession, docs: DataFrame,
       store: WinnowStore.Store, checkpointDir: String,
@@ -41,8 +41,8 @@ object WinnowStream {
       onFlagged: DataFrame => Unit = _ => (),
       dropShared: Long = Dedup.WinnowMinShared,
       compactEvery: Int = 0): StreamingQuery =
-    Sinks.ingest(spark, docs, checkpointDir, Seq(store.fp, store.docs),
-        compactEvery, () => WinnowStore.compact(spark, store),
+    Sinks.ingest(spark, docs, checkpointDir, store.keyed.names,
+        compactEvery, () => store.keyed.compact(spark),
         Some(identity)) { (b, _) =>
       Sinks.withhold(spark, b, "doc_id",
         if (dropShared == Long.MaxValue) None

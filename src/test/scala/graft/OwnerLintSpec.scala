@@ -27,6 +27,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `Tables.scala`, the miss of the (path, mtime) schema memo, and in
   *    Bench's warm-up: every other read of a parquet path the engine
   *    wrote or already read carries its known schema;
+  *  - the keyed append store lives only in `streaming/KeyedStore.scala`:
+  *    a bucketed append (`bucketBy … sortBy … .mode("append")
+  *    .saveAsTable`) appears elsewhere only in `FoldStore` and the
+  *    `EmbeddingIndex`, and a bucketed purge outside `Bucketed` only in
+  *    `KeyedStore` and Forget's embedding-index and graph purges;
   *  - the checkpoint file manager is chosen only in
   *    `streaming/Checkpoints.scala`: every file that starts a query with
   *    `.writeStream`, and `WorkloadManager` (whose builders may), calls
@@ -36,12 +41,17 @@ class OwnerLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
 
-  private def holders(fragment: String): Set[String] =
+  private def source(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+
+  private def holdersWhere(holds: String => Boolean): Set[String] =
     Files.walk(root).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(fragment))
+      .filter(p => holds(source(p)))
       .map((p: Path) => root.relativize(p).toString)
       .toSet
+
+  private def holders(fragment: String): Set[String] =
+    holdersWhere(_.contains(fragment))
 
   test("the rename swap and the replay guard each have one owner in src/main") {
     assert(holders("RENAME TO") == Set("sources/Bucketed.scala"))
@@ -73,5 +83,22 @@ class OwnerLintSpec extends AnyFunSuite {
     val starters = holders(".writeStream") + "streaming/WorkloadManager.scala"
     assert(starters.diff(holders("Checkpoints.install")).isEmpty)
     assert(holders("checkpointFileManagerClass") == Set("streaming/Checkpoints.scala"))
+  }
+
+  test("bucketed appends go through KeyedStore, FoldStore or the EmbeddingIndex") {
+    val bucketedAppend =
+      """bucketBy\([^)]*\)\s*\.sortBy\([^)]*\)\s*\.mode\("append"\)\s*\.saveAsTable""".r
+    assert(holdersWhere(bucketedAppend.findFirstIn(_).isDefined) == Set(
+      "streaming/KeyedStore.scala", "streaming/FoldStore.scala",
+      "sources/EmbeddingIndex.scala"))
+  }
+
+  test("bucketed purges go through KeyedStore, or Forget's embedding-index and graph purges") {
+    assert(holders("purgeBucketed(") == Set("sources/Bucketed.scala",
+      "streaming/KeyedStore.scala", "sources/Forget.scala"))
+    val forgetPurges = source(root.resolve("sources/Forget.scala"))
+      .split("\n  def ").tail.filter(_.contains("purgeBucketed("))
+      .map(_.takeWhile(_ != '(')).toSet
+    assert(forgetPurges == Set("embeddingIndex", "graph"))
   }
 }

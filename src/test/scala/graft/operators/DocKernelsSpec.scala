@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{SparkTestSession, Tables}
-import graft.functions.{PerceptronFeatures, PolyBucketCounts, PolyHash, WinnowFps, WinnowFpSpans, WordShingles}
+import graft.functions.{MinHash, PerceptronFeatures, PolyBucketCounts, PolyHash, WinnowFps, WinnowFpSpans, WordShingleHashes, WordShingles}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -276,16 +276,41 @@ class DocKernelsSpec extends AnyFunSuite with SparkTestSession {
 
   // ---- map-side MinHash signature frame (r19) ----
 
+  /** Exploded (doc_id, h) rows: h = distinct PolyHash per word-3-gram.
+    * [[WordShingleHashes]] tokenizes + shingles + hashes + dedups in one
+    * codegen'd pass per row (the composed split/slice/zip_with/transform
+    * form evaluated its lambdas interpreted).
+    */
+  private def shingleHashRows(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(WordShingleHashes(col("text"), 3)).as("h"))
+
+  /** One hash-aggregate producing the MinHash signature columns mh0..mh15
+    * (plus optionally the full shingle-hash set for Jaccard verification).
+    *
+    * r19: the LEGACY aggregate formulation — production paths use the
+    * map-side [[Dedup.minhashSigs]]; kept here as its reference
+    * definition.
+    */
+  private def minhashAgg(rows: DataFrame, withSet: Boolean): DataFrame = {
+    val mins = (0 until Dedup.NumHashes).map { j =>
+      min((lit(MinHash.permA(j)) * col("h") + lit(MinHash.permB(j))) % Dedup.P)
+        .as(s"mh$j")
+    }
+    val aggs = if (withSet) mins :+ collect_set(col("h")).as("H") else mins
+    rows.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
   test("minhashSigs ≡ legacy explode + 16-min + collect_set aggregate") {
     corpora.foreach { docs =>
-      val legacy = Dedup.minhashAgg(Dedup.shingleHashRows(docs),
+      val legacy = minhashAgg(shingleHashRows(docs),
         withSet = true).withColumn("H", sort_array(col("H")))
       val mapSide = Dedup.minhashSigs(docs, withSet = true)
         .withColumn("H", sort_array(col("H")))
       assertSameRows(mapSide, legacy, "minhash signature frame (withSet)")
       assertSameRows(
         Dedup.minhashSigs(docs, withSet = false),
-        Dedup.minhashAgg(Dedup.shingleHashRows(docs), withSet = false),
+        minhashAgg(shingleHashRows(docs), withSet = false),
         "minhash signature frame")
     }
   }

@@ -10,16 +10,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * branch consumes dv above its exchange (keeping all three oriented
   * subtrees canonically equal for exchange reuse). This spec holds the
   * legacy 2-key formulation verbatim and asserts the shipped q107
-  * output is row-identical on the real sf0.001 graph — if someone
+  * output is row-identical on the real sf0.001 graph and on the
+  * oracle-gated sf0.01 one — if someone
   * breaks the functional dependency (e.g. renames dv to something not
   * derived from deg(v)), the 3-key join silently drops triangles and
   * this fails before the oracle does.
   */
 class TriangleJoinSpec extends AnyFunSuite with graft.SparkTestSession {
 
-  private val dir = "/root/testdata/sf0.001"
-
   test("3-key (b, c, dc) join-back ≡ legacy 2-key (b, c) join-back") {
+    check("/root/testdata/sf0.001")
+  }
+
+  test("3-key ≡ legacy 2-key join-back at the oracle-gated sf0.01") {
+    check("/root/testdata/sf0.01")
+  }
+
+  private def check(dir: String): Unit = {
     val edges = DupGraph.edges(spark, dir)
     val deg = edges.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     // the pre-r19 formulation, verbatim (flushless is fine for the

@@ -78,7 +78,7 @@ class EmbeddingIndexSpec extends AnyFunSuite with SparkTestSession {
       .select("vec_id", "embedding")
     val table = EmbeddingIndex.build(spark, corpus.filter($"vec_id" < 400),
       s"compact${System.nanoTime()}")
-    EmbeddingIndex.append(spark, table,
+    EmbeddingIndex.appendFresh(spark, table,
       corpus.filter($"vec_id" >= 400 && $"vec_id" < 450))
     val before = EmbeddingIndex.pairs(spark, table)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq

@@ -116,7 +116,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestSession {
     val sigRows = spark.table(store.sig).count()
     val filesBefore = files(store.sig)
 
-    SignatureStore.compact(spark, store)
+    store.keyed.compact(spark)
 
     assert(files(store.sig) < filesBefore,
       s"compaction must reduce ${filesBefore} sig files")
@@ -153,7 +153,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestSession {
 
     // the at-least-once replay path re-runs compact, which must self-heal
     // instead of failing with NoSuchTable
-    SignatureStore.compact(spark, store)
+    store.keyed.compact(spark)
     assert(spark.catalog.tableExists(store.sig))
     assert(!spark.catalog.tableExists(tmp), "twin adopted, not left behind")
     assert(spark.table(store.sig).count() == sigRows)
@@ -178,7 +178,7 @@ class SignatureStoreSpec extends AnyFunSuite with SparkTestSession {
     val before = spark.conf.getOption(confKey)
     val store = SignatureStore.build(spark, corpusDf(10),
       s"confiso${System.nanoTime()}")
-    SignatureStore.compact(spark, store)
+    store.keyed.compact(spark)
     assert(spark.conf.getOption(confKey) == before,
       "compact must not toggle session-global conf on the shared session")
   }

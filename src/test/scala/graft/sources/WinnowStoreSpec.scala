@@ -176,7 +176,7 @@ class WinnowStoreSpec extends AnyFunSuite with SparkTestSession {
     }
     val before = q213Rows(WinnowStore.pairs(spark, store))
     val filesBefore = files
-    WinnowStore.compact(spark, store)
+    store.keyed.compact(spark)
     assert(files < filesBefore)
     assert(q213Rows(WinnowStore.pairs(spark, store)) == before)
 

@@ -62,7 +62,7 @@ class ChunkStreamSpec extends AnyFunSuite with SparkTestSession {
     // chunks changes nothing
     val replay = ChunkStream.chunksOf(
       Seq(docs.head).toDF("doc_id", "text"))
-    ChunkStream.append(spark, store, replay)
+    store.keyed.append(spark, replay)(ChunkStream.rows)
     val st2 = ChunkStream.stats(spark, store).collect().head
     assert(st2.getLong(0) == bChunksDistinct && st2.getLong(1) == bTokensDistinct)
   }

@@ -88,7 +88,7 @@ class SpanStreamSpec extends AnyFunSuite with SparkTestSession {
     val spans = spark.table(store.spanTable)
     assert(spans.count() == 2 * spans.distinct().count(),
       "setup should hold every span row twice")
-    SpanStream.compact(spark, store)
+    store.keyed.compact(spark)
     val healed = spark.table(store.spanTable)
     assert(healed.count() == healed.distinct().count(),
       "compactDistinct must drop the duplicated span rows")

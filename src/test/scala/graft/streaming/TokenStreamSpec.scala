@@ -62,9 +62,10 @@ class TokenStreamSpec extends AnyFunSuite with SparkTestSession {
     // replay idempotency: re-appending an already-streamed document's
     // tokens changes nothing
     val storedBefore = spark.table(store.table).count()
-    TokenStream.append(spark, store,
+    store.keyed.append(spark,
       graft.operators.Corpus.tokenize(
-        Seq(docs.head).toDF("source", "doc_id", "text"), merges))
+        Seq(docs.head).toDF("source", "doc_id", "text"), merges))(
+      TokenStream.rows)
     assert(spark.table(store.table).count() == storedBefore)
   }
 }
