@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Checkpoints, Gauges, OrderedProcessor}
+import graft.streaming.{Gauges, OrderedProcessor}
 import graft.streaming.broker.{BrokerTopic, InMemoryBroker}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -40,7 +40,7 @@ object Demo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.quietWindowWarnings()
-    Checkpoints.install(spark)
+    LocalFiles.install(spark)
     import spark.implicits._
 
     val gauges = new Gauges

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Checkpoints, OrderedProcessor, Payloads, RepublishPipeline}
+import graft.streaming.{OrderedProcessor, Payloads, RepublishPipeline}
 import graft.streaming.broker.{BrokerTopic, InMemoryBroker}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{coalesce, col, expr, lit, sum}
@@ -94,7 +94,7 @@ object StreamBench {
   def run(spark: SparkSession): (Map[String, Double], Map[String, String]) = {
     val metrics = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    Checkpoints.install(spark)
+    LocalFiles.install(spark)
 
     // focused-probe filter (the SPARK_GRAFT_BENCH_ONLY convention for
     // streaming legs): comma-separated leg names; unset = all legs

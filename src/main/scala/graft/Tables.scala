@@ -46,6 +46,8 @@ object Tables {
     // the UTC session every entry point sets), so downstream code can
     // rely on a single `ts: TIMESTAMP` contract.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the first engine call of every batch workload
+    LocalFiles.install(spark)
     val p = path(sfDir, table)
     val df = spark.read.schema(fileSchema(spark, p)).parquet(p)
     df.schema.fields.foldLeft(df) { (d, f) =>

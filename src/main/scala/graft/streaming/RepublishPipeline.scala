@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.LocalFiles
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -10,7 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Semantics mapping:
   *  - **ack** (reference T2 `acknowledgeAsync`, `:57-69`) ≡ micro-batch
-  *    checkpoint commit (through [[Checkpoints]]): a batch whose
+  *    checkpoint commit (on [[LocalFiles]]' filesystem): a batch whose
   *    `foreachBatch` body returns is
   *    acked exactly once by the checkpoint — the ack-with-one-retry dance
   *    disappears because commit is transactional per batch;
@@ -64,7 +65,7 @@ object RepublishPipeline {
   def start(topic: Topic, deadLetter: Topic, checkpointDir: String,
       queryName: String, cfg: Config = Config()): StreamingQuery = {
     val input = topic.readStream(cfg.admitPerTrigger)
-    Checkpoints.install(input.sparkSession)
+    LocalFiles.install(input.sparkSession)
     input.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.LocalFiles
 import graft.sources.Bucketed
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,7 +36,7 @@ object Sinks {
   /** K1/K2: drain the stream (checkpoint-acked, rows discarded). */
   def drain(df: DataFrame, queryName: String, checkpointDir: String)
       : StreamingQuery = {
-    Checkpoints.install(df.sparkSession)
+    LocalFiles.install(df.sparkSession)
     df.writeStream.format("noop").queryName(queryName)
       .option("checkpointLocation", checkpointDir).start()
   }
@@ -60,8 +61,8 @@ object Sinks {
     *    compaction heals a crashed swap only on a compaction batch, but
     *    batch 0 reads the store at once;
     *  - the checkpoint (ack = checkpoint commit, at-least-once
-    *    redelivery, so every body is replay-idempotent), written through
-    *    [[Checkpoints]];
+    *    redelivery, so every body is replay-idempotent), written on
+    *    [[LocalFiles]]' filesystem;
     *  - `compactEvery`: run `compact` before batches N, 2N, … (never
     *    batch 0; also when that batch is empty; 0 = never). Per-trigger
     *    appends add one file set per bucket or partition per batch, and
@@ -79,7 +80,7 @@ object Sinks {
       prepare: Option[DataFrame => DataFrame] = None)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
     tables.foreach(Bucketed.recover(spark, _))
-    Checkpoints.install(input.sparkSession)
+    LocalFiles.install(input.sparkSession)
     input.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.LocalFiles
 import graft.functions.Exact
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -68,7 +69,7 @@ object WindowedAgg {
   def topKPerWindow(events: DataFrame, k: Int = 3,
       watermarkDelay: String = "10 minutes", windowLength: String = "1 hour")(
       onWindow: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    Checkpoints.install(events.sparkSession)
+    LocalFiles.install(events.sparkSession)
     tumbling(events, watermarkDelay, windowLength)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>

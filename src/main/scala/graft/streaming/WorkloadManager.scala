@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 import scala.collection.concurrent.TrieMap
+import graft.LocalFiles
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -118,7 +119,7 @@ final class WorkloadManager(spark: SparkSession,
   def reconcile(requested: Set[Workload]): WorkloadReport = synchronized {
     val rep = report(requested)
     // a builder may start its query with a bare writeStream
-    Checkpoints.install(spark)
+    LocalFiles.install(spark)
     rep.workloadsToStart.foreach { w =>
       if (!running.contains(w.workloadName)) {
         // route through Pools.withPool so the thread-local pool is restored

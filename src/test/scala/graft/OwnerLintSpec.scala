@@ -32,10 +32,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    .saveAsTable`) appears elsewhere only in `FoldStore` and the
   *    `EmbeddingIndex`, and a bucketed purge outside `Bucketed` only in
   *    `KeyedStore` and Forget's embedding-index and graph purges;
-  *  - the checkpoint file manager is chosen only in
-  *    `streaming/Checkpoints.scala`: every file that starts a query with
-  *    `.writeStream`, and `WorkloadManager` (whose builders may), calls
-  *    `Checkpoints.install` first.
+  *  - the `file:` filesystem is chosen only in `LocalFiles.scala`, and no
+  *    engine code names a checkpoint file manager: every file that starts
+  *    a query with `.writeStream`, `WorkloadManager` (whose builders may)
+  *    and `Tables.scala` (the first call of every batch workload) call
+  *    `LocalFiles.install`.
   */
 class OwnerLintSpec extends AnyFunSuite {
 
@@ -79,10 +80,12 @@ class OwnerLintSpec extends AnyFunSuite {
     assert(holders(".read.parquet(") == Set("Tables.scala", "Bench.scala"))
   }
 
-  test("every engine stream installs the fork-free checkpoint file manager") {
-    val starters = holders(".writeStream") + "streaming/WorkloadManager.scala"
-    assert(starters.diff(holders("Checkpoints.install")).isEmpty)
-    assert(holders("checkpointFileManagerClass") == Set("streaming/Checkpoints.scala"))
+  test("one owner picks the file: filesystem, and every entry point installs it") {
+    assert(holders("checkpointFileManagerClass").isEmpty)
+    assert(holders("fs.file.impl") == Set("LocalFiles.scala"))
+    assert(holders("fs.AbstractFileSystem.file.impl") == Set("LocalFiles.scala"))
+    val entries = holders(".writeStream") + "streaming/WorkloadManager.scala" + "Tables.scala"
+    assert(entries.diff(holders("LocalFiles.install(")).isEmpty)
   }
 
   test("bucketed appends go through KeyedStore, FoldStore or the EmbeddingIndex") {
