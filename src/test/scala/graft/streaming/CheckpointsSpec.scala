@@ -196,7 +196,12 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
     try intercept[ChecksumException](corrupt.readAllBytes()) finally corrupt.close()
   }
 
-  test("restart across filesystems: stock, then fork-free, then stock") {
+  /** BrokerSourceSpec's resume across three restarts that alternate the
+    * filesystem under Spark's default checkpoint manager, starting on the
+    * fork-free one (`firstForkFree`) or on Hadoop's stock one: each run
+    * picks up exactly the entries published while it was down.
+    */
+  private def resumes(firstForkFree: Boolean): Unit = {
     import spark.implicits._
     val topic = BrokerTopic.create(spark, s"ckpt-resume-${System.nanoTime()}",
       Payloads.payloadSchema)
@@ -212,14 +217,24 @@ class CheckpointsSpec extends AnyFunSuite with SparkTestSession {
         .start()
       try q.processAllAvailable() finally q.stop()
     }
-    // each run picks up exactly the entries published while it was down
     val published = Seq(Seq("a", "b", "c"), Seq("d", "e"), Seq("f"))
-    published.zip(Seq(false, true, false)).zipWithIndex.foreach { case ((names, forkFree), i) =>
+    val forkFree = Seq(firstForkFree, !firstForkFree, firstForkFree)
+    published.zip(forkFree).zipWithIndex.foreach { case ((names, ff), i) =>
       topic.publishSeed(names.map((_, 0)).toDF("name", "numPublishes"))
-      run(forkFree)
+      run(ff)
       assert(seen.asScala.toSeq.sorted == published.take(i + 1).flatten,
         s"run $i must resume from the committed offset without reprocessing")
     }
+  }
+
+  // "Spark's default" is the manager on Hadoop's stock local filesystem,
+  // "the engine's" the same manager on LocalFiles, as install sets it.
+  test("a checkpoint written by Spark's default manager resumes under the engine's") {
+    resumes(firstForkFree = false)
+  }
+
+  test("a checkpoint written by the engine's manager resumes under Spark's default") {
+    resumes(firstForkFree = true)
   }
 
   test("install keeps a file: filesystem the user set, and is idempotent") {
